@@ -18,13 +18,14 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.decode import s7_value
 from .sources import plc as plc_source
 from .sources.config import read_config
+from .streaming.http_api import InfluxAPI, serve
 from .streaming.pipeline import decode_readings, downsample as _downsample
 from .streaming.sinks import start_points_query
 from .streaming.state import current_value_batch
@@ -35,8 +36,9 @@ class IoTEngine:
         self.spark = spark
         plc_source.register(spark)
         self.config = read_config(spark, config_path) if config_path else None
-        # name → CQSpec, registered via CREATE CONTINUOUS QUERY
-        self.continuous_queries: dict = {}
+        # the InfluxQL statement dispatcher and CQ registry; this door
+        # always passes its table, so no measurement resolver is needed
+        self._influx = InfluxAPI(spark, get_table=None)
 
     # -- acquisition (the daemon) -------------------------------------
     def readings_stream(self, polls_per_batch: int = 1) -> DataFrame:
@@ -118,17 +120,7 @@ class IoTEngine:
     def decode_batch(self, raw: DataFrame, *, strict_reference: bool = False):
         """One-shot decode of raw readings (A7), e.g. from a batch read
         of the plc source: spark.read.format('plc_sim')."""
-        return raw.select(
-            "ts",
-            "plc_ip",
-            "alias",
-            s7_value(
-                F.col("data_type"),
-                F.col("buf"),
-                F.col("bit_off"),
-                strict_reference=strict_reference,
-            ).alias("value"),
-        ).filter(F.col("value").isNotNull())
+        return decode_readings(raw, strict_reference=strict_reference)
 
     def age_off(self, table_path: str, cutoff: _dt.date) -> int:
         from .operators.retention import drop_expired
@@ -136,6 +128,13 @@ class IoTEngine:
         return drop_expired(table_path, cutoff)
 
     # -- InfluxQL front door (what Grafana speaks) ---------------------
+    @property
+    def continuous_queries(self) -> dict:
+        """name → CQSpec registered via CREATE CONTINUOUS QUERY — the
+        one registry ``influxql``, ``run_cq`` and ``serve_influx_api``
+        share."""
+        return self._influx.continuous_queries
+
     def influxql(
         self,
         query: str,
@@ -143,87 +142,21 @@ class IoTEngine:
         rollup: DataFrame | None = None,
         rollup_every_s: int | None = None,
     ) -> DataFrame:
-        """Compile an InfluxQL statement (the reference users' query
-        language) against a measurement DataFrame; GROUP BY time()
-        statements that merge exactly from a CQ rollup are routed to
-        it automatically. SHOW meta statements (Grafana autocomplete)
-        and DELETE/DROP MEASUREMENT retention statements go through
-        the same door, as they do on a real InfluxDB endpoint."""
-        import re as _re
+        """Run an InfluxQL statement (the reference users' query
+        language) against a measurement DataFrame and return its result
+        — through the same statement dispatcher as the /query gateway
+        (``InfluxAPI.execute``). GROUP BY time() statements that merge
+        exactly from a CQ rollup are routed to it automatically. SHOW,
+        DELETE/DROP and admin statements go through the same door; here
+        DELETE/DROP return the surviving rows and write nothing."""
+        return self._influx.execute(
+            query.strip(), table, rollup=rollup, rollup_every_s=rollup_every_s
+        ).df
 
-        from .functions.influxql import (
-            compile_delete,
-            compile_show,
-            compile_statement,
-        )
-
-        head = _re.match(r"\s*(\w+)", query)
-        verb = head.group(1).upper() if head else ""
-        if verb == "EXPLAIN":
-            # InfluxQL 1.x EXPLAIN / EXPLAIN ANALYZE: one plan line per
-            # row, like the real endpoint's QUERY PLAN column — except
-            # the plan shown is the COMPILED SPARK PLAN, which is the
-            # honest answer for this engine. ANALYZE executes the
-            # statement to completion first (noop sink), so the
-            # formatted plan it returns reflects AQE's final shape.
-            m = _re.match(
-                r"\s*EXPLAIN(?P<an>\s+ANALYZE)?\s+(?P<inner>.+)$",
-                query,
-                _re.IGNORECASE | _re.DOTALL,
-            )
-            inner_df = self.influxql(
-                m.group("inner"), table,
-                rollup=rollup, rollup_every_s=rollup_every_s,
-            )
-            analyze = m.group("an") is not None
-            if analyze:
-                inner_df.write.format("noop").mode("overwrite").save()
-            import contextlib
-            import io
-
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                inner_df.explain("formatted" if analyze else "simple")
-            lines = [
-                (ln,) for ln in buf.getvalue().splitlines() if ln.strip()
-            ]
-            return self.spark.createDataFrame(lines, "`QUERY PLAN` string")
-        if verb == "SHOW":
-            if _re.match(
-                r"\s*SHOW\s+CONTINUOUS\s+QUERIES", query, _re.IGNORECASE
-            ):
-                return self.spark.createDataFrame(
-                    [(s.name, s.db, s.select, s.target) for s in
-                     self.continuous_queries.values()]
-                    or self.spark.sparkContext.emptyRDD(),
-                    "name string, db string, query string, target string",
-                )
-            return compile_show(query, table)
-        if verb == "CREATE":
-            from .functions.influxql import compile_create_cq
-
-            spec = compile_create_cq(query)
-            self.continuous_queries[spec.name] = spec
-            return self.spark.createDataFrame(
-                [(spec.name, spec.db, spec.target)],
-                "name string, db string, target string",
-            )
-        if verb in ("DELETE", "DROP"):
-            if _re.match(
-                r"\s*DROP\s+CONTINUOUS\s+QUERY", query, _re.IGNORECASE
-            ):
-                from .functions.influxql import parse_drop_cq
-
-                name, db = parse_drop_cq(query)
-                dropped = self.continuous_queries.pop(name, None)
-                return self.spark.createDataFrame(
-                    [(name, db, dropped is not None)],
-                    "name string, db string, dropped boolean",
-                )
-            return compile_delete(query, table)
-        return compile_statement(
-            query, table, rollup=rollup, rollup_every_s=rollup_every_s
-        )
+    def _persist(self, df: DataFrame, out_dir: str, target: str):
+        path = os.path.join(out_dir, target)
+        df.write.mode("overwrite").parquet(path)
+        return target, self.spark.read.parquet(path).count()
 
     def influxql_into(
         self, query: str, table: DataFrame, out_dir: str
@@ -232,31 +165,20 @@ class IoTEngine:
         result as ``<out_dir>/<target>`` parquet (the one-shot CQ
         backfill idiom). Returns (target, row count). The scheduled CQ
         path is ``start_continuous_query``; this is its ad-hoc twin."""
-        import os as _os
-
         from .functions.influxql import compile_into
 
         target, df = compile_into(query, table)
-        path = _os.path.join(out_dir, target)
-        df.write.mode("overwrite").parquet(path)
-        return target, self.spark.read.parquet(path).count()
+        return self._persist(df, out_dir, target)
 
     def run_cq(self, name: str, table: DataFrame, out_dir: str) -> tuple[str, int]:
         """Execute a registered continuous query once as a batch
-        backfill: compile its inner SELECT and persist the result as
+        backfill: run its inner SELECT and persist the result as
         ``<out_dir>/<target>`` parquet. Returns (target, rows). The
         streaming keep-current path is ``start_continuous_query`` on
         the same bucket width; InfluxDB runs the same statement on a
         timer server-side."""
-        import os as _os
-
-        from .functions.influxql import compile_statement
-
         spec = self.continuous_queries[name]
-        df = compile_statement(spec.select, table)
-        path = _os.path.join(out_dir, spec.target)
-        df.write.mode("overwrite").parquet(path)
-        return spec.target, self.spark.read.parquet(path).count()
+        return self._persist(self.influxql(spec.select, table), out_dir, spec.target)
 
     # -- continuous queries (InfluxDB CQ / RESAMPLE parity) ------------
     def start_continuous_query(
@@ -310,14 +232,14 @@ class IoTEngine:
         """Start the InfluxDB 1.x wire-protocol gateway over a points
         directory: existing Grafana datasources GET /query, existing
         writers POST /write, health checks hit /ping — no client
-        changes. Returns (server, port); call server.shutdown() to
-        stop. See streaming/http_api.py for protocol scope."""
-        from .streaming.http_api import InfluxAPI, serve
-
+        changes. The gateway shares this engine's CQ registry. Returns
+        (server, port); call server.shutdown() to stop. See
+        streaming/http_api.py for protocol scope."""
         api = InfluxAPI(
             self.spark,
             lambda _m: self.spark.read.parquet(table_path),
             write_dir=table_path,
         )
+        api.continuous_queries = self.continuous_queries
         server, _thread, bound = serve(api, port)
         return server, bound

@@ -111,12 +111,8 @@ class PLCSimStreamReader(SimpleDataSourceStreamReader):
         return {"poll": 0}
 
     def read(self, start: dict):
-        first = start["poll"]
-        polls = range(first, first + self.polls_per_batch)
-        rows = []
-        for ip in sorted({ip for ip, *_ in self.tags}):
-            rows.extend(_poll_rows(self.tags, ip, polls))
-        return iter(rows), {"poll": first + self.polls_per_batch}
+        end = {"poll": start["poll"] + self.polls_per_batch}
+        return self.readBetweenOffsets(start, end), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         polls = range(start["poll"], end["poll"])

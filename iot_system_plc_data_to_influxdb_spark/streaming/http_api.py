@@ -7,10 +7,11 @@ issues ``GET /query?q=<InfluxQL>&db=...`` and expects
 engine, so a user points their existing datasource/clients at it and
 switches storage engines without touching a dashboard or a writer:
 
-- ``/query``: routed through the same compiler the batch API uses —
-  SELECT/subqueries via compile_statement, SHOW via compile_show,
-  DELETE via compile_delete. ``epoch=ms|s|u|ns`` is honored; default
-  timestamps are RFC3339, like InfluxDB.
+- ``/query``: each statement runs through ``InfluxAPI.execute``, the
+  one InfluxQL statement dispatcher — ``IoTEngine.influxql`` calls the
+  same method and shares the same continuous-query registry.
+  ``epoch=ms|s|u|ns`` is honored; default timestamps are RFC3339,
+  like InfluxDB.
 - ``/write``: line protocol → parse_line_protocol (the native-
   expression parser) → appended to the points directory in the
   engine's long/narrow layout.
@@ -28,9 +29,17 @@ from __future__ import annotations
 import json
 import threading
 import urllib.parse
+from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
+
+# Used as ``influxql.compile_statement`` etc., never imported by name:
+# the attribute is then looked up at call time, so a caller that
+# rebinds a compiler entry point on the module (to wrap each compile)
+# reaches every statement this gateway runs.
+from ..functions import influxql
 
 
 def _json_cell(v, epoch: str | None):
@@ -52,26 +61,6 @@ def _json_cell(v, epoch: str | None):
     return v
 
 
-def df_to_series(
-    df: DataFrame, name: str, epoch: str | None = None, max_rows: int = 10000
-) -> dict:
-    """DataFrame → one InfluxDB 'series' object. The first timestamp
-    column is surfaced as 'time' (InfluxDB's column order)."""
-    cols = list(df.columns)
-    for tc in ("time", "ts"):
-        if tc in cols:
-            cols.remove(tc)
-            cols.insert(0, tc)
-            break
-    rows = df.select(*cols).limit(max_rows).collect()
-    out_cols = ["time" if c == "ts" else c for c in cols]
-    return {
-        "name": name,
-        "columns": out_cols,
-        "values": [[_json_cell(v, epoch) for v in row] for row in rows],
-    }
-
-
 def df_to_series_list(
     df: DataFrame,
     name: str,
@@ -79,15 +68,14 @@ def df_to_series_list(
     tags: list | None = None,
     max_rows: int = 10000,
 ) -> list:
-    """DataFrame → InfluxDB 'series' LIST. With ``tags`` (the GROUP BY
-    tag columns), rows split into one series object per tag
+    """DataFrame → InfluxDB 'series' LIST; the first timestamp column is
+    surfaced as 'time' (InfluxDB's column order). With ``tags`` (the
+    GROUP BY tag columns), rows split into one series object per tag
     combination, tag values in a 'tags' map and the tag columns removed
     from 'columns' — the response shape Grafana's InfluxDB datasource
     requires to label GROUP BY tag panels (one legend entry per
-    series). Without tags, the single-series shape unchanged."""
+    series). Without tags, one series."""
     tags = [t for t in (tags or []) if t in df.columns]
-    if not tags:
-        return [df_to_series(df, name, epoch, max_rows)]
     cols = list(df.columns)
     for tc in ("time", "ts"):
         if tc in cols:
@@ -97,6 +85,14 @@ def df_to_series_list(
     val_cols = [c for c in cols if c not in tags]
     rows = df.select(*cols).limit(max_rows).collect()
     out_cols = ["time" if c == "ts" else c for c in val_cols]
+    if not tags:
+        return [
+            {
+                "name": name,
+                "columns": out_cols,
+                "values": [[_json_cell(v, epoch) for v in row] for row in rows],
+            }
+        ]
     groups: dict = {}
     for row in rows:
         key = tuple(row[t] for t in tags)
@@ -114,6 +110,21 @@ def df_to_series_list(
             groups.items(), key=lambda kv: tuple(str(k) for k in kv[0])
         )
     ]
+
+
+@dataclass
+class StatementResult:
+    """What one InfluxQL statement produced. ``df`` is the answer the
+    DataFrame door returns; on the wire it renders as series named
+    ``name``, split by the GROUP BY ``tags`` — unless ``ack`` (the wire
+    answers with the bare statement id) or ``series`` is already built
+    on the driver."""
+
+    df: DataFrame
+    name: str = "results"
+    tags: list = field(default_factory=list)
+    ack: bool = False
+    series: list | None = None
 
 
 class InfluxAPI:
@@ -170,136 +181,148 @@ class InfluxAPI:
     )
 
     def query(self, q: str, epoch: str | None) -> dict:
-        from ..functions.influxql import (
-            InfluxQLError,
-            compile_create_cq,
-            compile_delete,
-            compile_show,
-            compile_statement,
-            parse,
-            parse_drop_cq,
-            split_into,
-        )
-
+        """The /query wire door: ``;``-separated statements, each run by
+        ``execute`` and rendered as one InfluxDB result object."""
         statements = [s.strip() for s in q.split(";") if s.strip()]
         results = []
         for i, stmt in enumerate(statements):
-            up = stmt.upper()
+            out: dict = {"statement_id": i}
             try:
-                if up.startswith(self._ACK_PREFIXES):
-                    results.append({"statement_id": i})
-                    continue
-                if up.startswith("CREATE CONTINUOUS QUERY"):
-                    spec = compile_create_cq(stmt)
-                    self.continuous_queries[spec.name] = spec
-                    results.append({"statement_id": i})
-                    continue
-                if up.startswith("DROP CONTINUOUS QUERY"):
-                    name, _db = parse_drop_cq(stmt)
-                    self.continuous_queries.pop(name, None)
-                    results.append({"statement_id": i})
-                    continue
-                if up.startswith("SHOW CONTINUOUS QUERIES"):
-                    results.append(
-                        {
-                            "statement_id": i,
-                            "series": [
-                                {
-                                    "name": s.db,
-                                    "columns": ["name", "query"],
-                                    "values": [[s.name, s.select]],
-                                }
-                                for s in self.continuous_queries.values()
-                            ],
-                        }
-                    )
-                    continue
-                if up.startswith("EXPLAIN"):
-                    # InfluxDB 1.7+ EXPLAIN [ANALYZE] <select>: a
-                    # QUERY PLAN series — here the real optimizer
-                    # output (the Catalyst physical plan), which is
-                    # the honest answer to "what will this query do"
-                    inner = stmt.split(None, 1)[1]
-                    if inner.upper().startswith("ANALYZE"):
-                        inner = inner.split(None, 1)[1]
-                    m = _from_measurement(inner)
-                    plan_df = compile_statement(inner, self.get_table(m))
-                    plan = plan_df._jdf.queryExecution().explainString(
-                        plan_df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                            "simple"
+                res = self.execute(stmt)
+                if not res.ack:
+                    # looked up as a module global on every call, never
+                    # bound earlier: callers may rebind
+                    # ``http_api.df_to_series_list`` to wrap rendering
+                    out["series"] = (
+                        res.series
+                        if res.series is not None
+                        else df_to_series_list(
+                            res.df, res.name, epoch, tags=res.tags
                         )
                     )
-                    results.append(
-                        {
-                            "statement_id": i,
-                            "series": [
-                                {
-                                    "name": "query_plan",
-                                    "columns": ["QUERY PLAN"],
-                                    "values": [
-                                        [ln] for ln in plan.splitlines() if ln
-                                    ],
-                                }
-                            ],
-                        }
-                    )
-                    continue
-                series_tags: list = []
-                if up.startswith("SHOW"):
-                    df = compile_show(stmt, self.get_table(None))
-                    name = "measurements" if "MEASUREMENTS" in up else "results"
-                elif (
-                    up.startswith("DELETE")
-                    or up.startswith("DROP MEASUREMENT")
-                    or up.startswith("DROP SERIES")
-                ):
-                    kept = compile_delete(stmt, self.get_table(None))
-                    if self.write_dir:
-                        self._rewrite_points(kept)
-                    results.append({"statement_id": i})
-                    continue
-                else:
-                    target, stmt_wo = split_into(stmt)
-                    m = _from_measurement(stmt_wo)
-                    routed = (
-                        self._route_sketch_percentile(stmt_wo, m)
-                        if target is None and m in self.qsketch_tables
-                        else None
-                    )
-                    if routed is not None:
-                        df, series_tags = routed
-                        results.append(
-                            {
-                                "statement_id": i,
-                                "series": df_to_series_list(
-                                    df, m, epoch, tags=series_tags
-                                ),
-                            }
-                        )
-                        continue
-                    df = compile_statement(stmt_wo, self.get_table(m))
-                    if target is not None and self.write_dir:
-                        df.write.mode("append").parquet(
-                            f"{self.write_dir}__{target}"
-                        )
-                        results.append({"statement_id": i})
-                        continue
-                    name = m or "results"
-                    # GROUP BY tag statements split into one series per
-                    # tag combination (InfluxDB's response shape —
-                    # Grafana labels panel legends from the tags map)
-                    series_tags = parse(stmt_wo).group_tags
-                results.append(
-                    {
-                        "statement_id": i,
-                        "series": df_to_series_list(
-                            df, name, epoch, tags=series_tags
-                        ),
-                    }
-                )
-            except InfluxQLError as e:
-                results.append({"statement_id": i, "error": str(e)})
+            except influxql.InfluxQLError as e:
+                out["error"] = str(e)
+            results.append(out)
         return {"results": results}
+
+    def execute(
+        self,
+        stmt: str,
+        table: DataFrame | None = None,
+        rollup: DataFrame | None = None,
+        rollup_every_s: int | None = None,
+    ) -> StatementResult:
+        """Run ONE InfluxQL statement: the only place that decides what
+        a statement verb does, shared by ``query`` (the wire) and
+        ``IoTEngine.influxql`` (the DataFrame door).
+
+        ``table`` is the caller's measurement DataFrame. Without it,
+        measurements resolve through ``get_table`` and the statements
+        that write (DELETE / DROP, SELECT ... INTO) apply to
+        ``write_dir``; with it, they only return their DataFrame.
+        ``rollup`` / ``rollup_every_s`` route GROUP BY time() reads to a
+        CQ rollup (compile_influxql's router)."""
+        up = " ".join(stmt.split()).upper()
+        write_dir = self.write_dir if table is None else None
+
+        def resolve(m):
+            return table if table is not None else self.get_table(m)
+
+        if up.startswith(self._ACK_PREFIXES):
+            return StatementResult(
+                self.spark.createDataFrame([], StructType()), ack=True
+            )
+        if up.startswith("CREATE CONTINUOUS QUERY"):
+            spec = influxql.compile_create_cq(stmt)
+            self.continuous_queries[spec.name] = spec
+            return StatementResult(
+                self.spark.createDataFrame(
+                    [(spec.name, spec.db, spec.target)],
+                    "name string, db string, target string",
+                ),
+                ack=True,
+            )
+        if up.startswith("DROP CONTINUOUS QUERY"):
+            name, db = influxql.parse_drop_cq(stmt)
+            dropped = self.continuous_queries.pop(name, None) is not None
+            return StatementResult(
+                self.spark.createDataFrame(
+                    [(name, db, dropped)],
+                    "name string, db string, dropped boolean",
+                ),
+                ack=True,
+            )
+        if up.startswith("SHOW CONTINUOUS QUERIES"):
+            specs = list(self.continuous_queries.values())
+            return StatementResult(
+                self.spark.createDataFrame(
+                    [(s.name, s.db, s.select, s.target) for s in specs],
+                    "name string, db string, query string, target string",
+                ),
+                series=[
+                    {
+                        "name": s.db,
+                        "columns": ["name", "query"],
+                        "values": [[s.name, s.select]],
+                    }
+                    for s in specs
+                ],
+            )
+        if up.startswith("EXPLAIN"):
+            # InfluxDB 1.7+ EXPLAIN [ANALYZE] <select>: one QUERY PLAN row
+            # per plan line — here the compiled Spark plan, the honest
+            # answer for this engine. ANALYZE first runs the statement's
+            # own plan to completion, counting and dropping its rows, and
+            # shows the formatted plan, which then is AQE's final shape.
+            analyze = up.startswith("EXPLAIN ANALYZE")
+            inner = stmt.split(None, 2 if analyze else 1)[-1]
+            df = self._select(inner, resolve, rollup, rollup_every_s)[1].df
+            qe = df._jdf.queryExecution()
+            if analyze:
+                qe.toRdd().count()
+            plan = qe.explainString(
+                df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted" if analyze else "simple"
+                )
+            )
+            lines = [(ln,) for ln in plan.splitlines() if ln.strip()]
+            return StatementResult(
+                self.spark.createDataFrame(lines, "`QUERY PLAN` string"),
+                "query_plan",
+            )
+        if up.startswith("SHOW"):
+            return StatementResult(
+                influxql.compile_show(stmt, resolve(None)),
+                "measurements" if "MEASUREMENTS" in up else "results",
+            )
+        if up.startswith(("DELETE", "DROP")):
+            kept = influxql.compile_delete(stmt, resolve(None))
+            if write_dir:
+                self._rewrite_points(kept)
+            return StatementResult(kept, ack=True)
+        target, res = self._select(stmt, resolve, rollup, rollup_every_s)
+        if target is not None and write_dir:
+            res.df.write.mode("append").parquet(f"{write_dir}__{target}")
+            return StatementResult(res.df, ack=True)
+        return res
+
+    def _select(self, stmt, resolve, rollup, rollup_every_s):
+        """SELECT [INTO] → (INTO target or None, the SELECT's result).
+        A percentile read a quantile-sketch table can serve is answered
+        from it; GROUP BY tags split the wire result into one series per
+        tag combination (Grafana labels legends from the tags map)."""
+        target, select = influxql.split_into(stmt)
+        m = _from_measurement(select)
+        if target is None and m in self.qsketch_tables:
+            routed = self._route_sketch_percentile(select, m)
+            if routed is not None:
+                return None, StatementResult(routed[0], m, routed[1])
+        df = influxql.compile_statement(
+            select, resolve(m), rollup=rollup, rollup_every_s=rollup_every_s
+        )
+        sub = influxql._split_subquery(select)
+        tags = influxql.parse(sub[0] if sub else select).group_tags
+        return target, StatementResult(df, m or "results", tags)
 
     def _route_sketch_percentile(self, stmt: str, m: str):
         """Serve ``SELECT percentile(value, N) FROM m [WHERE time...]
@@ -317,13 +340,12 @@ class InfluxAPI:
         percentile — computed by merging windows with bucket-count SUM
         and one rank extraction over ≤~60 buckets/series: O(windows ×
         buckets), the raw points are never scanned."""
-        from ..functions.influxql import InfluxQLError, _aligned, parse
         from .rollup import percentile_from_sketch
 
         get_sketch, every_s = self.qsketch_tables[m]
         try:
-            q = parse(stmt)
-        except InfluxQLError:
+            q = influxql.parse(stmt)
+        except influxql.InfluxQLError:
             return None
         if not (
             len(q.select) == 1
@@ -339,8 +361,8 @@ class InfluxAPI:
             and not q.transforms and not q.scalar_math and not q.math_fns
             and not q.group_star
             and q.group_tags in ([], ["event_type"])
-            and _aligned(q.time_lo, every_s, (">=",))
-            and _aligned(q.time_hi, every_s, ("<",))
+            and influxql._aligned(q.time_lo, every_s, (">=",))
+            and influxql._aligned(q.time_hi, every_s, ("<",))
         ):
             return None
         pct = int(q.select[0][3])
@@ -388,8 +410,6 @@ class InfluxAPI:
         import datetime as _dt
         import os
 
-        from ..functions.influxql import compile_statement, parse
-
         if not self.write_dir:
             # the target path is derived from write_dir — without one
             # the rollup would materialize into a literal
@@ -401,8 +421,10 @@ class InfluxAPI:
             )
         appended: dict = {}
         for spec in list(self.continuous_queries.values()):
-            q = parse(spec.select)
-            df = compile_statement(spec.select, self.get_table(q.measurement))
+            q = influxql.parse(spec.select)
+            df = influxql.compile_statement(
+                spec.select, self.get_table(q.measurement)
+            )
             if now is not None:
                 bucket = spec.group_time_s
                 lookback = spec.resample_for_s or bucket

@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 INTERVAL_TRIGGERS = {
     "min": "0 seconds",  # free-running (README.md:49, pacing at :177-186)
@@ -37,17 +38,33 @@ def write_points_batch(batch_df: DataFrame, batch_id: int, table_path: str) -> N
     """foreachBatch hook: idempotent micro-batch append, partitioned by
     plc_ip (db-per-PLC) — at scale also by date for retention pruning."""
     (
-        batch_df.withColumn("batch_id", F_lit(batch_id))
+        batch_df.withColumn("batch_id", F.lit(batch_id))
         .write.mode("append")
         .partitionBy("plc_ip")
         .parquet(table_path)
     )
 
 
-def F_lit(v):  # local import indirection to keep the hook picklable
-    from pyspark.sql import functions as F
-
-    return F.lit(v)
+def _start_append(
+    points: DataFrame,
+    checkpoint_dir: str,
+    hook,
+    trigger_interval: str | None = None,
+    available_now: bool = False,
+):
+    """Start an append-mode streaming query running ``hook(df, batch_id)``
+    on each micro-batch: availableNow, else ``trigger_interval`` (None
+    keeps Spark's default trigger)."""
+    writer = (
+        points.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(hook)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_interval is not None:
+        writer = writer.trigger(processingTime=trigger_interval)
+    return writer.start()
 
 
 def write_points_batch_bucketed(
@@ -61,7 +78,7 @@ def write_points_batch_bucketed(
     from ..operators.retention import write_points_bucketed
 
     write_points_bucketed(
-        batch_df.withColumn("batch_id", F_lit(batch_id)), table_path, n_buckets
+        batch_df.withColumn("batch_id", F.lit(batch_id)), table_path, n_buckets
     )
 
 
@@ -74,20 +91,13 @@ def start_bucketed_points_query(
     n_buckets: int = 64,
 ):
     """Streaming query materializing the bucketed points archive."""
-    writer = (
-        points.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, bid: write_points_batch_bucketed(
-                df, bid, table_path, n_buckets
-            )
-        )
+    return _start_append(
+        points,
+        checkpoint_dir,
+        lambda df, bid: write_points_batch_bucketed(df, bid, table_path, n_buckets),
+        trigger_interval,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def start_points_query(
@@ -98,16 +108,16 @@ def start_points_query(
     available_now: bool = False,
 ):
     """Start one streaming query writing the points table."""
-    writer = (
-        points.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda df, bid: write_points_batch(df, bid, table_path))
+    # the hook names write_points_batch as a module global, so every
+    # micro-batch calls whatever the module attribute is bound to then
+    # (a caller may rebind it to wrap each write)
+    return _start_append(
+        points,
+        checkpoint_dir,
+        lambda df, bid: write_points_batch(df, bid, table_path),
+        trigger_interval,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def start_interval_queries(
@@ -152,7 +162,7 @@ def write_signal_batch_bucketed(
     Bucket writes require the table catalog (bucket metadata lives
     there), hence saveAsTable instead of a path write."""
     (
-        batch_df.withColumn("batch_id", F_lit(batch_id))
+        batch_df.withColumn("batch_id", F.lit(batch_id))
         .write.mode("append")
         .format("parquet")
         .bucketBy(n_buckets, "plc_ip", "alias")
@@ -169,15 +179,9 @@ def start_bucketed_signal_table(
     n_buckets: int = 8,
 ):
     """Streaming query materializing the signal-bucketed points table."""
-    writer = (
-        points.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, bid: write_signal_batch_bucketed(
-                df, bid, table_name, n_buckets
-            )
-        )
+    return _start_append(
+        points,
+        checkpoint_dir,
+        lambda df, bid: write_signal_batch_bucketed(df, bid, table_name, n_buckets),
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

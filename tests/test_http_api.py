@@ -883,3 +883,82 @@ def test_percentile_served_from_quantile_sketch(spark, tmp_path):
         assert len(vals2) >= 3
     finally:
         server.shutdown()
+
+
+@pytest.fixture(scope="module")
+def two_doors(spark, tmp_path_factory):
+    """One engine, reached both as a DataFrame API (IoTEngine.influxql)
+    and over the wire (serve_influx_api's /query)."""
+    from iot_system_plc_data_to_influxdb_spark.api import IoTEngine
+
+    path = str(tmp_path_factory.mktemp("doors") / "points")
+    spark.createDataFrame(
+        [(f"2024-01-01T{h:02d}:00:00", "plc1", "temp", float(h)) for h in range(6)],
+        "ts_s string, plc_ip string, alias string, value double",
+    ).select(
+        F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value"
+    ).write.parquet(path)
+    engine = IoTEngine(spark)
+    server, port = engine.serve_influx_api(path)
+
+    def wire(stmt: str) -> dict:
+        status, body = _get(
+            f"http://127.0.0.1:{port}/query?q={urllib.parse.quote(stmt)}"
+        )
+        assert status == 200
+        return json.loads(body)["results"][0]
+
+    def df_door(stmt: str):
+        return engine.influxql(stmt, engine.points(path))
+
+    yield df_door, wire
+    server.shutdown()
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["create_database", "explain_analyze", "cq_from_df", "cq_from_wire", "subquery"],
+)
+def test_engine_and_gateway_doors_agree(two_doors, case):
+    """The DataFrame door and the /query door run the same statement
+    dispatcher over the same CQ registry, so a statement means the same
+    thing through either."""
+    df_door, wire = two_doors
+    if case == "create_database":
+        assert df_door("CREATE DATABASE iot").collect() == []
+        assert wire("CREATE DATABASE iot") == {"statement_id": 0}
+    elif case == "explain_analyze":
+        stmt = "EXPLAIN ANALYZE SELECT count(value) AS n FROM points"
+        series = wire(stmt)["series"][0]
+        assert series["name"] == "query_plan"
+        for text in (
+            "\n".join(r["QUERY PLAN"] for r in df_door(stmt).collect()),
+            "\n".join(v[0] for v in series["values"]),
+        ):
+            # formatted mode numbers its operator sections, and the
+            # adaptive plan is final only once the statement has run
+            assert "(1) " in text
+            assert "isFinalPlan=true" in text
+    elif case == "subquery":
+        stmt = (
+            "SELECT max(v) AS top FROM (SELECT mean(value) AS v FROM points "
+            "GROUP BY time(2h), plc_ip) GROUP BY plc_ip"
+        )
+        assert [r["top"] for r in df_door(stmt).collect()] == [4.5]
+        series = wire(stmt)["series"]
+        assert [(s["tags"], s["values"]) for s in series] == [
+            ({"plc_ip": "plc1"}, [[4.5]])
+        ]
+    else:
+        name = case
+        create, listing = (df_door, wire) if case == "cq_from_df" else (wire, df_door)
+        create(
+            f"CREATE CONTINUOUS QUERY {name} ON iot BEGIN SELECT mean(value) "
+            f"INTO {name}_1h FROM points GROUP BY time(1h) END"
+        )
+        listed = listing("SHOW CONTINUOUS QUERIES")
+        if listing is wire:
+            names = [v[0] for s in listed["series"] for v in s["values"]]
+        else:
+            names = [r["name"] for r in listed.collect()]
+        assert name in names
