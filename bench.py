@@ -5,15 +5,21 @@ local[$SPARK_GRAFT_CPUS], executing each plan to completion through the
 noop sink (full execution, no driver-side row transfer skewing the
 numbers).
 
+Every run of a query is one Spark job group, `<query>#<i>` (run 0 is
+the discarded warm-up), and its wall is split into construct_s (the
+query function call, where its eager jobs run) and execute_s (the
+noop write). The session writes an uncompressed Spark event log; after
+the suite it is reduced per job group, and each query's row in
+BENCH_DETAIL.json carries its fastest run's split and Spark work:
+jobs, tasks, executor run/CPU/GC ms, shuffle bytes written and spill
+bytes.
+
 The final line cannot hold all 179 per-query entries inside the
 driver's 2,000-char capture; since round 13 the reported subset is
 FIXED (FINAL_LINE_PRIORITY — the 66 queries the round-12 line carried,
 always all of them), never chosen by this run's timings, so the
 driver's round-over-round common set is stable and unbiased. The full
-per-query record is always in BENCH_DETAIL.json. Also since round 13,
-a query probed by the flag-attribution pass records
-min(in-suite, fresh-probe) — the protocol's min-of-N extended across
-sessions (raw in-suite minima preserved under "queries_insuite").
+per-query record is always in BENCH_DETAIL.json.
 
 Usage: python bench.py [--repeat N] [--only name1,name2]
 """
@@ -24,9 +30,12 @@ import gc
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.trace import reduce_event_log  # noqa: E402
 
 # Headline set: covers scan, agg, joins, windows, time-series, dedup,
 # similarity, text — the operators that matter at 100 TB. The exact
@@ -390,304 +399,220 @@ QUERY_WORK_NOTES = {
 
 
 def _index_build_serve_split(spark, sf_dir: str) -> dict:
-    import shutil
-    import tempfile
-    import time as _time
-
     from iot_system_plc_data_to_influxdb_spark.catalog import t as read_t
     from iot_system_plc_data_to_influxdb_spark.operators import retrieval
     from iot_system_plc_data_to_influxdb_spark.plans import northstar
-
-    def timed(fn):
-        t0 = _time.perf_counter()
-        out = fn()
-        return out, round(_time.perf_counter() - t0, 3)
 
     def serve_min(mk):
         mk().write.format("noop").mode("overwrite").save()  # warm
         walls = []
         for _ in range(3):
-            t0 = _time.perf_counter()
+            t0 = time.perf_counter()
             mk().write.format("noop").mode("overwrite").save()
-            walls.append(_time.perf_counter() - t0)
+            walls.append(time.perf_counter() - t0)
         return round(min(walls), 3)
 
-    out: dict = {}
-    docs = read_t(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="bench_bm25_idx_")
-    try:
-        _, build_s = timed(
-            lambda: retrieval.write_postings_index(docs, tmp)
-        )
-        serve_s = serve_min(
-            lambda: retrieval.bm25_from_index(
-                spark, tmp, northstar._BM25_TERMS,
-                topk=northstar._BM25_TOPK, scale=northstar._BM25_SCALE,
-            )
-        )
-        out["b21_bm25_indexed"] = {"build_s": build_s, "serve_s": serve_s}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    def build_serve(prefix, build, **serves):
+        with tempfile.TemporaryDirectory(prefix=prefix) as tmp:
+            t0 = time.perf_counter()
+            build(tmp)
+            out = {"build_s": round(time.perf_counter() - t0, 3)}
+            for key, mk in serves.items():
+                out[key] = serve_min(lambda: mk(tmp))
+            return out
 
+    docs = read_t(spark, sf_dir, "documents").select("doc_id", "text")
     emb = read_t(spark, sf_dir, "embeddings")
     probe = list(
         emb.filter("vec_id = 0").select("embedding").first()["embedding"]
     )
-    tmp = tempfile.mkdtemp(prefix="bench_ivf_idx_")
-    try:
-        _, build_s = timed(lambda: retrieval.write_ivf_index(emb, tmp))
-        serve_s = serve_min(
-            lambda: retrieval.knn_ivf_from_index(
-                spark, tmp, probe, probe_vec_id=0, k=10
-            )
-        )
-        out["b20_knn_ivf_indexed"] = {
-            "build_s": build_s, "serve_s": serve_s
+    return {
+        "b21_bm25_indexed": build_serve(
+            "bench_bm25_idx_",
+            lambda d: retrieval.write_postings_index(docs, d),
+            serve_s=lambda d: retrieval.bm25_from_index(
+                spark, d, northstar._BM25_TERMS,
+                topk=northstar._BM25_TOPK, scale=northstar._BM25_SCALE,
+            ),
+        ),
+        "b20_knn_ivf_indexed": build_serve(
+            "bench_ivf_idx_",
+            lambda d: retrieval.write_ivf_index(emb, d),
+            serve_s=lambda d: retrieval.knn_ivf_from_index(
+                spark, d, probe, probe_vec_id=0, k=10
+            ),
+        ),
+        "b20_knn_ivfpq_indexed": build_serve(
+            "bench_ivfpq_idx_",
+            lambda d: retrieval.write_ivfpq_index(emb, d),
+            serve_s=lambda d: retrieval.knn_ivfpq_from_index(
+                spark, d, probe, probe_vec_id=0, k=10
+            ),
+            serve_rerank_s=lambda d: retrieval.knn_ivfpq_rerank(
+                spark, d, emb, probe, probe_vec_id=0, k=10
+            ),
+        ),
+    }
+
+
+PROFILE_FIELDS = ("jobs", "tasks", "run_ms", "cpu_ms", "gc_ms",
+                  "shuffle_bytes", "spill_bytes")
+
+
+def _run_of(props: dict) -> str | None:
+    """The `<query>#<i>` run a Spark job belongs to. A streaming query
+    runs its batches under a job group of its own, so the run also
+    rides along as a job tag, which its threads inherit."""
+    ids = [props.get("spark.jobGroup.id") or ""]
+    ids += (props.get("spark.job.tags") or "").split(",")
+    return next((i for i in ids if "#" in i), None)
+
+
+def profile_rows(runs: dict, event_log: str) -> dict:
+    """One row per query from its (construct_s, execute_s) runs — run 0
+    the warm-up — and the suite's event log: the fastest timed run's
+    split and that run's Spark work."""
+    groups = reduce_event_log(event_log, _run_of)
+    rows = {}
+    for name, splits in runs.items():
+        walls = [c + e for c, e in splits[1:]]
+        best = min(range(len(walls)), key=walls.__getitem__)
+        construct, execute = splits[best + 1]
+        work = groups.get(f"{name}#{best + 1}")
+        work = work or dict.fromkeys(PROFILE_FIELDS, 0)
+        mean = sum(walls) / len(walls)
+        rows[name] = {
+            "wall_s": round(walls[best], 3),
+            "construct_s": round(construct, 4),
+            "execute_s": round(execute, 4),
+            **{k: round(work[k], 1) for k in PROFILE_FIELDS},
+            "median_s": round(sorted(walls)[len(walls) // 2], 3),
+            "stddev_s": round(
+                (sum((w - mean) ** 2 for w in walls) / len(walls)) ** 0.5, 3
+            ),
+            "warmup_s": round(sum(splits[0]), 3),
+            "runs": [round(w, 3) for w in walls],
         }
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    tmp = tempfile.mkdtemp(prefix="bench_ivfpq_idx_")
-    try:
-        _, build_s = timed(lambda: retrieval.write_ivfpq_index(emb, tmp))
-        serve_s = serve_min(
-            lambda: retrieval.knn_ivfpq_from_index(
-                spark, tmp, probe, probe_vec_id=0, k=10
-            )
-        )
-        rerank_s = serve_min(
-            lambda: retrieval.knn_ivfpq_rerank(
-                spark, tmp, emb, probe, probe_vec_id=0, k=10
-            )
-        )
-        out["b20_knn_ivfpq_indexed"] = {
-            "build_s": build_s, "serve_s": serve_s,
-            "serve_rerank_s": rerank_s,
-        }
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return rows
 
 
-def _isolated_probe(name: str, repeats: int = 3) -> int:
-    """Fresh-session re-run of ONE query (min-of-N after warm-up) plus
-    a JVM calib probe — the attribution leg shared by the regression
-    gate and the host-phase detector. Runs in a subprocess so the
-    JVM/heap/Python-worker state is genuinely fresh; prints one
-    `ISOLATED_PROBE {...}` line for the parent. `fresh_runs_ordered`
-    preserves OBSERVED repeat order so the host-phase pass can ask
-    "does the escalation reproduce on a fresh session?" (sorted runs
-    can't answer that)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from iot_system_plc_data_to_influxdb_spark import plans
-    from iot_system_plc_data_to_influxdb_spark.session import get_spark
-
-    spark = get_spark(f"bench-isolated-{name}")
-    fn = None if name == "__calib__" else plans.all_queries()[name]
-
-    def jvm_once() -> float:
-        t0 = time.perf_counter()
-        spark.range(200_000_000).selectExpr(
-            "sum(id % 1048576) as s"
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    jvm_once()
-    calib = min(jvm_once() for _ in range(3))
-
-    if name == "__calib__":
-        # calib-only reference session: what a HEALTHY fresh
-        # subprocess calibrates at under the current conditions
-        # (parent bench JVM resident, same cores) — the yardstick
-        # _spawn_validated compares real probes against
-        print("ISOLATED_PROBE " + json.dumps({
-            "query": "__calib__",
-            "fresh_calib_jvm_s": round(calib, 3),
-        }))
-        return 0
-
-    def run_once() -> float:
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    run_once()  # warm-up, discarded (same protocol as the suite)
-    ordered = [run_once() for _ in range(repeats)]
-    runs = sorted(ordered)
-    print("ISOLATED_PROBE " + json.dumps({
-        "query": name,
-        "fresh_isolated_s": round(runs[0], 3),
-        "fresh_runs": [round(r, 3) for r in runs],
-        "fresh_runs_ordered": [round(r, 3) for r in ordered],
-        "fresh_calib_jvm_s": round(calib, 3),
-    }))
-    return 0
+def _regression_gate(rows: dict, prev: dict) -> dict:
+    """Queries whose Spark work grew against the previous record's
+    rows: more jobs, or executor CPU-ms more than doubled. Both are
+    counted by Spark rather than timed, so host load barely moves
+    them."""
+    flags = {}
+    for k, row in rows.items():
+        old = prev.get("rows", {}).get(k)
+        if old is None:
+            continue
+        more_jobs = row["jobs"] > old["jobs"]
+        more_cpu = old["cpu_ms"] > 0 and row["cpu_ms"] > 2.0 * old["cpu_ms"]
+        if more_jobs or more_cpu:
+            flags[k] = {f: [old[f], row[f]] for f in ("jobs", "cpu_ms")}
+    return flags
 
 
-def _spawn_isolated(name: str, repeats: int = 3) -> dict:
-    """Run `--isolated-probe name` in a fresh subprocess and return the
-    parsed probe record. Raises on any failure — callers record the
-    exception string instead of dying."""
-    import subprocess
-
-    out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__),
-         "--isolated-probe", name, "--probe-repeats", str(repeats)],
-        capture_output=True, text=True, timeout=600,
-    ).stdout
-    return json.loads(
-        [ln for ln in out.splitlines()
-         if ln.startswith("ISOLATED_PROBE ")][-1].split(" ", 1)[1]
+def _enable_event_log(log_dir: str) -> None:
+    """Have the JVM the session is about to start write its event log
+    to `log_dir`, uncompressed and in one file."""
+    confs = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": log_dir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    args = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [*(f"--conf {k}={v}" for k, v in confs.items()), args]
     )
 
 
-_FRESH_CALIB_REF: list[float] = []  # measured once per suite, lazily
+def _run_suite(bench_set: list, sf_dir: str, repeat: int, log_dir: str):
+    """Time every query of `bench_set` in one session that writes its
+    event log to `log_dir`; returns the profile rows and the index
+    build/serve split."""
+    _enable_event_log(log_dir)
 
+    from iot_system_plc_data_to_influxdb_spark import plans
+    from iot_system_plc_data_to_influxdb_spark.session import get_spark
+    from perfbench.harness import wait_for_listeners
 
-def _fresh_calib_ref() -> float | None:
-    """The 'healthy fresh session' calibration yardstick. A fresh
-    subprocess systematically calibrates 2-3x SLOWER than the suite's
-    in-session calib_eff (the parent bench JVM stays resident, page
-    cache is cold) — round-11 closing record: every fresh probe's
-    calib was 0.27-0.40 s against a 0.087 s suite calib_eff, so a bar
-    of 1.3x suite calib was UNREACHABLE and 'healthy' never fired.
-    Fix: measure what a fresh subprocess calibrates at RIGHT NOW with
-    one calib-only probe (no query), once per suite, and validate real
-    probes against THAT — like-for-like conditions.
+    spark = get_spark("bench")
+    sc = spark.sparkContext
+    qs = plans.all_queries()  # bench set spans canonical + variants
 
-    Returns None when the calib-only probe itself fails (after one
-    retry): falling back to the suite calib would recreate the exact
-    unreachable 1.3x bar documented above and silently misattribute
-    every regression as 'host' (round-11 ADVICE) — callers must record
-    'calib-ref-unavailable' and skip host-vs-code discrimination."""
-    if not _FRESH_CALIB_REF:
-        for _ in range(2):  # the probe is cheap; retry once on failure
-            try:
-                probe = _spawn_isolated("__calib__", repeats=0)
-                _FRESH_CALIB_REF.append(probe["fresh_calib_jvm_s"])
-                break
-            except Exception:  # noqa: BLE001 — try again, then give up
-                continue
-        else:
-            _FRESH_CALIB_REF.append(None)
-    return _FRESH_CALIB_REF[0]
+    # Warm the JVM/codegen paths once on the smallest SF.
+    qs["b4_hash_aggregate"](spark, "/root/testdata/sf0.001").write.format(
+        "noop"
+    ).mode("overwrite").save()
 
+    def collect_garbage():
+        # Pay async-cleanup debt OUTSIDE the timed window, before every
+        # run: a Python gc.collect() releases DataFrame handles so the
+        # JVM ContextCleaner unpersists checkpoint RDDs / broadcasts now,
+        # and an explicit JVM GC drains the heap the previous run
+        # inflated (rounds 4 and 9: cleanup inside the window made
+        # b3_influxql_derivative 4x slower and b19_span_dedup escalate
+        # 3→22 s). Plan-matched cached relations survive the GC.
+        gc.collect()
+        try:
+            sc._jvm.System.gc()
+        except Exception:
+            pass
 
-def _median(vals) -> float:
-    srt = sorted(vals)
-    return srt[len(srt) // 2] if srt else 0.0
+    runs: dict[str, list[tuple[float, float]]] = {}
+    for name in bench_set:
+        fn = qs[name]
 
+        def run_once(i: int) -> tuple[float, float]:
+            run = f"{name}#{i}"
+            sc.setJobGroup(run, name)
+            sc.addJobTag(run)
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            sc.removeJobTag(run)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            return t1 - t0, t2 - t1
 
-def _regression_gate(
-    timings: dict, queries_norm: dict, prev: dict
-) -> tuple[dict, float, float, str]:
-    """MEDIAN-RATIO REGRESSION GATE over CALIB-NORMALIZED values
-    (round-11 verdict #2). History: raw cross-round deltas conflate
-    host drift with plan changes; the round-8 revision normalized each
-    query's now/prev RAW ratio by the suite-median ratio, which kills
-    uniform drift but not drift BETWEEN the two compared runs' host
-    phases interacting with per-query variance — round 11 (a day whose
-    fresh-session calibs swung 5x) fired 4 'code' flags that STRESS.md
-    then hand-refuted one by one with calib-normalized arithmetic.
-    This gate does that arithmetic itself.
+        # Drop the PREVIOUS queries' cached intermediates (LSH
+        # signatures, CC frontiers are cache()d and never unpersisted)
+        # so they cannot evict this query's cache mid-measurement.
+        # Within one query, repeats intentionally share the warm cache
+        # (CacheManager matches the rebuilt logical plan) — steady-state
+        # marginal cost, same basis as earlier rounds.
+        spark.catalog.clearCache()
+        collect_garbage()
+        splits = [run_once(0)]  # warm-up, discarded
+        # sub-2s queries are host-load noise-bound: 5 samples there
+        # (3 for heavier ones). "queries" stays min-of-N — the
+        # reproducible capability number, comparable round-over-round;
+        # each row's median_s/stddev_s expose the noise.
+        n = 5 if sum(splits[0]) < 2.0 else repeat
+        for i in range(1, n + 1):
+            collect_garbage()
+            splits.append(run_once(i))
+        runs[name] = splits
 
-    Note the median-relative test alone CANNOT be fixed by
-    normalization: ratio_norm_k = ratio_raw_k x (calib_prev/calib_now)
-    uniformly, so (ratio/median) is bit-identical in raw and
-    normalized space. The refutation arithmetic the flags actually
-    died by is the DIRECT normalized ratio now_norm/prev_norm (the
-    calib probes sample the host phase the flagged query ran in;
-    the suite median samples every phase of a volatile day). A flag
-    now requires BOTH measures to exceed the existing thresholds —
-    moved vs the suite AND moved vs the calibration — so a host
-    sub-phase can no longer fire alone, while a real plan regression
-    trips both (median ~1 when one query regresses; the calib does
-    not move with a plan change). Thresholds unchanged (calibrated to
-    the measured false-positive floor): > 2.0 at any size, or > 1.5
-    when both rounds spent >= 1 s RAW on the query; sub-0.3 s-raw
-    queries skipped. Falls back to the median-relative raw test alone
-    (mode='raw') against a pre-normalization prev record.
+    # build-vs-serve split for the indexed serving paths (full suite
+    # only — a partial --only run should stay cheap)
+    index_split: dict = {}
+    if bench_set is BENCH_QUERIES:
+        try:
+            index_split = _index_build_serve_split(spark, sf_dir)
+        except Exception as exc:  # noqa: BLE001 — record, don't die
+            index_split = {"error": str(exc)}
 
-    Returns (regressions, med_ratio_raw, med_ratio_gate, mode)."""
-    prev_q = prev.get("queries", {}) if prev else {}
-    prev_norm = prev.get("queries_norm", {}) if prev else {}
-    raw_ratios = {
-        k: timings[k] / prev_q[k] for k in timings if prev_q.get(k, 0) > 0
-    }
-    # need a population for the median to mean much
-    if len(raw_ratios) < 5:
-        return {}, 0.0, 0.0, "no-prev"
-    med_raw = _median(raw_ratios.values())
-    norm_ratios = {
-        k: queries_norm[k] / prev_norm[k]
-        for k in queries_norm
-        if prev_norm.get(k, 0) > 0
-    }
-    mode = "normalized" if len(norm_ratios) >= 5 else "raw"
-    med = _median(norm_ratios.values()) if mode == "normalized" else med_raw
-
-    def trips(r: float, big: bool) -> bool:
-        return r > 2.0 or (big and r > 1.5)
-
-    regressions: dict[str, dict] = {}
-    for k, r in raw_ratios.items():
-        if timings[k] < 0.3 and prev_q.get(k, 1.0) < 0.3:
-            continue
-        big = timings[k] >= 1.0 and prev_q.get(k, 0.0) >= 1.0
-        rn_med = r / med_raw
-        if not trips(rn_med, big):
-            continue
-        rn_norm = None
-        if mode == "normalized" and prev_norm.get(k, 0) > 0:
-            rn_norm = queries_norm[k] / prev_norm[k]
-            if not trips(rn_norm, big):
-                continue  # the calib explains the move — host, not code
-        regressions[k] = {
-            "ratio_vs_median": round(rn_med, 2),
-            "ratio_norm": round(rn_norm, 2) if rn_norm is not None else None,
-            "prev_s": prev_q.get(k),
-            "in_suite_s": timings[k],
-            "prev_norm": prev_norm.get(k),
-            "now_norm": queries_norm.get(k),
-            "gate_mode": mode,
-        }
-    return regressions, med_raw, med, mode
-
-
-def _spawn_validated(
-    name: str, calib_ref: float, repeats: int = 3, attempts: int = 3
-) -> tuple[dict, list[dict], bool]:
-    """Self-validating fresh probe (round-10 verdict #3): a probe whose
-    OWN calib_jvm lands >1.3x the fresh-session reference (see
-    _fresh_calib_ref) is itself degraded — its query timings measure
-    the contaminated session, not the query — so classifying from it
-    is a guess. Re-probe up to `attempts` fresh subprocesses until one
-    calibrates healthy; keep EVERY attempt's record so the evidence
-    trail survives. Returns (representative probe, all attempt
-    records, calib_healthy): on success the representative is the
-    first healthy session; after `attempts` unhealthy sessions it is
-    the best-calibrated one and calib_healthy=False — at that point
-    "the host is in a slow phase" is a conclusion from repeated calib
-    evidence, not one bad probe."""
-    records: list[dict] = []
-    bar = 1.3 * max(calib_ref, 0.001)
-    for _ in range(attempts):
-        probe = _spawn_isolated(name, repeats=repeats)
-        records.append(probe)
-        if probe["fresh_calib_jvm_s"] <= bar:
-            return probe, records, True
-    best = min(records, key=lambda p: p["fresh_calib_jvm_s"])
-    return best, records, False
+    wait_for_listeners(spark)
+    rows = profile_rows(runs, os.path.join(log_dir, os.listdir(log_dir)[0]))
+    spark.stop()  # closes the event log before its directory goes
+    return rows, index_split
 
 
 def main() -> int:
-    if "--isolated-probe" in sys.argv:
-        n = 3
-        if "--probe-repeats" in sys.argv:
-            n = int(sys.argv[sys.argv.index("--probe-repeats") + 1])
-        return _isolated_probe(
-            sys.argv[sys.argv.index("--isolated-probe") + 1], repeats=n
-        )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # Per query: one discarded warm-up, then best-of-N timed runs.
     # Host load swings single-shot wall clock 1.5-3x at sub-second
@@ -700,11 +625,7 @@ def main() -> int:
     if "--only" in sys.argv:
         bench_set = sys.argv[sys.argv.index("--only") + 1].split(",")
 
-    from iot_system_plc_data_to_influxdb_spark import plans
-    from iot_system_plc_data_to_influxdb_spark.session import get_spark
-
-    # Snapshot the PRIOR round's detail record (before we overwrite it)
-    # for the calib-normalized regression gate below.
+    # the previous full-suite record, for the regression gate
     here = os.path.dirname(os.path.abspath(__file__))
     prev: dict = {}
     try:
@@ -713,295 +634,10 @@ def main() -> int:
     except (OSError, ValueError):
         pass
 
-    spark = get_spark("bench")
-    qs = plans.all_queries()  # bench set spans canonical + variants
-
-    # Warm the JVM/codegen paths once on the smallest SF.
-    qs["b4_hash_aggregate"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # HOST CALIBRATION — fixed reference work, identical every round,
-    # so cross-round query deltas are attributable: if calib_jvm
-    # doubles between rounds, the host halved, not the plans. (Round-7
-    # finding: a fresh VM showed ~45 MB/s first-touch page faults and
-    # ~2x slower warm CPU than round 6's host; without a yardstick
-    # that reads as a blanket plan regression.) JVM probe: pure
-    # codegen agg over range(), no IO/shuffle. Python probe: warm
-    # numpy reduction (Arrow-path proxy). Both min-of-3 after warm-up.
-    def _calibrate():
-        import numpy as np
-
-        def jvm_once():
-            t0 = time.perf_counter()
-            # bounded terms: ANSI mode (Spark 4 default) faults a
-            # long-overflowing sum
-            spark.range(200_000_000).selectExpr(
-                "sum(id % 1048576) as s"
-            ).write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-
-        jvm_once()
-        calib_jvm = min(jvm_once() for _ in range(3))
-        arr = np.arange(50_000_000, dtype=np.uint64)
-        int(arr.sum())  # first touch outside the timed window
-
-        def py_once():
-            t0 = time.perf_counter()
-            int((arr * np.uint64(2654435761)).sum())
-            return time.perf_counter() - t0
-
-        py_once()
-        calib_py = min(py_once() for _ in range(3))
-
-        # cold-page probe: a FRESH 512 MB buffer every time, so each
-        # run pays first-touch page faults — the resource that actually
-        # degraded on the round-7 VM (45 MB/s faults, warm CPU fine).
-        # Shuffle writes / Arrow buffers / JVM heap growth pay this
-        # rate; queries that allocate big fresh buffers track calib_alloc,
-        # pure-codegen queries track calib_jvm.
-        def alloc_once():
-            t0 = time.perf_counter()
-            buf = np.empty(512 * 1024 * 1024, dtype=np.uint8)
-            buf[::4096] = 1  # touch every page
-            del buf
-            return time.perf_counter() - t0
-
-        calib_alloc = min(alloc_once() for _ in range(3))
-        return round(calib_jvm, 3), round(calib_py, 3), round(calib_alloc, 3)
-
-    calib_jvm, calib_py, calib_alloc = _calibrate()
-
-    timings: dict[str, float] = {}
-    median: dict[str, float] = {}
-    stddev: dict[str, float] = {}
-    trimmed: dict[str, float] = {}
-    drift: dict[str, str] = {}
-    all_runs: dict[str, list[float]] = {}
-    warmups: dict[str, float] = {}
-    for name in bench_set:
-        fn = qs[name]
-
-        def run_once() -> float:
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-
-        # Drop the PREVIOUS queries' cached intermediates (LSH
-        # signatures, CC frontiers are cache()d and never unpersisted);
-        # letting them pile up across the suite evicts the current
-        # query's cache mid-measurement and later queries measure GC.
-        # Within one query, repeats intentionally share the warm cache
-        # (CacheManager matches the rebuilt logical plan) — steady-state
-        # marginal cost, same basis as earlier rounds.
-        spark.catalog.clearCache()
-        # Pay async-cleanup debt OUTSIDE the timed window: a Python
-        # gc.collect() releases DataFrame handles so the JVM
-        # ContextCleaner unpersists checkpoint RDDs / broadcasts now
-        # (not concurrently with a later timed run), and an explicit
-        # JVM GC drains the heap the previous query inflated. Round-4
-        # attribution: b3_influxql_derivative benched 1.3-1.7 s in some
-        # suite runs vs 0.35 s in others with NO plan difference —
-        # cleanup landing inside the measurement window.
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-        warm = run_once()  # warm-up, discarded
-        # sub-2s queries are host-load noise-bound: 5 samples there
-        # (3 for heavier ones). "queries" stays min-of-N — the
-        # reproducible capability number, comparable round-over-round;
-        # "median"/"stddev" expose the noise so regressions are
-        # attributable rather than argued from single points.
-        n = 5 if warm < 2.0 else repeat
-
-        def run_clean() -> float:
-            # ROUND-9 escalation fix (round-8 verdict #3): the same
-            # cleanup that ran between QUERIES now also runs between a
-            # query's own repeats, OUTSIDE the timed window. Root
-            # cause: each repeat's py4j-held DataFrame refs pin ~GBs
-            # of JVM objects until a Python gc.collect() releases
-            # them; in a fresh session the 48g heap absorbs it (the
-            # escalation probe measures flat arrays in isolation), but
-            # ~130 queries into the suite the old gen is near capacity
-            # and every un-collected repeat pushes the next run into
-            # full-GC territory — the measured 3→22 s monotone
-            # escalation (BENCH_DETAIL r8 runs[b19_span_dedup]).
-            # Cache reuse is unaffected: CacheManager holds strong
-            # refs, so plan-matched cached relations survive the GC.
-            gc.collect()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-            return run_once()
-
-        runs = sorted(run_clean() for _ in range(n))
-        warmups[name] = round(warm, 3)
-        all_runs[name] = [round(r, 3) for r in runs]
-        timings[name] = round(runs[0], 3)
-        median[name] = round(runs[len(runs) // 2], 3)
-        mean = sum(runs) / len(runs)
-        stddev[name] = round(
-            (sum((r - mean) ** 2 for r in runs) / len(runs)) ** 0.5, 3
-        )
-        # Host slow-phase robustness (round-5 verdict): sustained
-        # 32-core load produces occasional 5-10x outlier repeats on
-        # sub-second queries (e.g. knn_multiprobe runs [0.61..8.53])
-        # with no plan change. `trimmed` drops the worst run before
-        # averaging; `drift` labels a query whose max repeat dwarfs its
-        # min as host phase so a stddev of 3 on a 0.6 s query reads as
-        # "measuring the host", not a plan regression.
-        body = runs[:-1] if len(runs) >= 3 else runs
-        trimmed[name] = round(sum(body) / len(body), 3)
-        drift[name] = (
-            "host-phase" if runs[-1] > 2 * runs[0] + 0.25 else "ok"
-        )
-
-    # build-vs-serve split for the indexed serving paths (full suite
-    # only — a partial --only run should stay cheap)
-    index_split: dict = {}
-    if bench_set is BENCH_QUERIES:
-        try:
-            index_split = _index_build_serve_split(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — record, don't die
-            index_split = {"error": str(exc)}
-
-    calib_end = _calibrate()  # bracket the suite: detect mid-run drift
-
-    # CALIB-NORMALIZED MEDIAN-RATIO REGRESSION GATE — see
-    # _regression_gate for method + history (rounds 7, 8, 11).
-    calib_eff = min(calib_jvm, calib_end[0])
-    queries_norm = {
-        k: round(v / calib_eff, 3) for k, v in timings.items()
-    }
-    prev_q = prev.get("queries", {}) if prev else {}
-    regressions, med_ratio, med_gate, gate_mode = _regression_gate(
-        timings, queries_norm, prev
-    )
-
-    # ATTRIBUTION PASS (round-8 verdict #1): a fired flag with
-    # unchanged code is worthless until someone says WHY — round 8
-    # recorded three flags and shipped them unattributed. When the
-    # gate fires, re-run each flagged query in a FRESH subprocess
-    # session (new JVM, empty heap, no Python-worker pool) and
-    # classify:
-    #   suite-context — the fresh run lands back near the prior
-    #       round (normalized <= 1.25x): the in-suite number measured
-    #       session aging, not the plan;
-    #   host — the fresh run is still slow AND the fresh calib probe
-    #       is >1.3x slower than this suite's: the machine changed;
-    #   code — still slow on a healthy fresh session: a real plan
-    #       regression, fix it.
-    for k in list(regressions)[:6]:  # bound the wall-clock cost
-        calib_ref = _fresh_calib_ref()
-        if calib_ref is None:
-            # no healthy-fresh yardstick → host-vs-code cannot be
-            # discriminated; say so instead of guessing (round-11
-            # ADVICE: the old suite-calib fallback made 'healthy'
-            # unreachable and silently misattributed every flag 'host')
-            regressions[k]["attribution"] = "calib-ref-unavailable"
-            continue
-        try:
-            probe, recs, healthy = _spawn_validated(k, calib_ref)
-        except Exception as exc:  # noqa: BLE001 — record, don't die
-            regressions[k]["attribution"] = f"probe-failed: {exc}"
-            continue
-        fresh = probe["fresh_isolated_s"]
-        fresh_rn = (fresh / prev_q[k]) / max(med_ratio, 1e-9)
-        regressions[k].update(
-            fresh_isolated_s=fresh,
-            fresh_calib_jvm_s=probe["fresh_calib_jvm_s"],
-            fresh_ratio_vs_median=round(fresh_rn, 2),
-            probe_attempts=[
-                {"calib_jvm_s": r["fresh_calib_jvm_s"],
-                 "min_s": r["fresh_isolated_s"]} for r in recs
-            ],
-        )
-        if fresh_rn <= 1.25:
-            regressions[k]["attribution"] = "suite-context"
-        elif not healthy:
-            # 3 fresh sessions in a row failed to calibrate — the host
-            # is demonstrably in a slow phase, not one unlucky probe
-            regressions[k]["attribution"] = "host"
-        else:
-            regressions[k]["attribution"] = "code"
-
-    # HOST-PHASE ATTRIBUTION (round-9 verdict "what's wrong" #1: the
-    # host_phase_flag entries carried no fresh-session record the way
-    # normalized_regressions entries do, so min-of-N could hide a real
-    # per-repeat leak). For each query whose within-suite repeats
-    # escalated (max > 2*min + 0.25), re-run it in a FRESH subprocess
-    # with FIVE repeats kept in OBSERVED order and classify:
-    #   suite-context — the escalation does NOT reproduce fresh (the
-    #       ordered fresh repeats stay inside the same 2x + 0.25
-    #       envelope): the suite measured session aging around the
-    #       query, not the query;
-    #   host — it reproduces AND the fresh calib probe is >1.3x this
-    #       suite's: the machine is in a slow phase;
-    #   code — it reproduces on a healthy fresh session: the query
-    #       itself escalates across its own repeats (cache/state
-    #       growth) — a real leak, fix it.
-    host_attrib: dict[str, dict] = {}
-    flagged = sorted(
-        (k for k, v in drift.items() if v == "host-phase"),
-        key=lambda k: -(all_runs[k][-1] / max(all_runs[k][0], 1e-9)),
-    )  # probe the WORST escalations first so the wall-clock bound
-    # never leaves the most suspicious flag unattributed
-    for k in flagged[:6]:  # same wall-clock bound as the gate
-        calib_ref = _fresh_calib_ref()
-        if calib_ref is None:
-            host_attrib[k] = {"attribution": "calib-ref-unavailable"}
-            continue
-        try:
-            probe, recs, healthy = _spawn_validated(k, calib_ref, repeats=5)
-        except Exception as exc:  # noqa: BLE001 — record, don't die
-            host_attrib[k] = {"attribution": f"probe-failed: {exc}"}
-            continue
-        ordered = probe.get("fresh_runs_ordered", probe["fresh_runs"])
-        esc = max(ordered) > 2 * min(ordered) + 0.25
-        if not esc:
-            att = "suite-context"
-        elif not healthy:
-            att = "host"
-        else:
-            att = "code"
-        host_attrib[k] = {
-            "in_suite_runs": all_runs[k],
-            "fresh_runs_ordered": ordered,
-            "fresh_calib_jvm_s": probe["fresh_calib_jvm_s"],
-            "probe_attempts": [
-                {"calib_jvm_s": r["fresh_calib_jvm_s"],
-                 "min_s": r["fresh_isolated_s"]} for r in recs
-            ],
-            "attribution": att,
-        }
-
-    # CROSS-SESSION MIN (round-12 verdict #8): when a flag fired, its
-    # attribution probe already ran the SAME plan to completion N more
-    # times in a fresh session — those runs are part of this round's
-    # evidence, so the recorded number extends the protocol's min-of-N
-    # across sessions: min(in-suite, fresh probe). A host phase inside
-    # the one suite run can no longer publish a 5x outlier as an
-    # untouched query's number (r12: four untouched dedup queries
-    # published 4-7x walls their own c8 run refuted minutes later).
-    # The raw in-suite minima are preserved under "queries_insuite".
-    insuite = dict(timings)
-    fresh_mins: dict[str, float] = {}
-    for k, v in regressions.items():
-        if v.get("fresh_isolated_s") is not None:
-            fresh_mins[k] = min(
-                fresh_mins.get(k, float("inf")), v["fresh_isolated_s"]
-            )
-    for k, v in host_attrib.items():
-        runs_o = v.get("fresh_runs_ordered")
-        if runs_o:
-            fresh_mins[k] = min(fresh_mins.get(k, float("inf")), *runs_o)
-    for k, f in fresh_mins.items():
-        if k in timings and f < timings[k]:
-            timings[k] = round(f, 3)
-            queries_norm[k] = round(f / calib_eff, 3)
+    with tempfile.TemporaryDirectory(prefix="bench_eventlog_") as log_dir:
+        rows, index_split = _run_suite(bench_set, sf_dir, repeat, log_dir)
+    timings = {k: r["wall_s"] for k, r in rows.items()}
+    regressions = _regression_gate(rows, prev)
 
     sf = sf_dir.rstrip("/").split("sf")[-1]
     detail = {
@@ -1009,51 +645,11 @@ def main() -> int:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        # in-suite minima where a fresh attribution probe ran faster
-        # and the published number took the cross-session min (r12
-        # verdict #8); empty when no probe fired or none was faster
-        "queries_insuite": {
-            k: insuite[k] for k in insuite if insuite[k] != timings[k]
-        },
-        "median": median,
-        "stddev": stddev,
-        "trimmed_mean_drop_max": trimmed,
-        "host_phase_flag": drift,
-        # each flag's fresh-session re-run + code|suite-context|host
-        # verdict (round-10: the same attribution treatment the
-        # normalized_regressions entries got in round 8)
-        "host_phase_attributions": host_attrib,
-        # yardstick the probe-validation bar used (None = no probes
-        # fired this run): a fresh-subprocess calib-only measurement,
-        # NOT the in-session calib_eff — see _fresh_calib_ref
-        "fresh_calib_ref_s": (
-            _FRESH_CALIB_REF[0] if _FRESH_CALIB_REF else None
-        ),
-        "runs": all_runs,
-        "warmup": warmups,
-        "calib_jvm_s": calib_jvm,
-        "calib_py_s": calib_py,
-        "calib_alloc_s": calib_alloc,
-        "calib_end_jvm_py_alloc_s": list(calib_end),
-        "queries_norm": queries_norm,  # timing / calib_jvm_eff, unitless
-        "calib_jvm_eff": calib_eff,
-        "median_ratio_vs_prev": round(med_ratio, 3),
-        "median_ratio_vs_prev_norm": round(med_gate, 3),
-        "gate_mode": gate_mode,  # normalized | raw | no-prev
-        # gate thresholds embedded so the record self-documents
-        # (ADVICE r8: the old key name said ">1.25x", the code said
-        # otherwise): a query flags when its CALIB-NORMALIZED now/prev
-        # ratio (queries_norm, i.e. timing/calib_jvm_eff — round-11
-        # verdict #2: compare the host-independent values, not raw
-        # seconds) divided by the suite-median ratio is >2.0x at any
-        # size, or >1.5x when both rounds spent >= 1 s on it. Each
-        # flag carries a fresh-session attribution:
-        # code | suite-context | host | calib-ref-unavailable.
+        "rows": rows,
         "regression_gate": (
-            "flag if (now_norm/prev_norm)/median_ratio > 2.0, or > 1.5 "
-            "when both rounds >= 1 s raw; sub-0.3 s-raw queries skipped"
+            "flag if jobs > prev jobs, or cpu_ms > 2.0x prev cpu_ms"
         ),
-        "normalized_regressions": regressions,
+        "regressions": regressions,
         # serve-only walls against a pre-built index (r11 verdict #5):
         # the registered indexed queries measure build+serve as one
         # oracle-checked unit; this is the amortized serving latency
@@ -1062,109 +658,29 @@ def main() -> int:
         "sf": float(sf),
     }
     # Full per-run detail goes to a side file + a non-final stdout line;
-    # the driver captures only the LAST 2,000 chars of stdout and parses
-    # the final line, so that line must stay compact (round 4's 5.6 KB
-    # combined line came back `parsed: null`).
-    # A partial --only run must not clobber the full-suite detail record
+    # the driver parses only the final line of the LAST 2,000 chars of
+    # stdout. A partial --only run must not clobber the full record.
     detail_name = (
         "BENCH_DETAIL.json" if bench_set is BENCH_QUERIES
         else "BENCH_DETAIL_partial.json"
     )
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     detail_name), "w"
-    ) as f:
+    with open(os.path.join(here, detail_name), "w") as f:
         json.dump(detail, f, indent=1)
-    if bench_set is BENCH_QUERIES:
-        # keep STRESS.md's host-phase paragraph in lockstep with the
-        # CLOSING full-suite record (round-10 verdict #3: the r10 prose
-        # described an earlier run's one flag while the final record
-        # held three)
-        _sync_stress_hostphase(detail)
-    print("DETAIL " + json.dumps({"median": median, "stddev": stddev}))
+    print("DETAIL " + json.dumps({
+        "median": {k: r["median_s"] for k, r in rows.items()},
+        "stddev": {k: r["stddev_s"] for k, r in rows.items()},
+    }))
     print(
         final_line(
             timings,
-            [calib_jvm, calib_py, calib_alloc],
             float(sf),
-            n_reg=len(regressions) if med_gate > 0 else None,
+            n_reg=len(regressions) if "rows" in prev else None,
         )
     )
     return 0
 
 
-_STRESS_HP_BEGIN = "<!-- HOST-PHASE AUTO SECTION (bench.py) BEGIN -->"
-_STRESS_HP_END = "<!-- HOST-PHASE AUTO SECTION (bench.py) END -->"
-
-
-def _sync_stress_hostphase(detail: dict) -> None:
-    """Regenerate STRESS.md's host-phase paragraph from THIS full-suite
-    record so the prose can never drift from BENCH_DETAIL.json again.
-    Rewrites only the text between the auto-section markers (appends
-    the block if the markers are missing); everything else in STRESS.md
-    stays hand-curated."""
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "STRESS.md"
-    )
-    try:
-        existing = open(path).read()
-    except OSError:
-        return
-    att = detail.get("host_phase_attributions", {})
-    lines = [
-        _STRESS_HP_BEGIN,
-        "",
-        "### Host-phase flags — closing full-suite record "
-        "(auto-generated by bench.py; source of truth: "
-        "BENCH_DETAIL.json `host_phase_attributions`)",
-        "",
-    ]
-    if not att:
-        lines.append(
-            "No in-suite repeat escalations (max > 2x min + 0.25) in "
-            "the closing run — zero flags, nothing probed."
-        )
-    else:
-        lines.append(
-            f"{len(att)} flag(s) in the closing run; each re-probed in "
-            "fresh subprocess session(s) (5 ordered repeats + own "
-            "calib; sessions whose calib lands >1.3x the suite's are "
-            "discarded and re-probed up to 3x — see probe_attempts):"
-        )
-        lines.append("")
-        for k, v in att.items():
-            if "fresh_runs_ordered" not in v:
-                lines.append(f"- `{k}` — {v.get('attribution', '?')}")
-                continue
-            attempts = v.get("probe_attempts", [])
-            extra = (
-                f"; {len(attempts)} probe attempt(s), calibs "
-                + "/".join(f"{a['calib_jvm_s']:.3f}s" for a in attempts)
-                if attempts else ""
-            )
-            lines.append(
-                f"- `{k}` — **{v['attribution']}**. In-suite runs "
-                f"{v['in_suite_runs']}; fresh ordered runs "
-                f"{v['fresh_runs_ordered']} with calib_jvm "
-                f"{v['fresh_calib_jvm_s']:.3f}s{extra}."
-            )
-    lines += ["", _STRESS_HP_END]
-    block = "\n".join(lines)
-    if _STRESS_HP_BEGIN in existing and _STRESS_HP_END in existing:
-        pre = existing[: existing.index(_STRESS_HP_BEGIN)]
-        post = existing[
-            existing.index(_STRESS_HP_END) + len(_STRESS_HP_END):
-        ]
-        out = pre + block + post
-    else:
-        out = existing.rstrip() + "\n\n" + block + "\n"
-    with open(path, "w") as f:
-        f.write(out)
-
-
-def final_line(
-    timings: dict, calib: list, sf: float, n_reg=None
-) -> str:
+def final_line(timings: dict, sf: float, n_reg=None) -> str:
     """The ONE stdout line the driver parses — must stay under its
     2,000-char capture. Degrades in steps: 2-dp per-query dict →
     1-dp → slowest-queries-only with a `queries_elided` count (the
@@ -1175,14 +691,12 @@ def final_line(
         "value": round(sum(timings.values()), 2),
         "unit": "sec",
         "queries": {k: round(v, 2) for k, v in timings.items()},
-        "calib": calib,
         "sf": sf,
     }
     if n_reg is not None:
-        # count of queries the median-ratio gate flagged: now/prev
-        # divided by the suite-median ratio > 2.0x at any size, or
-        # > 1.5x when both rounds >= 1 s (full attributed map in
-        # BENCH_DETAIL.json "normalized_regressions")
+        # count of queries the regression gate flagged: more jobs, or
+        # more than 2x the executor CPU-ms, than the previous record
+        # (full map in BENCH_DETAIL.json "regressions")
         out["norm_reg"] = n_reg
     line = json.dumps(out, separators=(",", ":"))
     if len(line) >= 1950:
@@ -1192,26 +706,21 @@ def final_line(
         line = json.dumps(out, separators=(",", ":"))
     if len(line) >= 1950:
         # >100 queries no longer fit at any rounding: keep queries by
-        # the FIXED priority list (round-12 verdict #2 — membership
-        # must not depend on this run's timings, or the driver's
-        # round-over-round common set churns with noise and
-        # self-selects for regressions), truncated at the first entry
-        # the budget no longer fits.
+        # the FIXED priority list (round-12 verdict #2 — membership must
+        # not depend on this run's timings), truncated at the first
+        # entry the budget no longer fits.
         prio = [k for k in FINAL_LINE_PRIORITY if k in timings]
         prio += sorted(k for k in timings if k not in set(prio))
         kept: dict = {}
         for k in prio:
             # fit check budgets every value at a worst-case 5-char
             # width (99.99) so MEMBERSHIP cannot depend on this run's
-            # digit counts — the longest fitting prefix is identical
-            # across runs (values >= 100 s would widen the real line;
-            # the final assert still guards the driver's capture)
+            # digit counts (the final assert still guards the capture).
+            # 1931 budget keeps exactly the 66-name r12 priority set:
+            # it costs <= 1929 chars at that width, a 67th name >= 1937
             trial = dict(out, queries=dict.fromkeys([*kept, k], 99.99))
             trial["queries_elided"] = len(timings) - len(kept) - 1
-            # 1960 budget: the full 66-name r12 priority set costs
-            # 1953 chars at worst-case width, and the driver captures
-            # 2,000 — every previously-reported query always fits
-            if len(json.dumps(trial, separators=(",", ":"))) >= 1960:
+            if len(json.dumps(trial, separators=(",", ":"))) >= 1931:
                 break  # longest fitting PREFIX — deterministic
             kept[k] = round(timings[k], 2)
         out["queries"] = dict(sorted(kept.items()))

@@ -132,13 +132,26 @@ def run_jobs(*thunks):
     after one fails, a failed build/merge leaves the index directory
     in an invalid mixed state — callers must treat it as
     rebuild-required, the same operational posture as a mid-write
-    crash of the sequential code."""
+    crash of the sequential code.
+
+    Each thunk runs with the caller's Spark local properties (job
+    group, scheduler pool), so its jobs are attributed to the caller's
+    job group like the jobs of a sequential call."""
     if not thunks:
         return []
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import SparkContext, inheritable_thread_target
+
+    if SparkContext._active_spark_context is not None:
+        # a nested call runs on a pool thread, which has no active session
+        session = (
+            SparkSession.getActiveSession()
+            or SparkSession.builder.getOrCreate()
+        )
+        thunks = [inheritable_thread_target(session)(th) for th in thunks]
     with ThreadPoolExecutor(max_workers=min(len(thunks), 3)) as pool:
         futures = [pool.submit(th) for th in thunks]
         return [f.result() for f in futures]

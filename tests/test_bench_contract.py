@@ -16,7 +16,7 @@ import bench  # noqa: E402
 
 def test_final_line_small_suite_keeps_every_query():
     timings = {f"q{i}": 0.5 + i / 100 for i in range(20)}
-    line = bench.final_line(timings, [1.0, 1.0, 1.0], 0.1)
+    line = bench.final_line(timings, 0.1)
     out = json.loads(line)
     assert len(line) < 1950
     assert set(out["queries"]) == set(timings)
@@ -35,7 +35,7 @@ def test_final_line_large_suite_elides_with_fixed_membership():
         f"b27_some_extremely_long_operator_name_{i:03d}": 0.1 + i / 50
         for i in range(160)
     }
-    line = bench.final_line(timings, [1.0, 1.0, 1.0], 0.1)
+    line = bench.final_line(timings, 0.1)
     out = json.loads(line)
     assert len(line) < 1990
     assert out["queries_elided"] == len(timings) - len(out["queries"])
@@ -49,7 +49,7 @@ def test_final_line_large_suite_elides_with_fixed_membership():
     jittered = {
         k: round(v * rng.uniform(0.2, 5.0), 3) for k, v in timings.items()
     }
-    out2 = json.loads(bench.final_line(jittered, [1.0, 1.0, 1.0], 0.1))
+    out2 = json.loads(bench.final_line(jittered, 0.1))
     assert set(out2["queries"]) == set(out["queries"])
     # none of these synthetic names are in the priority list, so the
     # kept set is the alphabetical fallback prefix — deterministic
@@ -61,9 +61,7 @@ def test_final_line_priority_set_always_fully_reported():
     the driver's 'never remove existing entries' contract — even at
     worst-case digit widths and with the norm_reg field present."""
     timings = {q: 99.99 for q in bench.BENCH_QUERIES}
-    out = json.loads(
-        bench.final_line(timings, [0.999, 0.999, 0.999], 0.1, n_reg=99)
-    )
+    out = json.loads(bench.final_line(timings, 0.1, n_reg=99))
     assert set(bench.FINAL_LINE_PRIORITY) <= set(out["queries"])
     assert set(bench.FINAL_LINE_PRIORITY) <= set(bench.BENCH_QUERIES)
 
@@ -76,170 +74,70 @@ def test_headline_set_is_registered():
     assert missing == set(), missing
 
 
-def test_spawn_validated_retries_until_healthy_calib(monkeypatch):
-    """The self-validating probe: sessions whose calib exceeds 1.3x the
-    fresh-session reference are discarded and re-probed (all attempts
-    kept); a healthy session short-circuits; three unhealthy sessions
-    return the best-calibrated one with calib_healthy=False."""
-    script = [
-        {"fresh_calib_jvm_s": 0.9, "fresh_isolated_s": 3.0},   # degraded
-        {"fresh_calib_jvm_s": 0.25, "fresh_isolated_s": 1.0},  # healthy
-        {"fresh_calib_jvm_s": 0.2, "fresh_isolated_s": 0.9},   # unused
+def _job(job_id, stage, props):
+    return {"Event": "SparkListenerJobStart", "Job ID": job_id,
+            "Stage IDs": [stage], "Properties": props}
+
+
+def _task(stage, cpu_ns, shuffle=0):
+    return {"Event": "SparkListenerTaskEnd", "Stage ID": stage,
+            "Task Metrics": {
+                "Executor Run Time": cpu_ns // 1_000_000,
+                "Executor CPU Time": cpu_ns, "JVM GC Time": 1,
+                "Memory Bytes Spilled": 0, "Disk Bytes Spilled": 0,
+                "Shuffle Write Metrics": {"Shuffle Bytes Written": shuffle},
+            }}
+
+
+def test_profile_row_reports_the_fastest_runs_spark_work(tmp_path):
+    """Each run is its own job group; the row carries the split and the
+    Spark work of the fastest timed run, not of the warm-up (run 0) or
+    a slower repeat. A streaming query's batch jobs run under the
+    stream's own job group and count through the run's job tag."""
+    events = [
+        _job(0, 0, {"spark.jobGroup.id": "q#0"}),  # warm-up: 1 job
+        _task(0, 9_000_000),
+        _job(1, 1, {"spark.jobGroup.id": "q#1"}),  # slow run: 1 job
+        _task(1, 5_000_000), _task(1, 5_000_000),
+        _job(2, 2, {"spark.jobGroup.id": "q#2"}),  # fastest run: 2 jobs
+        _task(2, 2_000_000, shuffle=64),
+        _job(3, 3, {"spark.jobGroup.id": "5c1e-stream-run-id",
+                    "spark.job.tags": "q#2,spark-session-x"}),
+        _task(3, 3_000_000), _task(3, 1_000_000),
+        _job(4, 4, {}),  # outside any run: ignored
+        _task(4, 7_000_000),
     ]
-    calls = []
+    log = tmp_path / "eventlog"
+    log.write_text("".join(json.dumps(e) + "\n" for e in events))
+    runs = {"q": [(0.5, 0.5), (0.2, 0.7), (0.3, 0.1)]}
 
-    def fake(name, repeats=3):
-        calls.append(name)
-        return script[len(calls) - 1]
-
-    monkeypatch.setattr(bench, "_spawn_isolated", fake)
-    probe, recs, healthy = bench._spawn_validated("q", calib_ref=0.25)
-    assert healthy and probe["fresh_calib_jvm_s"] == 0.25
-    assert len(recs) == 2 and len(calls) == 2  # stopped at first healthy
-
-    calls.clear()
-    script[:] = [
-        {"fresh_calib_jvm_s": 0.9, "fresh_isolated_s": 3.0},
-        {"fresh_calib_jvm_s": 0.5, "fresh_isolated_s": 2.0},
-        {"fresh_calib_jvm_s": 0.7, "fresh_isolated_s": 2.5},
-    ]
-    probe, recs, healthy = bench._spawn_validated("q", calib_ref=0.25)
-    assert not healthy
-    assert len(recs) == 3
-    # representative = best-calibrated attempt, evidence trail intact
-    assert probe["fresh_calib_jvm_s"] == 0.5
+    row = bench.profile_rows(runs, str(log))["q"]
+    assert (row["jobs"], row["tasks"], row["cpu_ms"]) == (2, 3, 6.0)
+    assert row["shuffle_bytes"] == 64
+    assert (row["construct_s"], row["execute_s"]) == (0.3, 0.1)
+    assert row["wall_s"] == 0.4 and row["warmup_s"] == 1.0
+    assert row["runs"] == [0.9, 0.4]
+    assert set(bench.PROFILE_FIELDS) <= set(row)
 
 
-def test_fresh_calib_ref_measured_once_and_cached(monkeypatch):
-    """The fresh-session yardstick is ONE calib-only subprocess per
-    suite; later calls reuse the cached value. A persistent probe
-    failure yields None — NOT the suite calib (round-11 ADVICE: that
-    fallback recreated the unreachable 1.3x bar and silently
-    misattributed every regression 'host') — after one retry."""
-    bench._FRESH_CALIB_REF.clear()
-    calls = []
-
-    def fake(name, repeats=3):
-        calls.append(name)
-        return {"fresh_calib_jvm_s": 0.3}
-
-    monkeypatch.setattr(bench, "_spawn_isolated", fake)
-    assert bench._fresh_calib_ref() == 0.3
-    assert bench._fresh_calib_ref() == 0.3
-    assert calls == ["__calib__"]  # cached after the first measure
-
-    bench._FRESH_CALIB_REF.clear()
-    boom_calls = []
-
-    def boom(name, repeats=3):
-        boom_calls.append(name)
-        raise RuntimeError("no subprocess")
-
-    monkeypatch.setattr(bench, "_spawn_isolated", boom)
-    assert bench._fresh_calib_ref() is None  # unavailable, not a guess
-    assert boom_calls == ["__calib__", "__calib__"]  # one retry
-    bench._FRESH_CALIB_REF.clear()
-
-    # flaky probe: first attempt fails, the retry lands
-    flaky_calls = []
-
-    def flaky(name, repeats=3):
-        flaky_calls.append(name)
-        if len(flaky_calls) == 1:
-            raise RuntimeError("transient")
-        return {"fresh_calib_jvm_s": 0.25}
-
-    monkeypatch.setattr(bench, "_spawn_isolated", flaky)
-    assert bench._fresh_calib_ref() == 0.25
-    bench._FRESH_CALIB_REF.clear()
-
-
-# ---------------------------------------------------------------------------
-# Calib-normalized regression gate (round-11 verdict #2): on a
-# volatile host — round 11's real calib trail swung 0.238→1.156 s
-# (5x) across one day — comparing RAW seconds fired 4 'code' flags
-# that STRESS.md hand-refuted with (timing / calib_jvm_eff)
-# arithmetic. The gate now does that arithmetic itself.
-# ---------------------------------------------------------------------------
-
-# a suite population so the median is meaningful (gate needs >= 5)
-_STEADY = {f"q{i}": 1.0 + 0.1 * i for i in range(8)}
-
-
-def _mk_prev(queries, calib_eff):
-    return {
-        "queries": queries,
-        "queries_norm": {k: round(v / calib_eff, 3) for k, v in queries.items()},
-        "calib_jvm_eff": calib_eff,
+def test_gate_flags_more_jobs_and_ignores_cpu_below_2x():
+    """The gate compares each row with the previous record's: a job
+    count that rose flags, executor CPU-ms flags only past 2x, and
+    wall clock alone never flags."""
+    prev = {"rows": {
+        "steady": {"jobs": 4, "cpu_ms": 100.0},
+        "more_jobs": {"jobs": 4, "cpu_ms": 100.0},
+        "cpu_1_9x": {"jobs": 4, "cpu_ms": 100.0},
+        "cpu_2_5x": {"jobs": 4, "cpu_ms": 100.0},
+    }}
+    now = {
+        "steady": {"jobs": 4, "cpu_ms": 90.0, "wall_s": 30.0},
+        "more_jobs": {"jobs": 5, "cpu_ms": 100.0, "wall_s": 1.0},
+        "cpu_1_9x": {"jobs": 4, "cpu_ms": 190.0, "wall_s": 1.0},
+        "cpu_2_5x": {"jobs": 4, "cpu_ms": 250.0, "wall_s": 1.0},
+        "new_query": {"jobs": 9, "cpu_ms": 999.0, "wall_s": 1.0},
     }
-
-
-def test_gate_volatile_host_fires_no_flags():
-    """Replay the round-11 failure shape: prev measured at a fast host
-    phase (calib_eff 0.19 — the r10 closing value), now at a slow one
-    (calib_eff 0.385, inside r11's real 0.238-1.156 fresh-calib trail),
-    every query ~2x slower in RAW seconds plus per-query jitter big
-    enough that the four r11-style mid-size queries (1-2.4 s raw, e.g.
-    b18_range_boundaries 1.09→2.357 s) would trip the old raw big-query
-    >1.5x rule against a median dragged down by sub-second noise.
-    Calib-normalized, everything is flat (+-15%) — zero flags."""
-    prev_q = dict(_STEADY, b18_range_boundaries=1.09, b23_ewma_control=0.92,
-                  b21_quality_score=1.05, b11_gapfill_previous=1.02)
-    prev = _mk_prev(prev_q, 0.19)
-    # most of the suite rides at ~1.25x (fast phase within the
-    # volatile day), the four mid-size ones at ~2.1-2.2x (slow phase)
-    now = {k: round(v * 1.25, 3) for k, v in _STEADY.items()}
-    now["b18_range_boundaries"] = 2.357  # the real r11 closing number
-    now["b23_ewma_control"] = 1.898
-    now["b21_quality_score"] = 2.30
-    now["b11_gapfill_previous"] = 2.15
-    calib_eff = 0.385
-    norm = {k: round(v / calib_eff, 3) for k, v in now.items()}
-
-    # the OLD raw gate would have flagged the mid-size queries:
-    raw_ratios = {k: now[k] / prev_q[k] for k in now}
-    med_raw = bench._median(raw_ratios.values())
-    old_flags = [
-        k for k, r in raw_ratios.items()
-        if now[k] >= 1.0 and prev_q[k] >= 1.0 and r / med_raw > 1.5
-    ]
-    assert old_flags, "fixture must reproduce the raw-gate false fire"
-
-    regs, _, med, mode = bench._regression_gate(now, norm, prev)
-    assert mode == "normalized"
-    assert regs == {}, regs  # the hand-refutation is now the gate
-
-
-def test_gate_still_catches_code_regressions_on_volatile_host():
-    """A real plan regression (one query 3x slower in NORMALIZED
-    space) must still flag on the same volatile host, and carry the
-    normalized evidence in the record."""
-    prev_q = dict(_STEADY, victim=1.2)
-    prev = _mk_prev(prev_q, 0.19)
-    host = 2.0
-    now = {k: round(v * host, 3) for k, v in prev_q.items()}
-    now["victim"] = round(1.2 * host * 3.0, 3)  # code made it 3x worse
-    calib_eff = 0.38
-    norm = {k: round(v / calib_eff, 3) for k, v in now.items()}
-    regs, _, med, mode = bench._regression_gate(now, norm, prev)
-    assert mode == "normalized"
-    assert list(regs) == ["victim"]
-    assert regs["victim"]["gate_mode"] == "normalized"
-    assert regs["victim"]["now_norm"] == norm["victim"]
-    assert regs["victim"]["ratio_vs_median"] > 2.0
-
-
-def test_gate_falls_back_to_raw_against_pre_norm_records():
-    """A prev record without queries_norm (pre-round-12 format) still
-    gates — on raw ratios, and says so in gate_mode."""
-    prev = {"queries": dict(_STEADY, victim=1.0)}
-    now = dict(_STEADY, victim=3.1)
-    norm = {k: round(v / 0.1, 3) for k, v in now.items()}
-    regs, med_raw, med, mode = bench._regression_gate(now, norm, prev)
-    assert mode == "raw"
-    assert list(regs) == ["victim"]
-    assert regs["victim"]["gate_mode"] == "raw"
-
-    # and no prev at all → no-prev, nothing fires
-    regs, _, med, mode = bench._regression_gate(now, norm, {})
-    assert (regs, med, mode) == ({}, 0.0, "no-prev")
+    flags = bench._regression_gate(now, prev)
+    assert set(flags) == {"more_jobs", "cpu_2_5x"}
+    assert flags["more_jobs"]["jobs"] == [4, 5]
+    assert bench._regression_gate(now, {}) == {}

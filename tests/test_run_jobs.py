@@ -68,6 +68,24 @@ def test_nested_run_jobs():
     assert run_jobs(inner, inner) == [["a", "b"], ["a", "b"]]
 
 
+def test_thunks_see_the_callers_job_group(spark):
+    # a profile reduces the event log by job group: jobs a thunk runs
+    # must carry the group the caller set, as sequential calls would
+    sc = spark.sparkContext
+
+    def group():
+        return sc.getLocalProperty("spark.jobGroup.id")
+
+    sc.setJobGroup("qX", "run_jobs job-group inheritance")
+    try:
+        assert run_jobs(group, group) == ["qX", "qX"]
+        assert run_jobs(lambda: run_jobs(group, group), group) == [
+            ["qX", "qX"], "qX"
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_prepared_delta_merge_matches_inline_merge(spark, tmp_path):
     """merge_postings_delta(pre=prepare_postings_delta(d)) — the form
     that lets the delta tokenize overlap the base build — lands the

@@ -24,7 +24,7 @@ sys.path.insert(0, "/root/repo/tools")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from stress_attrib import replace_section  # noqa: E402
+from md_sections import replace_section  # noqa: E402
 
 STRESS_MD = "/root/repo/STRESS.md"
 SECTION = "## CC star rounds"

@@ -16,8 +16,7 @@ that bound the merge's work:
 
 The ~7 s bench wall of the registered query is therefore fixed
 streaming-engine startup + two genuinely O(delta) merges — the
-serving claim at 100 TB. Output: plans/r13/bm25_index_stream_evidence
-.txt (committed).
+serving claim at 100 TB. Output: the report, on stdout.
 
 Usage: python tools/stream_merge_evidence.py [sf_dir]
 """
@@ -158,16 +157,7 @@ def main() -> int:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r13",
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    out = os.path.join(out_dir, "bm25_index_stream_evidence.txt")
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
     print("\n".join(lines))
-    print(f"\nwrote {out}")
     return 0
 
 

@@ -237,7 +237,7 @@ def main() -> int:
     # bounded section replace (next '## ' heading ends the section) —
     # a naive split-on-header truncation would delete every section
     # written after this one (the attribution and CC sections)
-    from stress_attrib import replace_section
+    from md_sections import replace_section
 
     replace_section(STRESS_MD, SECTION, "\n".join(section))
     print("wrote STRESS.md streaming section")

@@ -12,14 +12,13 @@ python tools/check_oracle.py --canonical /root/testdata/sf0.01
 echo "=== 3/6 full registry sweep (canonical + variants, sf0.01) ==="
 python tools/check_oracle.py /root/testdata/sf0.01
 
-echo "=== 4/6 headline bench (sf0.1) ==="
+echo "=== 4/6 headline bench (sf0.1; per-query jobs/shuffle/spill in BENCH_DETAIL.json) ==="
 python bench.py
 
-echo "=== 5/6 scale probes (scaling + stress + media + shuffle + ingest) ==="
+echo "=== 5/6 scale probes (scaling + stress + media + ingest) ==="
 python tools/scaling_probe.py
 python tools/stress_probe.py
 python tools/media_stress_probe.py
-python tools/shuffle_audit.py
 python tools/ingest_probe.py
 
 echo "=== 6/6 plan dumps ==="
