@@ -125,16 +125,16 @@ def main() -> int:
         print(f"routed InfluxQL query served from: {src}")
         routed.show(4, truncate=False)
 
-        # retention runs on the (plc_ip, date)-partitioned layout so
-        # age-off is a partition drop, never a data scan
-        from iot_system_plc_data_to_influxdb_spark.operators.retention import (
-            write_points_partitioned,
+        # retention on a copy of the table written by the acquisition
+        # sink: age-off rewrites only the partitions holding old points
+        from iot_system_plc_data_to_influxdb_spark.streaming.sinks import (
+            write_points_batch,
         )
 
         archive = os.path.join(tmp, "points_archive")
-        write_points_partitioned(pts, archive)
+        write_points_batch(pts, 0, archive)
         dropped = engine.age_off(archive, dt.date(2024, 1, 2))
-        print(f"retention age-off dropped {dropped} date partitions")
+        print(f"retention age-off dropped {dropped} points older than 2024-01-02")
 
         # 5. the wire protocol: existing Grafana datasources and
         # writers point at the engine unchanged
@@ -142,9 +142,7 @@ def main() -> int:
         import urllib.parse
         import urllib.request
 
-        pts_dir = os.path.join(tmp, "api_points")
-        pts.write.mode("overwrite").parquet(pts_dir)
-        server, port = engine.serve_influx_api(pts_dir)
+        server, port = engine.serve_influx_api(table)
         try:
             q = urllib.parse.quote(
                 "SELECT count(value) AS n FROM points GROUP BY plc_ip"

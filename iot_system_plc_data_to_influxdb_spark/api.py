@@ -123,9 +123,12 @@ class IoTEngine:
         return decode_readings(raw, strict_reference=strict_reference)
 
     def age_off(self, table_path: str, cutoff: _dt.date) -> int:
+        """Retention: remove the points older than ``cutoff`` from the
+        table, rewriting only the partitions that hold them; returns
+        how many were removed."""
         from .operators.retention import drop_expired
 
-        return drop_expired(table_path, cutoff)
+        return drop_expired(self.spark, table_path, cutoff)
 
     # -- InfluxQL front door (what Grafana speaks) ---------------------
     @property

@@ -2402,7 +2402,7 @@ def _show_base(
         return spark.createDataFrame([(SHOW_DATABASE_NAME,)], "name string")
     if what == "RETENTION POLICIES":
         # the InfluxDB 1.x default policy row (duration 0s = infinite);
-        # actual age-off in this engine is the partition-drop operator
+        # actual age-off in this engine is IoTEngine.age_off
         spark = points.sparkSession
         return spark.createDataFrame(
             [("autogen", "0s", "0s", 1, True)],
@@ -2566,6 +2566,14 @@ _DELETE_RE = re.compile(
     r"|DROP\s+MEASUREMENT\s+(?P<drop>[\w.\"]+))\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+
+
+def delete_measurement(query: str) -> str:
+    """The measurement (``plc_ip``) a DELETE / DROP statement names."""
+    m = _DELETE_RE.match(query.strip().rstrip(";"))
+    if not m:
+        raise InfluxQLError(f"unparseable DELETE/DROP statement: {query!r}")
+    return _unquote(m.group("from") or m.group("sfrom") or m.group("drop"))
 
 
 def compile_delete(query: str, points: DataFrame) -> DataFrame:

@@ -1,14 +1,14 @@
-"""Retention policy as physical partition management (SURVEY.md B25).
+"""Retention, deletes and compaction on the points table (SURVEY.md B25).
 
-The reference gets retention from InfluxDB ("It also has retention
-policy", README.md:3). On a date-partitioned parquet points table the
-same policy is partition arithmetic:
-
-- query-time age-off: a partition-pruned filter (b25 query) — old data
-  is never read;
-- storage age-off: drop partition directories older than the cutoff —
-  O(#partitions) metadata work, no data scan, which is the only
-  retention that matters at 100 TB.
+The reference gets deletes and its retention policy from InfluxDB
+(README.md:3). Here the points table has one layout, written by
+streaming/sinks.write_points_batch: ``plc_ip=<ip>/part-*.parquet`` with
+a ``batch_id`` column. Every change to stored rows is one staged
+partition rewrite (``rewrite_partition``): storage age-off
+(``drop_expired``) rewrites the partitions holding expired rows, the
+gateway's DELETE / DROP the one partition it names, compaction
+(``compact_all``) a partition's small files into few. Query-time
+age-off stays a pushed-down ts filter (the b25 query).
 """
 
 from __future__ import annotations
@@ -16,19 +16,20 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import shutil
+import urllib.parse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: name prefixes Spark's file listing skips
+_HIDDEN = ("_", ".")
 
-def write_points_partitioned(points: DataFrame, path: str) -> None:
-    """points(ts, plc_ip, alias, value) → parquet partitioned by
-    (plc_ip, date) — the db-per-PLC layout plus retention axis."""
-    (
-        points.withColumn("date", F.date_format("ts", "yyyy-MM-dd"))
-        .write.mode("append")
-        .partitionBy("plc_ip", "date")
-        .parquet(path)
+
+def holds_data(path: str) -> bool:
+    """True if ``path`` is a directory holding anything a parquet read
+    of it would see."""
+    return os.path.isdir(path) and any(
+        not e.startswith(_HIDDEN) for e in os.listdir(path)
     )
 
 
@@ -96,34 +97,6 @@ def read_points_for_plc(
     return df
 
 
-def expired_partitions(path: str, cutoff: _dt.date) -> list[str]:
-    out = []
-    for plc_dir in sorted(os.listdir(path)):
-        if not plc_dir.startswith("plc_ip="):
-            continue
-        full = os.path.join(path, plc_dir)
-        for date_dir in sorted(os.listdir(full)):
-            if not date_dir.startswith("date="):
-                continue
-            d = _dt.date.fromisoformat(date_dir.split("=", 1)[1])
-            if d < cutoff:
-                out.append(os.path.join(full, date_dir))
-    return out
-
-
-def drop_expired(path: str, cutoff: _dt.date) -> int:
-    """Remove partitions strictly older than cutoff; returns the count.
-
-    Local-FS implementation; on object storage this is the same listing
-    plus bulk delete (or `ALTER TABLE DROP PARTITION` with a metastore
-    / `DELETE WHERE` on Delta — still metadata-only).
-    """
-    dropped = expired_partitions(path, cutoff)
-    for p in dropped:
-        shutil.rmtree(p)
-    return len(dropped)
-
-
 def write_training_shards(
     docs: "DataFrame", packed: "DataFrame", path: str
 ) -> None:
@@ -132,7 +105,7 @@ def write_training_shards(
     produces ``packed``). A trainer pulling one shard reads ONE
     partition directory — partition pruning, no corpus scan — and a
     whole-lang epoch reads only that lang's subtree. Same layout idea
-    as the (plc_ip, date) points archive above.
+    as the (plc_bucket, date) points archive above.
 
     ``packed`` bins are shard-local (two-level packing, bounded pandas
     groups); the partition key folds (shard, bin_id) into one globally
@@ -163,20 +136,84 @@ def write_training_shards(
 
 
 def partition_file_counts(path: str) -> dict[str, int]:
-    """partition-dir (relative) → parquet file count, for any 2-level
-    hive layout written by the functions above."""
+    """leaf partition dir (relative, ``k=v`` names at any depth) →
+    parquet file count, for every hive layout written in this package."""
     out: dict[str, int] = {}
-    for lvl1 in sorted(os.listdir(path)):
-        full1 = os.path.join(path, lvl1)
-        if "=" not in lvl1 or not os.path.isdir(full1):
-            continue
-        for lvl2 in sorted(os.listdir(full1)):
-            full2 = os.path.join(full1, lvl2)
-            if "=" not in lvl2 or not os.path.isdir(full2):
-                continue
-            n = sum(1 for f in os.listdir(full2) if f.endswith(".parquet"))
-            out[f"{lvl1}/{lvl2}"] = n
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(
+            d for d in dirs if "=" in d and not d.startswith(_HIDDEN)
+        )
+        n = sum(f.endswith(".parquet") for f in files)
+        if n and root != path:
+            out[os.path.relpath(root, path)] = n
     return out
+
+
+_TMP, _OLD = ".rewrite_tmp", ".rewrite_old"
+
+
+def staging_paths(full: str) -> tuple[str, str]:
+    """(staging, old) copies of a partition dir during its rewrite:
+    hidden siblings, so a reader of the table never sees them."""
+    parent, leaf = os.path.split(os.path.normpath(full))
+    return (
+        os.path.join(parent, f".{leaf}{_TMP}"),
+        os.path.join(parent, f".{leaf}{_OLD}"),
+    )
+
+
+def rewrite_partition(
+    spark, path: str, rel: str, keep=None, n_files: int | None = None
+) -> int:
+    """Replace partition ``rel`` of the table at ``path`` with
+    ``keep(rows)`` (all rows if None; ``rows`` carries the partition
+    columns), coalesced to ``n_files`` files if given. Returns the rows
+    it holds afterwards; a partition left with none is removed.
+
+    Write staging → rename live to old → staging to live → drop old
+    (overwriting in place would delete the files the lazy ``rows``
+    still reads); ``recover_interrupted_compactions`` repairs a crash
+    at any step. O(partition), never O(table); a writer appending to
+    this partition during the rewrite would lose its files."""
+    full = os.path.normpath(os.path.join(path, rel))
+    staging, old = staging_paths(full)
+    rows = spark.read.option("basePath", path).parquet(full)
+    out = (keep(rows) if keep else rows).drop(
+        *[seg.split("=", 1)[0] for seg in rel.split(os.sep) if "=" in seg]
+    )
+    if n_files:
+        out = out.coalesce(n_files)
+    out.write.mode("overwrite").parquet(staging)
+    n = spark.read.parquet(staging).count()
+    os.rename(full, old)
+    os.rename(staging, full)
+    shutil.rmtree(old)
+    if not n and "=" in rel:  # an unpartitioned table keeps its root
+        shutil.rmtree(full)
+    return n
+
+
+def drop_expired(spark, path: str, cutoff: _dt.date) -> int:
+    """Storage age-off: remove the rows older than ``cutoff`` (ts before
+    its midnight, session time zone); returns how many. One scan (ts
+    row-group stats skip newer data) finds the partitions holding such
+    rows; only those are rewritten, keeping their newer rows."""
+    cut = F.lit(cutoff).cast("timestamp")
+    fresh = F.col("ts").isNull() | (F.col("ts") >= cut)
+    expired: dict[str, int] = {}
+    for r in (
+        spark.read.parquet(path)
+        .filter(F.col("ts") < cut)
+        .groupBy(F.input_file_name().alias("f"))
+        .count()
+        .collect()
+    ):
+        f = urllib.parse.unquote(urllib.parse.urlparse(r["f"]).path)
+        rel = os.path.relpath(os.path.dirname(f), path)
+        expired[rel] = expired.get(rel, 0) + r["count"]
+    for rel in sorted(expired):
+        rewrite_partition(spark, path, rel, lambda rows: rows.filter(fresh))
+    return sum(expired.values())
 
 
 def compact_partition(
@@ -188,16 +225,9 @@ def compact_partition(
     """Rewrite ONE partition directory's many small files into
     ⌈bytes/target⌉ files. Returns (files_before, files_after).
 
-    Streaming sinks write a file per micro-batch per partition — after
-    a day a (plc_bucket, date) directory holds thousands of KB-sized
-    files and scan cost is dominated by file-open overhead. Compaction
-    is the standard nightly repair: read the one partition, coalesce to
-    the target file count, write to a staging dir, atomically swap.
-    Only the partition being compacted is touched (O(partition), never
-    O(table)), so a fleet compacts yesterday's partitions while today's
-    keep streaming — exactly how Delta/Iceberg OPTIMIZE schedules, done
-    here as plain directory arithmetic.
-    """
+    Streaming sinks write a file per micro-batch per partition, so scan
+    cost drifts to file-open overhead; this is the nightly repair
+    (Delta/Iceberg OPTIMIZE) as one ``rewrite_partition``."""
     full = os.path.join(path, partition_rel)
     files = [f for f in os.listdir(full) if f.endswith(".parquet")]
     before = len(files)
@@ -205,23 +235,8 @@ def compact_partition(
     n_out = max(1, -(-total_bytes // target_bytes))  # ceil
     if n_out >= before:
         return before, before  # already compact
-    staging = full + ".compact_tmp"
-    (
-        spark.read.parquet(full)
-        .coalesce(int(n_out))
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    old = full + ".compact_old"
-    os.rename(full, old)
-    os.rename(staging, full)
-    shutil.rmtree(old)
-    # drop _SUCCESS marker noise so the dir stays a clean partition
-    marker = os.path.join(full, "_SUCCESS")
-    if os.path.exists(marker):
-        os.remove(marker)
-    after = sum(1 for f in os.listdir(full) if f.endswith(".parquet"))
-    return before, after
+    rewrite_partition(spark, path, partition_rel, n_files=int(n_out))
+    return before, sum(1 for f in os.listdir(full) if f.endswith(".parquet"))
 
 
 def compact_all(
@@ -236,35 +251,29 @@ def compact_all(
 
 
 def recover_interrupted_compactions(path: str) -> dict[str, str]:
-    """Repair partitions left inconsistent by a compaction crash.
+    """Repair partitions left inconsistent by a crash inside
+    ``rewrite_partition``'s swap (compaction, DELETE or age-off).
 
-    The swap sequence is: write `.compact_tmp` → rename live dir to
-    `.compact_old` → rename tmp to live → delete old. A crash can
-    leave (a) an orphan `.compact_tmp` (crash before the swap — the
-    live dir is intact: drop the tmp), or (b) a `.compact_old` with no
-    live dir (crash between the renames: restore the old dir) or with
-    a live dir (crash before cleanup: the swap completed, drop the
-    old). Run this on startup, the way a WAL is replayed.
-    """
+    A crash leaves (a) an orphan staging copy (the live dir is intact:
+    drop it), or (b) an old copy with no live dir (crash between the
+    renames: restore it) or with one (the swap completed: drop the
+    old). Run this on startup, the way a WAL is replayed."""
     actions: dict[str, str] = {}
     for root, dirs, _files in os.walk(path):
         for d in list(dirs):
             full = os.path.join(root, d)
-            if d.endswith(".compact_tmp"):
+            if not (d.startswith(".") and d.endswith((_TMP, _OLD))):
+                continue
+            dirs.remove(d)
+            live = os.path.join(root, d[1:].rsplit(".", 1)[0])
+            rel = os.path.relpath(full, path)
+            if d.endswith(_TMP):
                 shutil.rmtree(full)
-                actions[os.path.relpath(full, path)] = "dropped orphan tmp"
-                dirs.remove(d)
-            elif d.endswith(".compact_old"):
-                live = full[: -len(".compact_old")]
-                if os.path.exists(live):
-                    shutil.rmtree(full)
-                    actions[os.path.relpath(full, path)] = (
-                        "swap had completed; dropped old"
-                    )
-                else:
-                    os.rename(full, live)
-                    actions[os.path.relpath(full, path)] = (
-                        "restored interrupted swap"
-                    )
-                dirs.remove(d)
+                actions[rel] = "dropped orphan tmp"
+            elif os.path.exists(live):
+                shutil.rmtree(full)
+                actions[rel] = "swap had completed; dropped old"
+            else:
+                os.rename(full, live)
+                actions[rel] = "restored interrupted swap"
     return actions

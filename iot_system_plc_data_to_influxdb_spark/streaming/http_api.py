@@ -13,8 +13,10 @@ switches storage engines without touching a dashboard or a writer:
   ``epoch=ms|s|u|ns`` is honored; default timestamps are RFC3339,
   like InfluxDB.
 - ``/write``: line protocol → parse_line_protocol (the native-
-  expression parser) → appended to the points directory in the
-  engine's long/narrow layout.
+  expression parser) → appended through the points sink's writer
+  (streaming/sinks.write_points_batch), so the table keeps one layout;
+  a DELETE / DROP over ``/query`` rewrites only the ``plc_ip=``
+  partition it names (operators/retention.rewrite_partition).
 - ``/ping``: 204, X-Influxdb-Version — the datasource health check.
 
 Scope: a dashboard/ingest GATEWAY. Results collect on the gateway
@@ -27,6 +29,7 @@ container, and none needed for the protocol.
 from __future__ import annotations
 
 import json
+import os
 import threading
 import urllib.parse
 from dataclasses import dataclass, field
@@ -40,6 +43,12 @@ from pyspark.sql.types import StructType
 # rebinds a compiler entry point on the module (to wrap each compile)
 # reaches every statement this gateway runs.
 from ..functions import influxql
+from ..operators.retention import holds_data, rewrite_partition
+from . import sinks
+
+#: ``batch_id`` of the rows /write appends: they come from no stream
+#: micro-batch (stream batch ids start at 0)
+WRITE_BATCH_ID = -1
 
 
 def _json_cell(v, epoch: str | None):
@@ -296,10 +305,24 @@ class InfluxAPI:
                 "measurements" if "MEASUREMENTS" in up else "results",
             )
         if up.startswith(("DELETE", "DROP")):
-            kept = influxql.compile_delete(stmt, resolve(None))
-            if write_dir:
-                self._rewrite_points(kept)
-            return StatementResult(kept, ack=True)
+            if not write_dir:
+                return StatementResult(
+                    influxql.compile_delete(stmt, resolve(None)), ack=True
+                )
+            m = influxql.delete_measurement(stmt)
+            for d in os.listdir(write_dir):
+                # only the plc_ip= partition the statement names changes
+                key, _, value = d.partition("=")
+                if key == "plc_ip" and urllib.parse.unquote(value) == m:
+                    rewrite_partition(
+                        self.spark,
+                        write_dir,
+                        d,
+                        keep=lambda rows: influxql.compile_delete(stmt, rows),
+                    )
+            return StatementResult(
+                self.spark.createDataFrame([], StructType()), ack=True
+            )
         target, res = self._select(stmt, resolve, rollup, rollup_every_s)
         if target is not None and write_dir:
             res.df.write.mode("append").parquet(f"{write_dir}__{target}")
@@ -408,7 +431,6 @@ class InfluxAPI:
         Returns {cq_name: rows_appended}.
         """
         import datetime as _dt
-        import os
 
         if not self.write_dir:
             # the target path is derived from write_dir — without one
@@ -443,9 +465,7 @@ class InfluxAPI:
             keys = ["time"] + [
                 tag for tag in q.group_tags if tag in df.columns
             ]
-            if os.path.isdir(target_path) and any(
-                not e.startswith(("_", ".")) for e in os.listdir(target_path)
-            ):
+            if holds_data(target_path):
                 existing = self.spark.read.parquet(target_path).select(*keys)
                 df = df.join(existing, keys, "left_anti")
             df = df.cache()
@@ -456,27 +476,10 @@ class InfluxAPI:
             appended[spec.name] = n
         return appended
 
-    def _rewrite_points(self, kept: DataFrame) -> None:
-        """Materialize the post-DELETE survivors to a staging dir and
-        atomically rename-swap into place.
-
-        mode('overwrite') straight onto ``write_dir`` would delete the
-        source files while ``kept`` is still lazily reading them — the
-        job dies with FILE_NOT_EXIST and the points directory is gone.
-        Same swap sequence as retention.compact_partition: write
-        ``.delete_tmp`` → rename live → tmp-to-live → drop old.
-        """
-        import os
-        import shutil
-
-        staging = self.write_dir + ".delete_tmp"
-        kept.write.mode("overwrite").parquet(staging)
-        old = self.write_dir + ".delete_old"
-        os.rename(self.write_dir, old)
-        os.rename(staging, self.write_dir)
-        shutil.rmtree(old)
-
     def write(self, body: str, precision: str = "ns") -> int:
+        """/write: append line-protocol points to ``write_dir`` with
+        the sink's own writer (same columns and types as acquisition
+        rows, ``batch_id`` = ``WRITE_BATCH_ID``); returns the count."""
         from .influx import parse_line_protocol
 
         lines = self.spark.createDataFrame(
@@ -494,7 +497,8 @@ class InfluxAPI:
         )
         n = pts.count()
         if self.write_dir:
-            pts.write.mode("append").parquet(self.write_dir)
+            # looked up on the module per call, like start_points_query
+            sinks.write_points_batch(pts, WRITE_BATCH_ID, self.write_dir)
         return n
 
 

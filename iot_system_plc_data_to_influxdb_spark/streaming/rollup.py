@@ -29,10 +29,11 @@ partition.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.retention import holds_data
+from .sinks import _start_append
 
 
 ROLLUP_COLS = [
@@ -91,34 +92,17 @@ def start_continuous_downsample(
     trigger_interval: str = "0 seconds",
 ):
     """The CQ itself: closed windows append into the rollup table."""
-    agg = _with_avg(
-        points.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", every).alias("w"), "plc_ip", "alias")
-        .agg(*_agg_exprs())
-        .select(
-            F.col("w.start").alias("bucket_start"),
-            "plc_ip",
-            "alias",
-            "n",
-            "min_value",
-            "max_value",
-            "sum_value",
-        )
+    return _start_append(
+        batch_downsample(points.withWatermark("ts", watermark), every=every),
+        checkpoint_dir,
+        lambda df, bid: _write_rollup_batch(df, bid, table_path),
+        trigger_interval,
+        available_now,
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda df, bid: _write_rollup_batch(df, bid, table_path))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
 
 
 def batch_downsample(points: DataFrame, every: str = "5 minutes") -> DataFrame:
-    """Batch twin of the CQ aggregation (same output schema)."""
+    """The CQ aggregation; the stream runs it over watermarked points."""
     return _with_avg(
         points.groupBy(F.window("ts", every).alias("w"), "plc_ip", "alias")
         .agg(*_agg_exprs())
@@ -148,9 +132,7 @@ def backfill_downsample(
     the number of rows written.
     """
     fresh = batch_downsample(points, every=every)
-    if os.path.isdir(table_path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(table_path)
-    ):
+    if holds_data(table_path):
         existing = spark.read.parquet(table_path).select(
             "bucket_start", "plc_ip", "alias"
         )
@@ -185,9 +167,7 @@ def resample_downsample(
     """
     fresh = batch_downsample(points, every=every).cache()
     try:
-        if os.path.isdir(table_path) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(table_path)
-        ):
+        if holds_data(table_path):
             existing = spark.read.parquet(table_path).select(
                 "bucket_start", "plc_ip", "alias", F.col("n").alias("old_n")
             )
@@ -253,8 +233,7 @@ def route_downsample(
     if (
         rollup_path
         and query_every_s % rollup_every_s == 0
-        and os.path.isdir(rollup_path)
-        and any(not e.startswith(("_", ".")) for e in os.listdir(rollup_path))
+        and holds_data(rollup_path)
     ):
         return reaggregate_rollup(
             spark.read.parquet(rollup_path), f"{query_every_s} seconds"

@@ -35,8 +35,10 @@ INTERVAL_TRIGGERS = {
 
 
 def write_points_batch(batch_df: DataFrame, batch_id: int, table_path: str) -> None:
-    """foreachBatch hook: idempotent micro-batch append, partitioned by
-    plc_ip (db-per-PLC) — at scale also by date for retention pruning."""
+    """foreachBatch hook: the points table's one writer (the /write
+    gateway appends through it too). Appends the micro-batch,
+    partitioned by plc_ip (db-per-PLC), each row tagged with batch_id.
+    Not idempotent: a replayed batch appends its rows again."""
     (
         batch_df.withColumn("batch_id", F.lit(batch_id))
         .write.mode("append")

@@ -152,3 +152,58 @@ def test_serve_influx_api_facade(spark, tmp_path):
         assert out["results"][0]["series"][0]["values"] == [[2.0]]
     finally:
         server.shutdown()
+
+
+def test_age_off_removes_exactly_the_expired_rows(spark, tmp_path):
+    """age_off on the table the acquisition sink writes (plc_ip=
+    partitions, no date level) removes exactly the rows older than the
+    cutoff: a partition left empty is removed, one without expired rows
+    keeps its files byte for byte."""
+    import datetime as dt
+
+    from iot_system_plc_data_to_influxdb_spark.streaming.sinks import (
+        write_points_batch,
+    )
+
+    def pts(rows):
+        return spark.createDataFrame(
+            rows, "ts_s string, plc_ip string, alias string, value double"
+        ).select(
+            F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value"
+        )
+
+    path = str(tmp_path / "points")
+    write_points_batch(
+        pts(
+            [
+                ("2024-01-01T12:00:00", "10.0.0.1", "t", 1.0),
+                ("2024-01-02T23:59:59", "10.0.0.1", "t", 2.0),
+                ("2024-01-03T00:00:00", "10.0.0.1", "t", 3.0),
+            ]
+        ),
+        0,
+        path,
+    )
+    write_points_batch(
+        pts(
+            [
+                ("2024-01-01T00:00:00", "10.0.0.2", "t", 4.0),
+                ("2024-01-05T00:00:00", "10.0.0.3", "t", 5.0),
+            ]
+        ),
+        1,
+        path,
+    )
+    keep = os.path.join(path, "plc_ip=10.0.0.3")
+    files = {f: open(os.path.join(keep, f), "rb").read() for f in os.listdir(keep)}
+
+    assert IoTEngine(spark).age_off(path, dt.date(2024, 1, 3)) == 3
+    got = sorted(
+        (r["plc_ip"], r["value"], r["batch_id"])
+        for r in spark.read.parquet(path).collect()
+    )
+    assert got == [("10.0.0.1", 3.0, 0), ("10.0.0.3", 5.0, 1)]
+    assert not os.path.exists(os.path.join(path, "plc_ip=10.0.0.2"))
+    assert {
+        f: open(os.path.join(keep, f), "rb").read() for f in os.listdir(keep)
+    } == files

@@ -4,6 +4,7 @@ line-protocol ingest, /ping health check — over real HTTP."""
 from __future__ import annotations
 
 import json
+import os
 import urllib.parse
 import urllib.request
 
@@ -14,6 +15,7 @@ from iot_system_plc_data_to_influxdb_spark.streaming.http_api import (
     InfluxAPI,
     serve,
 )
+from iot_system_plc_data_to_influxdb_spark.streaming.sinks import write_points_batch
 
 
 @pytest.fixture(scope="module")
@@ -28,7 +30,7 @@ def gateway(spark, tmp_path_factory):
     ).select(
         F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value"
     )
-    pts.write.mode("overwrite").parquet(write_dir)
+    write_points_batch(pts, 0, write_dir)
 
     def get_table(_measurement):
         return spark.read.parquet(write_dir)
@@ -174,7 +176,7 @@ def test_delete_roundtrip(spark, tmp_path):
     ).select(
         F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value"
     )
-    pts.write.mode("overwrite").parquet(write_dir)
+    write_points_batch(pts, 0, write_dir)
     api = InfluxAPI(
         spark, lambda _m: spark.read.parquet(write_dir), write_dir=write_dir
     )
@@ -192,10 +194,10 @@ def test_delete_roundtrip(spark, tmp_path):
         assert after.count() == 15
         assert after.filter(F.col("plc_ip") == "plcA").count() == 5
         # directory is clean — no staging/old residue
-        import os
-
-        assert not os.path.exists(write_dir + ".delete_tmp")
-        assert not os.path.exists(write_dir + ".delete_old")
+        assert not any(
+            e.endswith((".rewrite_tmp", ".rewrite_old"))
+            for e in os.listdir(write_dir)
+        )
         # DROP MEASUREMENT goes through the same safe path
         q2 = urllib.parse.quote("DROP MEASUREMENT plcB")
         status2, _b = _get(f"{base}/query?q={q2}")
@@ -203,6 +205,108 @@ def test_delete_roundtrip(spark, tmp_path):
         assert spark.read.parquet(write_dir).count() == 5
     finally:
         server.shutdown()
+
+
+def _points(spark, rows):
+    return spark.createDataFrame(
+        rows, "ts_s string, plc_ip string, alias string, value double"
+    ).select(
+        F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value"
+    )
+
+
+def _files(d: str) -> dict:
+    return {f: open(os.path.join(d, f), "rb").read() for f in os.listdir(d)}
+
+
+def test_write_lands_in_the_sink_table(spark, tmp_path):
+    """serve_influx_api over a table the acquisition sink wrote: a /write
+    point for a new measurement lands in the sink's layout (its own
+    plc_ip= partition, the sink's columns and types, batch_id -1) and
+    /query counts it."""
+    from iot_system_plc_data_to_influxdb_spark.api import IoTEngine
+
+    path = str(tmp_path / "points")
+    write_points_batch(
+        _points(spark, [("2024-01-01T00:00:00", "10.0.0.1", "temp", 1.0)]), 0, path
+    )
+    server, port = IoTEngine(spark).serve_influx_api(path)
+    try:
+        base = f"http://127.0.0.1:{port}"
+        req = urllib.request.Request(
+            f"{base}/write?db=iot",
+            data=b"10.0.0.9 rpm=7 1704067200000000000",
+            method="POST",
+        )
+        with urllib.request.urlopen(req, timeout=60) as r:
+            assert r.status == 204
+        q = urllib.parse.quote(
+            "SELECT count(value) FROM points WHERE \"plc_ip\" = '10.0.0.9'"
+        )
+        _status, body = _get(f"{base}/query?q={q}")
+        assert json.loads(body)["results"][0]["series"][0]["values"] == [[1]]
+    finally:
+        server.shutdown()
+    sink = spark.read.parquet(os.path.join(path, "plc_ip=10.0.0.1"))
+    wire = spark.read.parquet(os.path.join(path, "plc_ip=10.0.0.9"))
+    assert wire.schema == sink.schema
+    assert [r["batch_id"] for r in wire.collect()] == [-1]
+
+
+def test_delete_rewrites_only_the_named_partition(spark, tmp_path):
+    """DELETE through the gateway rewrites the one plc_ip= partition it
+    names: the other partitions' files stay byte-identical, and a later
+    sink append reads back together with every survivor."""
+    from iot_system_plc_data_to_influxdb_spark.api import IoTEngine
+
+    path = str(tmp_path / "points")
+    write_points_batch(
+        _points(
+            spark,
+            [
+                ("2024-01-01T00:00:00", "10.0.0.1", "t", 1.0),
+                ("2024-01-01T01:00:00", "10.0.0.1", "t", 2.0),
+                ("2024-01-01T02:00:00", "10.0.0.1", "t", 3.0),
+                ("2024-01-01T00:00:00", "10.0.0.2", "t", 4.0),
+            ],
+        ),
+        0,
+        path,
+    )
+    other = os.path.join(path, "plc_ip=10.0.0.2")
+    untouched = _files(other)
+    server, port = IoTEngine(spark).serve_influx_api(path)
+    try:
+        q = urllib.parse.quote(
+            "DELETE FROM \"10.0.0.1\" WHERE time < '2024-01-01T01:00:00'"
+        )
+        _status, body = _get(f"http://127.0.0.1:{port}/query?q={q}")
+        assert json.loads(body)["results"][0] == {"statement_id": 0}
+    finally:
+        server.shutdown()
+    write_points_batch(
+        _points(
+            spark,
+            [
+                ("2024-01-01T03:00:00", "10.0.0.1", "t", 5.0),
+                ("2024-01-01T03:00:00", "10.0.0.3", "t", 6.0),
+            ],
+        ),
+        1,
+        path,
+    )
+    got = sorted(
+        (r["plc_ip"], r["value"], r["batch_id"])
+        for r in spark.read.parquet(path).collect()
+    )
+    assert got == [
+        ("10.0.0.1", 2.0, 0),
+        ("10.0.0.1", 3.0, 0),
+        ("10.0.0.1", 5.0, 1),
+        ("10.0.0.2", 4.0, 0),
+        ("10.0.0.3", 6.0, 1),
+    ]
+    assert _files(other) == untouched
 
 
 def test_epoch_us_exact(gateway):
@@ -374,12 +478,16 @@ def test_cq_execute_end_to_end(spark, tmp_path):
 
     write_dir = str(tmp_path / "points")
     # seed one row so the points measurement exists for /query
-    spark.createDataFrame(
-        [("2024-03-01T00:10:00", "plc1", "temp", 1.0)],
-        "ts_s string, plc_ip string, alias string, value double",
-    ).select(
-        F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value"
-    ).write.mode("overwrite").parquet(write_dir)
+    write_points_batch(
+        spark.createDataFrame(
+            [("2024-03-01T00:10:00", "plc1", "temp", 1.0)],
+            "ts_s string, plc_ip string, alias string, value double",
+        ).select(
+            F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value"
+        ),
+        0,
+        write_dir,
+    )
 
     def get_table(m):
         if m and os.path.isdir(f"{write_dir}__{m}"):

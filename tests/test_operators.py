@@ -1,5 +1,5 @@
-"""Operator-level tests: salted aggregation equivalence, partition-drop
-retention."""
+"""Operator-level tests: salted aggregation equivalence, age-off
+retention on the sink's points layout."""
 
 import datetime
 import os
@@ -8,14 +8,12 @@ import tempfile
 from pyspark.sql import functions as F
 
 from iot_system_plc_data_to_influxdb_spark.catalog import t
-from iot_system_plc_data_to_influxdb_spark.operators.retention import (
-    drop_expired,
-    write_points_partitioned,
-)
+from iot_system_plc_data_to_influxdb_spark.operators.retention import drop_expired
 from iot_system_plc_data_to_influxdb_spark.operators.skew import (
     salted_aggregate,
     salted_self_join_pairs,
 )
+from iot_system_plc_data_to_influxdb_spark.streaming.sinks import write_points_batch
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -101,18 +99,21 @@ def test_retention_partition_drop(spark):
     )
     with tempfile.TemporaryDirectory() as tmp:
         path = os.path.join(tmp, "points")
-        write_points_partitioned(ev, path)
+        write_points_batch(ev, 0, path)
         before = spark.read.parquet(path).count()
         assert before == ev.count()
-        n = drop_expired(path, datetime.date(2024, 1, 3))
+        n = drop_expired(spark, path, datetime.date(2024, 1, 3))
         assert n > 0
         kept = spark.read.parquet(path)
         assert kept.count() < before
-        # partition values are inferred as DateType
-        assert kept.select(F.min("date")).first()[0] >= datetime.date(2024, 1, 3)
-        # age-off is partition pruning: no pre-cutoff dates remain
+        assert n == before - kept.count()
+        assert kept.select(F.min(F.to_date("ts"))).first()[0] >= datetime.date(
+            2024, 1, 3
+        )
+        # no pre-cutoff dates remain
         assert (
-            kept.filter(F.col("date") < F.lit("2024-01-03").cast("date")).count() == 0
+            kept.filter(F.to_date("ts") < F.lit("2024-01-03").cast("date")).count()
+            == 0
         )
 
 

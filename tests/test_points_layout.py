@@ -181,15 +181,43 @@ def test_compaction_shrinks_files_preserves_rows(spark, tmp_path):
     assert one.count() == one.select("plc_ip").na.drop().count()
 
 
+def test_compaction_covers_the_sink_layout(spark, tmp_path):
+    """The acquisition sink's one-level plc_ip= table compacts too: each
+    partition's per-batch files become one, rows and batch ids intact."""
+    from iot_system_plc_data_to_influxdb_spark.operators.retention import (
+        compact_all,
+        partition_file_counts,
+    )
+    from iot_system_plc_data_to_influxdb_spark.streaming.sinks import (
+        write_points_batch,
+    )
+
+    base = str(tmp_path / "pts")
+    pts = spark.createDataFrame(
+        [(f"10.0.0.{i % 2}", "t", float(i), f"2024-01-01T00:00:{i:02d}") for i in range(12)],
+        "plc_ip string, alias string, value double, ts_s string",
+    ).select(F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value")
+    for bid in range(3):
+        write_points_batch(pts.filter(F.col("value") % 3 == bid), bid, base)
+    rows = sorted(spark.read.parquet(base).collect())
+    assert set(partition_file_counts(base)) == {"plc_ip=10.0.0.0", "plc_ip=10.0.0.1"}
+    assert min(partition_file_counts(base).values()) > 1
+
+    compact_all(spark, base)
+    assert set(partition_file_counts(base).values()) == {1}
+    assert sorted(spark.read.parquet(base).collect()) == rows
+
+
 def test_compaction_crash_recovery(spark, tmp_path):
-    """Every crash window of the compaction swap is recoverable: orphan
-    tmp, missing live dir, completed-swap leftovers."""
+    """Every crash window of the partition-rewrite swap is recoverable:
+    orphan tmp, missing live dir, completed-swap leftovers."""
     import os
     import shutil
 
     from iot_system_plc_data_to_influxdb_spark.operators.retention import (
         partition_file_counts,
         recover_interrupted_compactions,
+        staging_paths,
         write_points_bucketed,
     )
 
@@ -204,13 +232,16 @@ def test_compaction_crash_recovery(spark, tmp_path):
     full = os.path.join(base, rel)
     rows_before = spark.read.parquet(base).count()
 
+    tmp, old = staging_paths(full)
     # (a) crash before swap: orphan tmp next to an intact live dir
-    shutil.copytree(full, full + ".compact_tmp")
+    shutil.copytree(full, tmp)
+    # ... which readers of the table do not see
+    assert spark.read.parquet(base).count() == rows_before
     # (b) crash between renames in a second partition: live dir missing
     rel2 = [r for r in counts if r != rel]
     if rel2:
         full2 = os.path.join(base, rel2[0])
-        os.rename(full2, full2 + ".compact_old")
+        os.rename(full2, staging_paths(full2)[1])
 
     actions = recover_interrupted_compactions(base)
     assert any("orphan tmp" in v for v in actions.values())
@@ -219,10 +250,10 @@ def test_compaction_crash_recovery(spark, tmp_path):
     # all partitions whole again, no stray dirs, rows intact
     assert spark.read.parquet(base).count() == rows_before
     for root, dirs, _ in os.walk(base):
-        assert not any(d.endswith((".compact_tmp", ".compact_old")) for d in dirs)
+        assert not any(d.endswith((".rewrite_tmp", ".rewrite_old")) for d in dirs)
 
     # (c) completed swap: old dir next to a live one
-    shutil.copytree(full, full + ".compact_old")
+    shutil.copytree(full, old)
     actions = recover_interrupted_compactions(base)
     assert any("dropped old" in v for v in actions.values())
     assert spark.read.parquet(base).count() == rows_before
