@@ -42,18 +42,17 @@ class IoTEngine:
 
     # -- acquisition (the daemon) -------------------------------------
     def readings_stream(self, polls_per_batch: int = 1) -> DataFrame:
-        """Raw reading stream from the PLC source (simulator backend in
-        CI; snap7 in production), restricted to active config tags."""
+        """Raw reading stream from the simulator backend of the PLC
+        source, restricted to active config tags, each PLC with its
+        config slot."""
         reader = (
             self.spark.readStream.format("plc_sim")
             .option("pollsPerBatch", str(polls_per_batch))
         )
         if self.config is not None:
-            tags = [
-                [r["plc_ip"], r["data_type"], r["data_area"], r["address"], r["alias"]]
-                for r in self.config.filter(F.col("active")).collect()
-            ]
-            reader = reader.option("tags", json.dumps(tags))
+            cols = ["plc_ip", "data_type", "data_area", "address", "alias", "slot"]
+            active = self.config.filter(F.col("active")).select(cols).collect()
+            reader = reader.option("tags", json.dumps([list(r) for r in active]))
         return reader.load()
 
     def start_acquisition(

@@ -1,32 +1,42 @@
 """PLC polling source (SURVEY.md A5) as a PySpark Python DataSource.
 
-The reference polls Siemens S7 PLC memory via snap7 inside hand-rolled
-process/thread loops (Linux/InfluxConnector2.py:142-160,197-209,282-302).
-Here the same acquisition is a Spark DataSource usable as
-``spark.read.format(...)`` (one poll sweep) or ``spark.readStream``
-(micro-batch per poll; offsets = poll sequence numbers, so restart
-semantics come from Spark checkpointing instead of the reference's
-reconnect loop, A14).
+The reference polls Siemens S7 PLC memory with snap7's ``read_area``,
+one connection per PLC, in hand-rolled process/thread loops
+(Linux/InfluxConnector2.py:142-160,197-209,282-302). Here that loop is
+one reader (batch: ``polls`` sweeps; stream: ``pollsPerBatch`` sweeps
+per micro-batch, offsets ``{"poll": n}``, so restarts come from Spark
+checkpointing, A14) over two backends that each sweep one PLC:
 
-Backends:
-- **simulator** (default): deterministic synthetic byte buffers per
-  (tag, poll) — CI has no PLC. Values follow simple per-type ramps so
-  tests can assert exact decodes.
-- **snap7**: the production backend, constructed lazily per partition
-  (one connection per PLC group, mirroring A3); import-gated because
-  the library is absent in this environment.
+- ``format("plc_sim")``: ``Simulator``, deterministic buffers from
+  ``simulate_buffer`` (CI has no PLC); poll n is stamped
+  2024-01-01T00:00Z + n seconds.
+- ``format("plc_s7")``: ``Snap7Poller``, ``read_area`` on the live PLC
+  (import-gated); a sweep is stamped with its wall-clock time, as
+  InfluxDB stamps the reference's points with server time.
 
-Partitioning: one input partition per PLC (A3's process-per-PLC), so a
-1000-PLC fleet fans out across executors with per-partition connection
-reuse — the scalable shape of the reference's multiprocessing scheme.
+Every ``ts`` is tz-aware UTC, so stored instants do not depend on the
+host's time zone. ``s7_read_plan`` maps each tag once, when the reader
+is built; a tag the reference skips is read by neither backend.
+
+Replay: a restarted stream re-reads its uncommitted batch through
+``readBetweenOffsets``. The simulator reproduces it exactly; a PLC
+cannot replay, so snap7 polls again and stores fresh values.
+
+One input partition per PLC (A3's process-per-PLC). A tag is
+``[plc_ip, data_type, data_area, address, alias]`` plus an optional
+slot, its config's ``<plc slot=…>`` (default 1, the reference's); each
+PLC connects with its slot, once per batch partition and once per
+stream reader.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
+import re
 import struct
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -80,104 +90,6 @@ def simulate_buffer(data_type: str, alias: str, poll: int) -> bytes:
     return b"\x00\x00"
 
 
-@dataclass
-class _PlcPartition(InputPartition):
-    plc_ip: str
-    polls: Sequence[int]
-
-
-class PLCSimBatchReader(DataSourceReader):
-    def __init__(self, options):
-        self.tags = _tags_from_options(options)
-        self.n_polls = int(options.get("polls", "3"))
-
-    def partitions(self):
-        ips = sorted({ip for ip, *_ in self.tags})
-        return [_PlcPartition(ip, range(self.n_polls)) for ip in ips]
-
-    def read(self, partition: _PlcPartition) -> Iterator[tuple]:
-        yield from _poll_rows(self.tags, partition.plc_ip, partition.polls)
-
-
-class PLCSimStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batch poll loop: offset = poll counter; each read() is one
-    sweep over every tag of every PLC (the reference's update_items)."""
-
-    def __init__(self, options):
-        self.tags = _tags_from_options(options)
-        self.polls_per_batch = int(options.get("pollsPerBatch", "1"))
-
-    def initialOffset(self):
-        return {"poll": 0}
-
-    def read(self, start: dict):
-        end = {"poll": start["poll"] + self.polls_per_batch}
-        return self.readBetweenOffsets(start, end), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        polls = range(start["poll"], end["poll"])
-        rows = []
-        for ip in sorted({ip for ip, *_ in self.tags}):
-            rows.extend(_poll_rows(self.tags, ip, polls))
-        return iter(rows)
-
-
-def _tags_from_options(options) -> list[tuple]:
-    raw = options.get("tags")
-    if raw:
-        return [tuple(t) for t in json.loads(raw)]
-    return list(DEFAULT_TAGS)
-
-
-def _address_numbers(address: str) -> list[int]:
-    import re
-
-    return [int(x) for x in re.findall(r"[0-9]+", address)]
-
-
-def _poll_rows(tags, plc_ip: str, polls) -> Iterator[tuple]:
-    import datetime
-
-    for poll in polls:
-        ts = datetime.datetime.utcfromtimestamp(_EPOCH_BASE + poll)
-        for ip, data_type, data_area, address, alias in tags:
-            if ip != plc_ip:
-                continue
-            nums = _address_numbers(address)
-            if data_area == "S7AreaDB":
-                bit_off = nums[2] if len(nums) > 2 else None
-            else:
-                bit_off = nums[1] if len(nums) > 1 else None
-            yield (
-                poll,
-                ts,
-                ip,
-                alias,
-                data_type,
-                data_area,
-                address,
-                bit_off,
-                simulate_buffer(data_type, alias, poll),
-            )
-
-
-class PLCSimDataSource(DataSource):
-    """format("plc_sim") — registered via spark.dataSource.register."""
-
-    @classmethod
-    def name(cls):
-        return "plc_sim"
-
-    def schema(self):
-        return READING_SCHEMA
-
-    def reader(self, schema: StructType):
-        return PLCSimBatchReader(self.options)
-
-    def simpleStreamReader(self, schema: StructType):
-        return PLCSimStreamReader(self.options)
-
-
 def try_snap7_backend():
     """Production backend hook: returns the snap7 module or None.
 
@@ -215,6 +127,10 @@ S7_WORD_LEN = {
 }
 
 
+def _address_numbers(address: str) -> list[int]:
+    return [int(x) for x in re.findall(r"[0-9]+", address)]
+
+
 def s7_read_plan(data_type: str, data_area: str, address: str):
     """Map one tag to its exact ``read_area`` argument tuple:
     ``(area_code, db_number, start, word_len, bit_off)`` — or ``None``
@@ -245,26 +161,67 @@ def s7_read_plan(data_type: str, data_area: str, address: str):
             return None
         db, start = 0, nums[0]
         bit = nums[1] if len(nums) > 1 else None
-    return (
-        S7_AREA_CODES[data_area],
-        db,
-        start,
-        S7_WORD_LEN[data_type],
-        bit,
-    )
+    return (S7_AREA_CODES[data_area], db, start, S7_WORD_LEN[data_type], bit)
+
+
+class PlcTag(NamedTuple):
+    """One readable tag of a PLC with its ``s7_read_plan`` tuple."""
+
+    data_type: str
+    data_area: str
+    address: str
+    alias: str
+    plan: tuple
+
+    def row(self, poll: int, ts, plc_ip: str, buf: bytes) -> tuple:
+        """This tag's READING_SCHEMA row."""
+        return (poll, ts, plc_ip, self.alias, self.data_type, self.data_area,
+                self.address, self.plan[4], buf)
+
+
+@dataclass
+class Plc(InputPartition):
+    """One PLC — one input partition: its slot and its readable tags."""
+
+    ip: str
+    slot: int
+    tags: list[PlcTag]
+
+
+def plan_fleet(tags) -> list[Plc]:
+    """Group tags ``[plc_ip, data_type, data_area, address, alias[,
+    slot]]`` by PLC (in ip order), keeping those ``s7_read_plan`` maps."""
+    plcs: dict[str, Plc] = {}
+    for ip, data_type, data_area, address, alias, *slot in tags:
+        plc = plcs.setdefault(ip, Plc(ip, int(slot[0]) if slot else 1, []))
+        plan = s7_read_plan(data_type, data_area, address)
+        if plan is not None:
+            plc.tags.append(PlcTag(data_type, data_area, address, alias, plan))
+    return [plcs[ip] for ip in sorted(plcs)]
+
+
+class Simulator:
+    """Simulator backend for ONE PLC: ``simulate_buffer`` per tag,
+    poll n stamped 2024-01-01T00:00Z + n seconds."""
+
+    def __init__(self, plc_ip: str, slot: int = 1):
+        self.plc_ip = plc_ip
+
+    def sweep(self, tags: list[PlcTag], poll: int) -> list[tuple]:
+        ts = datetime.datetime.fromtimestamp(_EPOCH_BASE + poll, datetime.timezone.utc)
+        return [
+            t.row(poll, ts, self.plc_ip, simulate_buffer(t.data_type, t.alias, poll))
+            for t in tags
+        ]
 
 
 class Snap7Poller:
-    """Production read loop for ONE PLC group (A3: one connection per
-    PLC). Batch-sweeps every tag via ``read_area`` with the reference's
+    """snap7 backend for ONE PLC (A3: one connection per PLC).
+    Batch-sweeps every tag via ``read_area`` with the reference's
     exact argument mapping; on any read error it disconnects,
     reconnects ``(ip, rack=0, slot)``, and abandons the rest of the
     sweep — the next sweep resumes — which is precisely the reference's
     recovery behavior (Linux/InfluxConnector2.py:187-195).
-
-    Designed to run inside one input partition of the DataSource (the
-    executor-side body of A5), so a 1000-PLC fleet holds one connection
-    per partition.
     """
 
     def __init__(self, plc_ip: str, slot: int = 1, snap7_module=None):
@@ -283,61 +240,104 @@ class Snap7Poller:
         self.client.disconnect()
         self.client.connect(self.plc_ip, 0, self.slot)
 
-    def sweep(self, tags, poll: int):
-        """One full pass over this PLC's tags → READING_SCHEMA rows."""
-        import datetime
-
-        ts = datetime.datetime.utcfromtimestamp(_EPOCH_BASE + poll)
+    def sweep(self, tags: list[PlcTag], poll: int) -> list[tuple]:
+        """One pass over this PLC's tags, stamped with the wall-clock
+        time the sweep starts."""
+        ts = datetime.datetime.now(datetime.timezone.utc)
         rows = []
-        for ip, data_type, data_area, address, alias in tags:
-            if ip != self.plc_ip:
-                continue
-            plan = s7_read_plan(data_type, data_area, address)
-            if plan is None:
-                continue
-            area, db, start, word_len, bit = plan
+        for tag in tags:
+            area, db, start, word_len, _bit = tag.plan
             try:
                 buf = bytes(self.client.read_area(area, db, start, word_len))
             except Exception:  # noqa: BLE001 — any comms error
                 self._reconnect()
                 break
-            rows.append(
-                (poll, ts, ip, alias, data_type, data_area, address, bit, buf)
-            )
+            rows.append(tag.row(poll, ts, self.plc_ip, buf))
         return rows
 
 
-class PLCSnap7BatchReader(DataSourceReader):
-    """Batch reader over live PLCs: one partition = one PLC = one
-    snap7 connection, ``polls`` sweeps each."""
+def _fleet_from_options(options) -> list[Plc]:
+    raw = options.get("tags")
+    return plan_fleet(json.loads(raw) if raw else DEFAULT_TAGS)
 
-    def __init__(self, options):
-        self.tags = _tags_from_options(options)
-        self.n_polls = int(options.get("polls", "1"))
-        self.slot = int(options.get("slot", "1"))
+
+class PLCBatchReader(DataSourceReader):
+    """``polls`` sweeps of every PLC, one partition (and one backend
+    connection) per PLC."""
+
+    def __init__(self, options, backend, default_polls: str):
+        self.plcs = _fleet_from_options(options)
+        self.backend = backend
+        self.n_polls = int(options.get("polls", default_polls))
 
     def partitions(self):
-        ips = sorted({ip for ip, *_ in self.tags})
-        return [_PlcPartition(ip, range(self.n_polls)) for ip in ips]
+        return self.plcs
 
-    def read(self, partition: _PlcPartition) -> Iterator[tuple]:
-        poller = Snap7Poller(partition.plc_ip, slot=self.slot)
-        for poll in partition.polls:
-            yield from poller.sweep(self.tags, poll)
+    def read(self, partition: Plc) -> Iterator[tuple]:
+        source = self.backend(partition.ip, partition.slot)
+        for poll in range(self.n_polls):
+            yield from source.sweep(partition.tags, poll)
 
 
-class PLCSnap7DataSource(DataSource):
-    """format("plc_s7") — the production backend (requires snap7)."""
+class PLCStreamReader(SimpleDataSourceStreamReader):
+    """Micro-batch poll loop: offset = poll counter; each batch is
+    ``pollsPerBatch`` sweeps of every PLC (the reference's
+    update_items). One backend per PLC lives across triggers; their
+    connections close with the reader's process, as Spark gives a
+    simple stream reader no stop hook."""
+
+    def __init__(self, options, backend):
+        self.plcs = _fleet_from_options(options)
+        self.backend = backend
+        self.polls_per_batch = int(options.get("pollsPerBatch", "1"))
+        self.sources = {}
+
+    def initialOffset(self):
+        return {"poll": 0}
+
+    def read(self, start: dict):
+        end = {"poll": start["poll"] + self.polls_per_batch}
+        return self.readBetweenOffsets(start, end), end
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        rows = []
+        for plc in self.plcs:
+            if plc.ip not in self.sources:
+                self.sources[plc.ip] = self.backend(plc.ip, plc.slot)
+            for poll in range(start["poll"], end["poll"]):
+                rows.extend(self.sources[plc.ip].sweep(plc.tags, poll))
+        return iter(rows)
+
+
+class PLCSimDataSource(DataSource):
+    """format("plc_sim") — the PLC source over the simulator backend."""
+
+    backend = Simulator
+    default_polls = "3"
 
     @classmethod
     def name(cls):
-        return "plc_s7"
+        return "plc_sim"
 
     def schema(self):
         return READING_SCHEMA
 
     def reader(self, schema: StructType):
-        return PLCSnap7BatchReader(self.options)
+        return PLCBatchReader(self.options, self.backend, self.default_polls)
+
+    def simpleStreamReader(self, schema: StructType):
+        return PLCStreamReader(self.options, self.backend)
+
+
+class PLCSnap7DataSource(PLCSimDataSource):
+    """format("plc_s7") — the same source over live PLCs (requires snap7)."""
+
+    backend = Snap7Poller
+    default_polls = "1"
+
+    @classmethod
+    def name(cls):
+        return "plc_s7"
 
 
 def register(spark) -> None:

@@ -1,4 +1,4 @@
-"""Points sink (SURVEY.md A12) + per-interval orchestration (A4/A13).
+"""Points sink (SURVEY.md A12) and acquisition pacing (A4/A13).
 
 The reference writes one HTTP POST per point to a per-PLC InfluxDB
 database (Linux/InfluxConnector2.py:176,107-109). Here the sink is a
@@ -8,30 +8,17 @@ whole-micro-batch writes instead of per-point requests (the anti-
 pattern SURVEY.md §4 flags). An InfluxDB-line-protocol writer would
 slot into the same hook where the HTTP client is available.
 
-Per-interval scheduling (A4/A13): the reference runs one thread per
-acquisition-interval group with sleep pacing
-(Linux/InfluxConnector2.py:85-94,177-209). Spark equivalent: one
-streaming query per distinct interval, each with
-``trigger(processingTime=...)`` — ``'min'`` maps to trigger(0) =
-free-running micro-batches, exactly the reference's unpaced loop.
+Pacing (A4/A13): the reference runs one thread per acquisition-interval
+group with sleep pacing (Linux/InfluxConnector2.py:85-94,177-209).
+Acquisition here does not pace by the config's interval: every query
+runs on one trigger (default ``0 seconds``, free-running micro-batches,
+the reference's unpaced ``'min'`` loop) whatever each tag's interval.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-INTERVAL_TRIGGERS = {
-    "min": "0 seconds",  # free-running (README.md:49, pacing at :177-186)
-    "1s": "1 seconds",
-    "2s": "2 seconds",
-    "5s": "5 seconds",
-    "10s": "10 seconds",
-    "60s": "60 seconds",
-    "300s": "300 seconds",
-}
 
 
 def write_points_batch(batch_df: DataFrame, batch_id: int, table_path: str) -> None:
@@ -120,31 +107,6 @@ def start_points_query(
         trigger_interval,
         available_now,
     )
-
-
-def start_interval_queries(
-    make_stream,
-    intervals: list[str],
-    base_table_path: str,
-    base_checkpoint: str,
-):
-    """A4/A13: one query per distinct acquisition interval.
-
-    ``make_stream(interval) -> DataFrame`` builds the per-interval
-    filtered stream; each query gets its own checkpoint dir (the §7
-    risk-register requirement for multi-query sessions).
-    """
-    queries = []
-    for iv in intervals:
-        trig = INTERVAL_TRIGGERS.get(iv, "1 seconds")
-        q = start_points_query(
-            make_stream(iv),
-            os.path.join(base_table_path, f"interval={iv}"),
-            os.path.join(base_checkpoint, iv),
-            trigger_interval=trig,
-        )
-        queries.append(q)
-    return queries
 
 
 def write_signal_batch_bucketed(

@@ -20,14 +20,20 @@ The live-emulator smoke still runs when the real lib exists.
 
 from __future__ import annotations
 
+import datetime
+import json
 import struct
+import sys
 import types
 
 import pytest
 
 from iot_system_plc_data_to_influxdb_spark.sources.plc import (
     DEFAULT_TAGS,
+    PLCSimDataSource,
+    PLCSnap7DataSource,
     Snap7Poller,
+    plan_fleet,
     s7_read_plan,
     try_snap7_backend,
 )
@@ -67,6 +73,17 @@ def fake_snap7(log, **client_kw):
         Client=lambda: FakeClient(log, **client_kw)
     )
     return mod
+
+
+def plc_tags(ip):
+    """DEFAULT_TAGS of one PLC, planned as the reader plans them."""
+    return next(p.tags for p in plan_fleet(DEFAULT_TAGS) if p.ip == ip)
+
+
+def batch_rows(source, tags):
+    """One poll of every PLC through the batch reader of ``source``."""
+    reader = source({"tags": json.dumps(tags), "polls": "1"}).reader(None)
+    return [r for p in reader.partitions() for r in reader.read(p)]
 
 
 def test_read_plan_db_real():
@@ -132,7 +149,7 @@ def test_poller_connect_and_sweep_call_sequence():
     log = []
     poller = Snap7Poller("192.168.0.10", slot=2, snap7_module=fake_snap7(log))
     assert log[0] == ("connect", "192.168.0.10", 0, 2)
-    rows = poller.sweep(DEFAULT_TAGS, poll=0)
+    rows = poller.sweep(plc_tags("192.168.0.10"), poll=0)
     reads = [c for c in log if c[0] == "read_area"]
     # 192.168.0.10's four tags, in tag order, with exact arguments
     assert reads == [
@@ -153,7 +170,7 @@ def test_poller_connect_and_sweep_call_sequence():
 def test_poller_second_plc_bit_path():
     log = []
     poller = Snap7Poller("192.168.0.11", snap7_module=fake_snap7(log))
-    poller.sweep(DEFAULT_TAGS, poll=0)
+    poller.sweep(plc_tags("192.168.0.11"), poll=0)
     reads = [c for c in log if c[0] == "read_area"]
     assert reads == [
         ("read_area", 0x82, 0, 16, 0x08),   # QD16 Real (PA)
@@ -167,7 +184,7 @@ def test_poller_reconnects_on_error_and_abandons_sweep():
     # second tag of .10 (DB10.DBW4) blows up mid-sweep
     mod = fake_snap7(log, fail_on={(0x84, 10, 4)})
     poller = Snap7Poller("192.168.0.10", slot=1, snap7_module=mod)
-    rows = poller.sweep(DEFAULT_TAGS, poll=0)
+    rows = poller.sweep(plc_tags("192.168.0.10"), poll=0)
     # only the first tag survived; the rest of the sweep was abandoned
     assert [r[3] for r in rows] == ["boiler_temp"]
     # recovery: disconnect then connect(ip, 0, slot), reference-style
@@ -175,7 +192,7 @@ def test_poller_reconnects_on_error_and_abandons_sweep():
         ("disconnect",), ("connect", "192.168.0.10", 0, 1),
     ]
     # next sweep resumes normally
-    rows2 = poller.sweep(DEFAULT_TAGS, poll=1)
+    rows2 = poller.sweep(plc_tags("192.168.0.10"), poll=1)
     assert [r[3] for r in rows2] == ["boiler_temp"]  # still failing tag
 
 
@@ -196,7 +213,7 @@ def test_poller_buffers_decode_end_to_end(spark):
     poller = Snap7Poller(
         "192.168.0.11", snap7_module=fake_snap7(log, buffers=buffers)
     )
-    rows = poller.sweep(DEFAULT_TAGS, poll=0)
+    rows = poller.sweep(plc_tags("192.168.0.11"), poll=0)
     df = spark.createDataFrame(
         rows,
         "poll bigint, ts timestamp, plc_ip string, alias string, "
@@ -210,6 +227,57 @@ def test_poller_buffers_decode_end_to_end(spark):
     assert got["valve_pos"] == pytest.approx(21.5)
     assert got["alarm"] == 1.0  # bit 7 of 0b10000000
     assert got["line_speed"] == 1234.0
+
+
+def test_poller_stamps_the_wall_clock_of_the_sweep(monkeypatch):
+    """snap7 points carry the time they were read (InfluxDB's server
+    time in the reference), as UTC instants."""
+    monkeypatch.setitem(sys.modules, "snap7", fake_snap7([]))
+    before = datetime.datetime.now(datetime.timezone.utc)
+    rows = batch_rows(PLCSnap7DataSource, DEFAULT_TAGS)
+    after = datetime.datetime.now(datetime.timezone.utc)
+    assert len(rows) == 9
+    assert all(r[1].tzinfo is not None and before <= r[1] <= after for r in rows)
+
+
+def test_plc_s7_streams_one_connection_per_plc_with_its_slot(monkeypatch):
+    """format("plc_s7") streams: the stream reader sweeps every PLC per
+    batch, connecting each once, with its own <plc slot=…>, across
+    triggers."""
+    log = []
+    monkeypatch.setitem(sys.modules, "snap7", fake_snap7(log))
+    slots = {"192.168.0.10": [2], "192.168.0.11": [3], "192.168.0.12": []}
+    tags = [list(t) + slots[t[0]] for t in DEFAULT_TAGS]
+    reader = PLCSnap7DataSource({"tags": json.dumps(tags)}).simpleStreamReader(None)
+    rows, end = reader.read(reader.initialOffset())
+    assert end == {"poll": 1}
+    rows = list(rows)
+    assert len(rows) == 9 and {r[0] for r in rows} == {0}
+    rows2, _ = reader.read(end)
+    assert {r[0] for r in rows2} == {1}
+    assert [c for c in log if c[0] == "connect"] == [
+        ("connect", "192.168.0.10", 0, 2),
+        ("connect", "192.168.0.11", 0, 3),
+        ("connect", "192.168.0.12", 0, 1),
+    ]
+
+
+def test_plc_simulator_skips_what_snap7_skips(monkeypatch):
+    """One address plan: tags s7_read_plan rejects (a DB bit without
+    its bit number, a DB word without an offset, an input bit without
+    its bit number) are read by neither backend."""
+    monkeypatch.setitem(sys.modules, "snap7", fake_snap7([]))
+    tags = DEFAULT_TAGS + [
+        ("192.168.0.11", "S7WLBit", "S7AreaDB", "DB5.DBX2", "alarm_nobit"),
+        ("192.168.0.10", "S7WLWord", "S7AreaDB", "DB7", "no_offset"),
+        ("192.168.0.12", "S7WLBit", "S7AreaPE", "I0", "input_nobit"),
+    ]
+
+    def keys(source):
+        return sorted((r[2], r[3], r[7]) for r in batch_rows(source, tags))
+
+    assert keys(PLCSimDataSource) == keys(PLCSnap7DataSource)
+    assert len(keys(PLCSimDataSource)) == len(DEFAULT_TAGS)
 
 
 def test_snap7_backend_gate():

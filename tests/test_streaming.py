@@ -42,6 +42,41 @@ def test_plc_source_batch_read(spark):
     assert by_key[("192.168.0.12", "uptime_s", 0)] == float(2147483000 + seed_u * 1000)
 
 
+def test_plc_sim_clock_is_utc_in_any_host_zone():
+    """The simulator's poll n is the instant 2024-01-01T00:00Z + n s,
+    in batch and stream rows alike, whatever the host's time zone."""
+    from pyspark.sql.types import TimestampType
+
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Tokyo"
+    time.tzset()
+    try:
+        source = plc_src.PLCSimDataSource({"polls": "2", "pollsPerBatch": "2"})
+        batch = source.reader(None)
+        rows = [r for p in batch.partitions() for r in batch.read(p)]
+        stream = source.simpleStreamReader(None)
+        rows += list(stream.read(stream.initialOffset())[0])
+        got = {(r[0], TimestampType().toInternal(r[1])) for r in rows}
+    finally:
+        if saved is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    assert len(rows) == 36
+    assert got == {(p, (1704067200 + p) * 10**6) for p in (0, 1)}
+
+
+def test_plc_source_ts_is_the_poll_instant(spark):
+    """End to end through Spark's Python workers: stored ts is the
+    poll's UTC instant (the host-zone check runs this under
+    TZ=Asia/Tokyo)."""
+    plc_src.register(spark)
+    df = spark.read.format("plc_sim").option("polls", "2").load()
+    got = {(r[0], r[1]) for r in df.select("poll", F.col("ts").cast("long")).collect()}
+    assert got == {(0, 1704067200), (1, 1704067201)}
+
+
 def test_plc_source_stream_microbatches(spark):
     plc_src.register(spark)
     raw = spark.readStream.format("plc_sim").option("pollsPerBatch", "2").load()
