@@ -413,7 +413,7 @@ def _index_build_serve_split(spark, sf_dir: str) -> dict:
         return round(min(walls), 3)
 
     def build_serve(prefix, build, **serves):
-        with tempfile.TemporaryDirectory(prefix=prefix) as tmp:
+        with retrieval.index_dir(prefix) as tmp:
             t0 = time.perf_counter()
             build(tmp)
             out = {"build_s": round(time.perf_counter() - t0, 3)}

@@ -2679,8 +2679,8 @@ def compile_statement(query: str, table: DataFrame, **kw) -> DataFrame:
 # SELECT ... INTO <target> — the statement InfluxDB continuous queries
 # are written in (and the one-shot backfill idiom `SELECT ... INTO ...
 # WHERE time < now() GROUP BY time(1h)`). The compiled plan is the
-# SELECT without the INTO clause; the caller owns the write (the engine
-# pairs this with streaming/rollup.py for the scheduled CQ path).
+# SELECT without the INTO clause; the caller owns the write (the
+# gateway's InfluxAPI.execute appends it to <write_dir>__<target>).
 # --------------------------------------------------------------------------
 _INTO_RE = re.compile(
     r"^(?P<head>\s*SELECT\s+.+?)\s+INTO\s+(?P<target>[\w.\"]+)\s+"
@@ -2710,10 +2710,10 @@ def compile_into(
 # --------------------------------------------------------------------------
 # CREATE CONTINUOUS QUERY — the statement InfluxDB 1.x users schedule
 # rollups with (the CQ half of the reference's retention+rollup
-# machinery, README.md:3). Parsed to a spec the engine executes with
-# the existing CQ primitives: start_continuous_query (streaming keep-
-# current), backfill_rollup (seed from history), resample_rollup
-# (RESAMPLE EVERY/FOR late-data repair).
+# machinery, README.md:3). Parsed to a spec that
+# InfluxAPI.run_continuous_queries runs on each CQ-service tick (the
+# RESAMPLE FOR window bounds what a tick recomputes) and
+# IoTEngine.run_cq runs once as a batch backfill.
 # --------------------------------------------------------------------------
 _CREATE_CQ_RE = re.compile(
     r"^\s*CREATE\s+CONTINUOUS\s+QUERY\s+(?P<name>[\w\"]+)\s+ON\s+"

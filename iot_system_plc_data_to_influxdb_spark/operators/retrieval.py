@@ -1,239 +1,291 @@
-"""Partitioned inverted index for lexical retrieval (B21/B20).
+"""Written serving indexes for lexical (BM25) and vector (IVF, IVF-PQ)
+retrieval.
 
-b21_bm25_retrieval scores by scanning the corpus — correct, and the
-right shape for ad-hoc one-off questions. A serving system at 100 TB
-never does that per query: it builds the inverted index ONCE (one
-corpus pass, the same cost as any other layout materialization in
-operators/retention.py) and answers every query by reading only the
-term-bucket partitions its query terms hash into. This module is that
-scale path:
+An index is a directory of parquet relations. Four of them are
+partitioned (``Relation``): BM25 ``postings`` and ``terms`` by term
+bucket ``tb = pmod(xxhash64(term), N_BUCKETS)``, IVF ``cells`` (raw
+vectors) and IVF-PQ ``codes`` by coarse ``cell``. The rest are small
+unpartitioned sidecars: corpus ``stats``, the coarse ``centroids`` and
+the PQ ``codebooks``.
 
-- ``write_postings_index``: postings (doc_id, dl, term, tf) laid out
-  ``tb=<bucket>/`` by ``pmod(xxhash64(term), n_buckets)``, sorted by
-  term within files (row-group min/max stats prune within a bucket);
-  per-term document frequencies in a ``terms/`` subtree with the SAME
-  bucketing; corpus stats (n_docs, sum_len) as a 1-row parquet.
-- ``bm25_from_index``: answers a term-set query by scanning ONLY the
-  matching ``tb=`` partitions (partition pruning + a pushed ``term
-  IN`` filter), then the exact-integer BM25 scoring shared with the
-  corpus-scan query (functions/text.surprisal_bits idf, the
-  fraction-cleared tf normalization, one truncation point) and a
-  TakeOrdered top-k.
+Every partitioned relation has one lifecycle, and each stage exists
+once here:
 
-The registered twin ``b21_bm25_indexed`` (plans/northstar.py) builds
-the index from the sf_dir corpus and must hash-match the corpus-scan
-query's oracle exactly — the index path provably returns the same
-answer. Pruning is proven in tests/test_retrieval_index.py via
-``input_file_name()`` (only the query terms' buckets open).
+- ``_write``: the build, a delta append, the ``terms/`` merge and a
+  compaction rewrite are the same clustered, sorted, ``partitionBy``
+  write;
+- ``_landed``: a delta reports the partitions it lands in as an
+  Observation riding its one pass, so no collect job learns them;
+- ``scan``: a serve reads only the partitions its query hashes or
+  probes into (partition pruning);
+- ``partition_files`` / ``compact``: partitions whose file count
+  exceeds a threshold are rewritten as one sorted file each; the
+  others keep their files byte-identical.
 
-Round 12 completes the index LIFECYCLE for both modalities: delta
-merges (``merge_postings_delta`` / ``merge_ivf_delta`` — O(delta),
-append-only into landed partitions), streaming maintenance (the same
-merge applied per micro-batch from foreachBatch —
-``b21_bm25_index_stream``), and compaction
-(``compact_postings_index`` / ``compact_ivf_cells`` — selective
-rewrite of fragmented partitions only). Every stage shares the full
-rebuild's oracle, so each sweep proves the maintained index serves
-identically.
+What stays per family is what differs: tokenize/tf and BM25 scoring,
+the coarse and PQ quantizers, ADC and the exact rerank. Each
+registered index query (plans/northstar.py) shares the oracle of a
+corpus-scan or replay twin, so every sweep proves that build, delta
+merge, compaction and serve answer like a rebuild. Pruning, untouched
+partitions' byte identity and compaction selectivity are proven in
+tests/test_retrieval_index.py.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import tempfile
+from dataclasses import dataclass, replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import par_floor, run_jobs
+from ..functions.pq import (
+    M,
+    pq_adc_topk,
+    pq_code_cols,
+    pq_ratio_expr,
+    pq_subvectors,
+    pq_train,
+)
 from ..functions.text import surprisal_bits, tokens
+from ..functions.vectors import cosine
+from .similarity import ivf_best_cell, ivf_cell_assignments, ivf_centroids
 
-#: default term-hash partition count — at 100 TB this rises with the
-#: vocabulary (buckets stay listing-friendly; pruning power is
-#: |query-term buckets| / n_buckets either way)
+#: term-hash partition count; pruning power is |query buckets| / N_BUCKETS
 N_BUCKETS = 64
 
 
-def _term_bucket(term):
-    return F.pmod(F.xxhash64(term), F.lit(N_BUCKETS)).cast("int")
+@dataclass(frozen=True)
+class Relation:
+    """A partitioned index relation: its subdirectory, partition
+    column, file columns, write-salt key (None: never salted) and
+    within-file sort."""
+
+    sub: str
+    part: str
+    cols: tuple
+    salt: str | None
+    sort: tuple
 
 
-# ---------------------------------------------------------------------------
-# Scale-dependent WRITE-LAYOUT knobs (round 13 — the r12 verdict's #6,
-# guide §2.5/§6). The repartition("cell"/"tb") write clustering
-# deliberately routes each partition VALUE to one task (pruning proofs
-# depend on the directory layout); at 100 TB a hot IVF cell or term
-# bucket then becomes one straggler task writing one giant file. Two
-# env-parameterised knobs fix both without touching the local bench's
-# layout (defaults reproduce it exactly):
-#   SPARK_GRAFT_INDEX_WRITE_SALT=S   (default 1) — spread each
-#     partition's rows over S tasks via a DETERMINISTIC within-
-#     partition salt (pmod(xxhash64(row key), S) — retry-safe per
-#     guide §2.5, never rand()); S files per hot partition, S× write
-#     parallelism, pruning unchanged (partitionBy sees only the
-#     partition column).
-#   SPARK_GRAFT_INDEX_MAX_RECORDS_PER_FILE=N (default 0 = unlimited) —
-#     bound rows per written file (§6 output sizing) so even a salted
-#     hot partition cannot emit multi-GB files.
-# Production posture (SCALE.md): S sized so hot-partition rows / S
-# lands near the target file size; N as the hard backstop. Row sets,
-# within-file sort and served answers are invariant — proven in
-# tests/test_retrieval_index.py::test_salted_write_layout.
-# ---------------------------------------------------------------------------
-def _write_salt() -> int:
-    return max(1, int(os.environ.get("SPARK_GRAFT_INDEX_WRITE_SALT", "1")))
+POSTINGS = Relation(
+    "postings", "tb", ("doc_id", "dl", "term", "tf"), "doc_id",
+    ("term", "doc_id"),
+)
+TERMS = Relation("terms", "tb", ("term", "df"), "term", ("term",))
+CELLS = Relation("cells", "cell", ("vec_id", "embedding"), "vec_id", ("vec_id",))
+CODES = Relation(
+    "codes", "cell", ("vec_id", *(f"c{j}" for j in range(M))), "vec_id",
+    ("vec_id",),
+)
 
 
-def _clustered(df: DataFrame, part_col: str, salt_key: str) -> DataFrame:
-    """Write clustering for a partitioned index relation: one task per
-    partition value by default; S tasks per value when the salt knob
-    is set (hot-partition straggler/file-size mitigation at scale)."""
-    s = _write_salt()
-    if s <= 1:
-        return df.repartition(part_col)
+@contextlib.contextmanager
+def index_dir(prefix: str):
+    """A temporary index directory, removed on exit."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _clustered(df: DataFrame, rel: Relation) -> DataFrame:
+    """One task per partition value, or S tasks per value with
+    SPARK_GRAFT_INDEX_WRITE_SALT=S: a deterministic salt
+    pmod(xxhash64(salt key), S), retry-safe, spreads a hot partition
+    over S files. Pruning is unchanged (partitionBy sees only the
+    partition column)."""
+    s = max(1, int(os.environ.get("SPARK_GRAFT_INDEX_WRITE_SALT", "1")))
+    if s <= 1 or rel.salt is None:
+        return df.repartition(rel.part)
     return df.repartition(
-        F.col(part_col), F.pmod(F.xxhash64(F.col(salt_key)), F.lit(s))
+        F.col(rel.part), F.pmod(F.xxhash64(F.col(rel.salt)), F.lit(s))
     )
 
 
 def _sized(writer):
-    """Apply the max-records-per-file backstop when configured."""
+    """SPARK_GRAFT_INDEX_MAX_RECORDS_PER_FILE=N (default 0, unlimited)
+    bounds the rows of each written file."""
     n = int(os.environ.get("SPARK_GRAFT_INDEX_MAX_RECORDS_PER_FILE", "0"))
     return writer.option("maxRecordsPerFile", n) if n > 0 else writer
 
 
-def _tokenized(docs: DataFrame) -> DataFrame:
-    """(doc_id, dl, w) for a document set — the ONE tokenization
-    expression shared by the full build and the delta merge, so the
-    two paths cannot drift. ``docs`` needs (doc_id, text); terms are
-    the same lowercase whitespace tokens restricted to
-    ``^[a-z0-9]+$`` as the BPE/BM25 family."""
+def _write(df: DataFrame, path: str, rel: Relation, mode: str = "overwrite"):
+    """The one write of a partitioned relation. ``mode`` is
+    "overwrite" (a build), "append" (a delta: new files land next to
+    the old ones) or "rewrite": replace only the partitions present in
+    ``df`` (dynamic partition overwrite, set on this writer, never on
+    the shared session conf), after cutting lineage to the files it
+    replaces. Both env knobs apply to every mode (the salt to
+    relations with a salt key)."""
+    df = _clustered(df.select(*rel.cols, rel.part), rel).sortWithinPartitions(
+        *rel.sort
+    )
+    if mode == "rewrite":
+        df = df.localCheckpoint()
+    w = df.write.mode("append" if mode == "append" else "overwrite")
+    if mode == "rewrite":
+        w = w.option("partitionOverwriteMode", "dynamic")
+    _sized(w.partitionBy(rel.part)).parquet(os.path.join(path, rel.sub))
+
+
+def _landed(df: DataFrame, rel: Relation):
+    """(df, obs): ``obs`` collects the partitions df's rows land in,
+    filled by the first action over df."""
+    obs = Observation()
+    return df.observe(obs, F.collect_set(rel.part).alias("parts")), obs
+
+
+def _landed_ids(obs) -> list[int]:
+    return sorted(int(p) for p in obs.get["parts"])
+
+
+def scan(
+    spark: SparkSession, path: str, rel: Relation, parts=None
+) -> DataFrame:
+    """``rel`` under ``path``, pruned to partitions ``parts`` (all
+    partitions when None) — the scan every serve and merge reads."""
+    df = spark.read.parquet(os.path.join(path, rel.sub))
+    return df if parts is None else df.filter(F.col(rel.part).isin(list(parts)))
+
+
+def partition_files(spark: SparkSession, path: str, rel: Relation) -> DataFrame:
+    """(part, n_files) over ``rel`` from ``input_file_name()`` — never a
+    driver-side directory walk."""
     return (
-        par_floor(docs, "doc_id")  # tokenize map work spreads
-        .select("doc_id", tokens(F.col("text")).alias("w"))
-        .select("doc_id", F.size("w").cast("bigint").alias("dl"), "w")
+        scan(spark, path, rel)
+        .select(rel.part, F.input_file_name().alias("f"))
+        .groupBy(rel.part)
+        .agg(F.count_distinct("f").cast("bigint").alias("n_files"))
     )
 
 
-def _term_freqs(base: DataFrame) -> DataFrame:
-    """(doc_id, dl, term, tf) from a tokenized base."""
-    return (
+def compact(
+    spark: SparkSession, path: str, rel: Relation, max_files: int = 1
+) -> list[int]:
+    """Rewrite only the partitions holding more than ``max_files``
+    files, each as one sorted file — unsalted, or a salted rewrite
+    would leave S files and never converge (the max-records backstop
+    still applies); every other partition keeps its files
+    byte-identical. Appended deltas fragment partitions; answers are
+    unchanged because the row set is. Work is O(fragmented
+    partitions' rows). Returns the compacted partition ids."""
+    frag = sorted(
+        int(r[rel.part])
+        for r in partition_files(spark, path, rel)
+        .filter(F.col("n_files") > max_files)
+        .collect()
+    )
+    if frag:
+        _write(
+            scan(spark, path, rel, frag), path, replace(rel, salt=None),
+            "rewrite",
+        )
+    return frag
+
+
+def _sidecar(spark: SparkSession, path: str, name: str) -> DataFrame:
+    return spark.read.parquet(os.path.join(path, name))
+
+
+def _put_sidecar(df: DataFrame, path: str, name: str) -> None:
+    df.write.mode("overwrite").parquet(os.path.join(path, name))
+
+
+def _put_centroids(spark: SparkSession, path: str, cents) -> None:
+    _put_sidecar(
+        spark.createDataFrame(cents, "cell int, cvec array<float>"),
+        path, "centroids",
+    )
+
+
+def _centroids(spark: SparkSession, path: str) -> DataFrame:
+    """The coarse-quantizer sidecar (cell, cvec)."""
+    return _sidecar(spark, path, "centroids")
+
+
+def _frozen_centroids(spark: SparkSession, path: str) -> list:
+    """The written coarse quantizer as ``ivf_centroids`` returns it."""
+    return sorted(
+        (int(r["cell"]), list(r["cvec"]))
+        for r in _centroids(spark, path).collect()
+    )
+
+
+# -- BM25 postings ----------------------------------------------------------
+def _term_bucket(term):
+    return F.pmod(F.xxhash64(term), F.lit(N_BUCKETS)).cast("int")
+
+
+def _observed_term_freqs(docs: DataFrame):
+    """(tf, obs): (doc_id, dl, term, tf) over ``docs`` (doc_id, text),
+    the one tokenization the build and the delta share, plus corpus
+    stats (n_docs, sum_len) observed on the same pass. Terms are the
+    lowercase whitespace tokens matching ``^[a-z0-9]+$``."""
+    obs = Observation()
+    base = (
+        par_floor(docs, "doc_id")
+        .select("doc_id", tokens(F.col("text")).alias("w"))
+        .select("doc_id", F.size("w").cast("bigint").alias("dl"), "w")
+        .observe(
+            obs,
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            # an empty streaming micro-batch sums to 0, not NULL
+            F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_len"),
+        )
+    )
+    tf = (
         base.select("doc_id", "dl", F.explode("w").alias("term"))
         .filter(F.col("term").rlike("^[a-z0-9]+$"))
         .groupBy("doc_id", "dl", "term")
         .agg(F.count("*").cast("bigint").alias("tf"))
     )
+    return tf, obs
 
 
-def _doc_postings(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(base, tf) — the lazy pair, kept for consumers of either."""
-    base = _tokenized(docs)
-    return base, _term_freqs(base)
-
-
-def _observed_term_freqs(docs: DataFrame):
-    """(tf, observation): the term-frequency relation plus corpus
-    stats (n_docs, sum_len) collected DURING the same pass (guide
-    §1.2 step 1: the old build paid a separate full tokenize pass
-    just to count — an Observation on the pass that already flows
-    every document row makes stats free). The metrics fill on the
-    first action over ``tf``."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    base = _tokenized(docs).observe(
-        obs,
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        # empty-input safe (a streaming micro-batch can be empty)
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_len"),
+def _put_stats(spark: SparkSession, path: str, n_docs: int, sum_len: int):
+    _put_sidecar(
+        spark.createDataFrame(
+            [(int(n_docs), int(sum_len))], "n_docs bigint, sum_len bigint"
+        ),
+        path, "stats",
     )
-    return _term_freqs(base), obs
-
-
-
-
-def _write_stats(
-    spark: SparkSession, path: str, n_docs: int, sum_len: int
-) -> None:
-    spark.createDataFrame(
-        [(int(n_docs), int(sum_len))], "n_docs bigint, sum_len bigint"
-    ).write.mode("overwrite").parquet(os.path.join(path, "stats"))
 
 
 def write_postings_index(docs: DataFrame, path: str) -> None:
-    """ONE corpus pass → the three index relations.
-
-    Round 12 cut the build from three tokenize passes to one by
-    localCheckpoint()ing the tf relation. Round 13 (the r12 verdict's
-    "what's wrong" #2): that checkpoint materialized a CORPUS-SIZED
-    relation on executor-local disk with no replication — an executor
-    loss kills the build, and the bytes are paid twice (checkpoint +
-    the postings write of the same rows). The postings write IS the
-    materialization of tf: write it first (corpus stats ride that
-    same pass as an Observation — still one tokenize), then derive
-    ``terms/`` by reading the WRITTEN postings back — a column-pruned
-    (term only, per-bucket) scan of the replicated index store, never
-    a second corpus pass — while the 1-row stats write runs as a
-    concurrent job (guide §2.6). Written layout and values are
-    unchanged (same expressions, same repartition("tb") clustering);
-    self-consistency is by construction — terms/ is derived from the
-    exact rows postings/ holds."""
+    """One corpus pass → ``postings/`` (with the stats observed on it),
+    then ``terms/`` (per-term df) aggregated from the written postings,
+    concurrently with the 1-row ``stats/`` write. terms/ is derived
+    from the exact rows postings/ holds, so the index is
+    self-consistent by construction."""
     tf, obs = _observed_term_freqs(docs)
     spark = docs.sparkSession
-    _sized(
-        _clustered(
-            tf.withColumn("tb", _term_bucket(F.col("term"))), "tb", "doc_id"
-        )
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-    ).parquet(os.path.join(path, "postings"))  # the ONE corpus pass; fills `obs`
-
-    def _terms_write():
-        # df derived from the rows the postings write just landed:
-        # the index is self-consistent by construction, and the scan
-        # reads only (term, tb) columns of the written buckets
-        _sized(
-            _clustered(
-                spark.read.parquet(os.path.join(path, "postings"))
-                .groupBy("tb", "term")
-                .agg(F.count("*").cast("bigint").alias("df"))
-                .select("term", "df", "tb"),
-                "tb", "term",
-            )
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("tb")
-        ).parquet(os.path.join(path, "terms"))
-
-    def _stats_write():
-        stats = obs.get  # filled by the postings write above
-        _write_stats(spark, path, stats["n_docs"], stats["sum_len"])
-
-    run_jobs(_terms_write, _stats_write)
+    _write(tf.withColumn("tb", _term_bucket(F.col("term"))), path, POSTINGS)
+    run_jobs(
+        lambda: _write(
+            scan(spark, path, POSTINGS)
+            .groupBy("tb", "term")
+            .agg(F.count("*").cast("bigint").alias("df")),
+            path, TERMS,
+        ),
+        lambda: _put_stats(spark, path, obs.get["n_docs"], obs.get["sum_len"]),
+    )
 
 
 def bm25_query_buckets(spark: SparkSession, terms) -> list[int]:
-    """The term-bucket ids a query's terms hash into — bounded by
-    len(terms), the one tiny collect on the lexical serve path."""
+    """The term buckets a query's terms hash into (a len(terms)-row
+    collect)."""
     return sorted(
-        {hash_bucket for (hash_bucket,) in (
+        {b for (b,) in (
             spark.createDataFrame([(t,) for t in terms], "term string")
             .select(_term_bucket(F.col("term")))
             .collect()
         )}
-    )
-
-
-def bm25_postings_scan(
-    spark: SparkSession, path: str, terms, buckets: list[int]
-) -> DataFrame:
-    """The pruned postings relation the serve path consumes — exposed
-    so tests prove pruning on the EXACT scan bm25_from_index executes
-    (round-11 ADVICE: the old test reconstructed a lookalike scan)."""
-    return (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .filter(F.col("tb").isin(buckets))  # partition pruning
-        .filter(F.col("term").isin(*terms))  # pushed row-group filter
     )
 
 
@@ -244,35 +296,26 @@ def bm25_from_index(
     topk: int = 10,
     scale: int = 1_000_000,
 ) -> DataFrame:
-    """Serve a BM25 (k1=1.2, b=0.75 — the fraction-cleared integer
-    formulation) top-k from the index: only the query terms' ``tb=``
-    partitions are read, never the corpus."""
+    """BM25 (k1=1.2, b=0.75, the fraction-cleared integer form of
+    ``_bm25_doc_scores``, same truncation point) top-k, reading only the
+    query terms' ``tb=`` partitions of postings/ and terms/ (partition
+    pruning plus a pushed ``term IN`` row-group filter)."""
     buckets = bm25_query_buckets(spark, terms)
-    post = bm25_postings_scan(spark, path, terms, buckets)
-    dfq = (
-        spark.read.parquet(os.path.join(path, "terms"))
-        .filter(F.col("tb").isin(buckets))
-        .filter(F.col("term").isin(*terms))
-        .select("term", "df")
-    )
-    stats = spark.read.parquet(os.path.join(path, "stats"))
+
+    def hits(rel):
+        return scan(spark, path, rel, buckets).filter(F.col("term").isin(*terms))
+
     per = (
-        post.join(F.broadcast(dfq), "term")
-        .join(F.broadcast(stats))
+        hits(POSTINGS)
+        .join(F.broadcast(hits(TERMS).select("term", "df")), "term")
+        .join(F.broadcast(_sidecar(spark, path, "stats")))
         .select(
-            "doc_id",
-            "dl",
-            "tf",
-            "sum_len",
-            "n_docs",
-            surprisal_bits(F.col("n_docs"), F.col("df")).alias(
-                "idf_bits"
-            ),
+            "doc_id", "dl", "tf", "sum_len", "n_docs",
+            surprisal_bits(F.col("n_docs"), F.col("df")).alias("idf_bits"),
         )
         .select(
             "doc_id",
             "dl",
-            # identical truncation point to _bm25_doc_scores
             F.expr(
                 f"idf_bits * (22 * tf * sum_len * {scale}) div "
                 "(10 * tf * sum_len + 3 * sum_len + 9 * dl * n_docs)"
@@ -291,78 +334,129 @@ def bm25_from_index(
     )
 
 
-# ---------------------------------------------------------------------------
-# The VECTOR modality's written index — the IVF twin of the postings
-# index above: cell assignments laid out ``cell=<c>/`` so a probe
-# reads ~n_probe/n_cells of the corpus via partition pruning (the
-# claim knn_ivf's docstring makes about production scale, here made
-# real and test-proven). Same coarse quantizer as the batch query and
-# the streaming router (operators/similarity.ivf_centroids), so the
-# registered twin b20_knn_ivf_indexed shares b20_knn_ivf's oracle.
-# ---------------------------------------------------------------------------
+def prepare_postings_delta(delta_docs: DataFrame):
+    """(dtf, stats_obs, landed_obs): the delta's one tokenize+tf pass,
+    checkpointed, with its corpus stats and landed term buckets
+    observed on it. It reads only the delta, never the index, so a
+    caller may run it concurrently with the build it merges into."""
+    dtf, obs = _observed_term_freqs(delta_docs)
+    dtf, landed = _landed(
+        dtf.withColumn("tb", _term_bucket(F.col("term"))), POSTINGS
+    )
+    return dtf.localCheckpoint(), obs, landed
+
+
+def merge_postings_delta(
+    spark: SparkSession,
+    path: str,
+    delta_docs: DataFrame | None = None,
+    pre=None,
+) -> list[int]:
+    """Merge one delta, given as ``delta_docs`` or as a
+    ``prepare_postings_delta`` result ``pre`` (exactly one of them),
+    via ``merge_postings_deltas``."""
+    if (delta_docs is None) == (pre is None):
+        raise ValueError(
+            "merge_postings_delta: pass exactly one of delta_docs or pre"
+        )
+    return merge_postings_deltas(
+        spark, path, [pre or prepare_postings_delta(delta_docs)]
+    )
+
+
+def merge_postings_deltas(spark: SparkSession, path: str, pres) -> list[int]:
+    """Merge prepared deltas (disjoint doc sets) into a written
+    postings index; O(Σ deltas + affected buckets' terms), never
+    O(base). Three concurrent branches over disjoint subtrees:
+
+    - ``postings/``: one append per delta, so a bucket absorbing K
+      deltas gains K files (the fragmentation ``compact`` reads);
+    - ``terms/``: df is additive, so all deltas' counts are summed
+      with the affected buckets' base rows and those buckets are
+      rewritten once;
+    - ``stats/``: one 1-row rewrite of old + Σ deltas.
+
+    Returns the affected bucket ids."""
+    if not pres:
+        return []
+    affected = sorted({b for p in pres for b in _landed_ids(p[2])})
+
+    def _postings_appends():
+        for dtf, _, _ in pres:
+            _write(dtf, path, POSTINGS, "append")
+
+    def _terms_merge():
+        ddf = pres[0][0]
+        for dtf, _, _ in pres[1:]:
+            ddf = ddf.unionByName(dtf)
+        ddf = ddf.groupBy("tb", "term").agg(F.count("*").cast("bigint").alias("df"))
+        _write(
+            scan(spark, path, TERMS, affected)
+            .select("tb", "term", "df")
+            .unionByName(ddf)
+            .groupBy("tb", "term")
+            .agg(F.sum("df").cast("bigint").alias("df")),
+            path, TERMS, "rewrite",
+        )
+
+    def _stats_merge():
+        old = _sidecar(spark, path, "stats").first()
+        _put_stats(
+            spark, path,
+            int(old["n_docs"]) + sum(int(p[1].get["n_docs"]) for p in pres),
+            int(old["sum_len"]) + sum(int(p[1].get["sum_len"]) for p in pres),
+        )
+
+    run_jobs(_postings_appends, _terms_merge, _stats_merge)
+    return affected
+
+
+# -- IVF: raw vectors by coarse cell ----------------------------------------
 def write_ivf_index(
     emb: DataFrame, path: str, n_cells: int = 8, cents=None
 ) -> None:
-    """One corpus pass → cell-partitioned vectors + centroid sidecar.
-    ``cents`` takes a pre-collected ``ivf_centroids`` table so a
-    delta-merge caller can assign its delta against the SAME frozen
-    quantizer without re-reading the written sidecar (round 13)."""
-    from .similarity import ivf_cell_assignments, ivf_centroids
-
-    spark = emb.sparkSession
+    """One corpus pass → ``cells/`` plus the ``centroids/`` sidecar, as
+    concurrent jobs. ``cents`` takes a pre-collected ``ivf_centroids``
+    table a delta merge can then share."""
     if cents is None:
         cents = ivf_centroids(emb, n_cells)
-    cent_df = spark.createDataFrame(cents, "cell int, cvec array<float>")
-    # the cells layout and the centroid sidecar are independent writes
-    # into disjoint subtrees — concurrent jobs (guide §2.6)
     run_jobs(
-        lambda: _sized(
-            _clustered(
-                ivf_cell_assignments(par_floor(emb, "vec_id"), cents)
-                .select("vec_id", "embedding", "cell"),
-                "cell", "vec_id",
-            )
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-        ).parquet(os.path.join(path, "cells")),
-        lambda: cent_df.write.mode("overwrite").parquet(
-            os.path.join(path, "centroids")
+        lambda: _write(
+            ivf_cell_assignments(par_floor(emb, "vec_id"), cents), path, CELLS
         ),
+        lambda: _put_centroids(emb.sparkSession, path, cents),
     )
+
+
+def merge_ivf_delta(
+    spark: SparkSession, path: str, delta_emb: DataFrame, cents=None
+) -> list[int]:
+    """Assign a delta with the frozen coarse quantizer (``cents``, or
+    the written sidecar) and append it into the cells it lands in, in
+    one job; other cells and the sidecar keep their files. Returns the
+    landed cell ids."""
+    assigned, obs = _landed(
+        ivf_cell_assignments(delta_emb, cents or _frozen_centroids(spark, path)),
+        CELLS,
+    )
+    _write(assigned, path, CELLS, "append")
+    return _landed_ids(obs)
 
 
 def ivf_probe_cells(
     spark: SparkSession, path: str, probe_df: DataFrame, n_probe_cells: int = 2
 ) -> list[int]:
-    """Rank the probe against the O(n_cells) centroid sidecar — the
-    bounded n_probe_cells collect the serve path runs. Exposed so
-    tests derive the EXPECTED probe cells exactly the way the serve
-    does (round-11 ADVICE: the old test reconstructed them from the
-    served top-k rows, under-covering when all hits share a cell)."""
-    from ..functions.vectors import cosine
-
-    cent_df = spark.read.parquet(os.path.join(path, "centroids"))
+    """The ``n_probe_cells`` cells whose centroids are most cosine-
+    similar to ``probe_df``'s ``pe`` (ties to the smaller cell)."""
     return [
         int(r["cell"])
-        for r in cent_df.crossJoin(F.broadcast(probe_df))
+        for r in _centroids(spark, path)
+        .crossJoin(F.broadcast(probe_df))
         .select("cell", cosine(F.col("cvec"), F.col("pe")).alias("sim"))
         .orderBy(F.col("sim").desc(), "cell")
         .limit(n_probe_cells)
         .collect()
     ]
-
-
-def ivf_candidate_scan(
-    spark: SparkSession, path: str, probe_cells: list[int]
-) -> DataFrame:
-    """The pruned cell= scan the serve path consumes — exposed so the
-    pruning test observes the exact relation knn_ivf_from_index
-    executes, not a lookalike."""
-    return (
-        spark.read.parquet(os.path.join(path, "cells"))
-        .filter(F.col("cell").isin(probe_cells))  # partition pruning
-    )
 
 
 def knn_ivf_from_index(
@@ -373,20 +467,13 @@ def knn_ivf_from_index(
     k: int = 10,
     n_probe_cells: int = 2,
 ) -> DataFrame:
-    """Serve an IVF top-k from the written index: rank the probe
-    against the O(n_cells) centroid sidecar (broadcast — the only
-    driver action is the bounded n_probe_cells collect), then scan
-    ONLY those ``cell=`` partitions. ``probe`` is the query vector
-    itself — at serving time it arrives from outside the corpus;
-    ``probe_vec_id`` (optional) excludes the probe's own row when the
-    query is a corpus member."""
-    from ..functions.vectors import cosine
-
-    probe_df = spark.createDataFrame(
-        [(probe,)], "pe array<float>"
+    """Cosine top-k over only the probe cells' ``cell=`` partitions.
+    ``probe_vec_id`` excludes the probe's own row when it is a corpus
+    member."""
+    probe_df = spark.createDataFrame([(probe,)], "pe array<float>")
+    cells = scan(
+        spark, path, CELLS, ivf_probe_cells(spark, path, probe_df, n_probe_cells)
     )
-    probe_cells = ivf_probe_cells(spark, path, probe_df, n_probe_cells)
-    cells = ivf_candidate_scan(spark, path, probe_cells)
     if probe_vec_id is not None:
         cells = cells.filter(F.col("vec_id") != probe_vec_id)
     return (
@@ -394,300 +481,56 @@ def knn_ivf_from_index(
         .select(
             "vec_id",
             "cell",
-            F.round(
-                cosine(F.col("embedding"), F.col("pe")), 6
-            ).alias("cos_sim"),
+            F.round(cosine(F.col("embedding"), F.col("pe")), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(k)
     )
 
 
-# ---------------------------------------------------------------------------
-# INCREMENTAL INDEX MAINTENANCE (round-11 verdict "missing" #3): a
-# 100 TB serving deployment appends a delta corpus on day two — it
-# cannot re-run the full layout job. Both merges touch ONLY the
-# partitions the delta lands in (proven in tests/test_retrieval_index.
-# py: untouched buckets' files are byte-identical after the merge),
-# mirroring the delta-probes-base posture of b19_incremental_dedup.
-# ---------------------------------------------------------------------------
-def prepare_postings_delta(delta_docs: DataFrame):
-    """The delta's ONE tokenize+tf pass, materialized, with the stats
-    Observation riding it — separable from the merge because it reads
-    ONLY the source corpus, never the index. Callers with an index
-    build in flight run this CONCURRENTLY with the build (guide §2.6:
-    the two read disjoint inputs) and hand the result to
-    ``merge_postings_delta(pre=...)`` once the build lands.
-
-    Round 13: a SECOND Observation (collect_set of the delta's term
-    buckets) rides the same pass, so the merge no longer pays a
-    distinct-collect job just to learn which ``tb=`` partitions it
-    touches — the set fills here, during the prepare checkpoint,
-    i.e. concurrently with the build. Returns (dtf, stats_obs,
-    buckets_obs); the 2-tuple form is still accepted by the merge."""
-    from pyspark.sql import Observation
-
-    dtf, obs = _observed_term_freqs(delta_docs)
-    bobs = Observation()
-    dtf = dtf.withColumn("tb", _term_bucket(F.col("term"))).observe(
-        bobs, F.collect_set("tb").alias("buckets")
-    )
-    # ONE delta pass feeds postings-append, df-merge, the stats
-    # increment AND the affected-bucket set (via the two Observations
-    # riding it): checkpoint so the tokenize/explode runs once
-    return dtf.localCheckpoint(), obs, bobs
-
-
-def merge_postings_delta(
-    spark: SparkSession,
-    path: str,
-    delta_docs: DataFrame | None = None,
-    pre=None,
-) -> list[int]:
-    """Merge ONE delta document set into a written postings index —
-    the single-delta front door of ``merge_postings_deltas`` (see
-    there for the merge contract). ``pre`` takes a
-    ``prepare_postings_delta`` result so the delta's tokenize pass can
-    have run concurrently with the index build it merges into; with
-    ``delta_docs`` the pass runs here. Exactly one of the two must be
-    given (round-12 ADVICE: neither used to die deep inside the
-    tokenizer with an opaque AttributeError)."""
-    if (delta_docs is None) == (pre is None):
-        raise ValueError(
-            "merge_postings_delta: pass exactly one of delta_docs or pre"
-        )
-    return merge_postings_deltas(
-        spark,
-        path,
-        [pre if pre is not None else prepare_postings_delta(delta_docs)],
-    )
-
-
-def merge_postings_deltas(spark: SparkSession, path: str, pres) -> list[int]:
-    """Merge one or more prepared deltas into a written postings index
-    in ONE maintenance pass.
-
-    - ``postings/``: delta rows are per-(doc_id, term) and the doc
-      sets are disjoint, so each delta is a pure APPEND into its
-      terms' ``tb=`` partitions — zero base rows read or rewritten
-      (new files land next to the old; serving unions them). Appends
-      stay one WRITE JOB per delta (the same per-delta file layout a
-      sequence of single merges produces — compaction fragmentation
-      semantics depend on it) but run back-to-back inside one branch.
-    - ``terms/``: per-term df re-aggregation is ASSOCIATIVE over
-      deltas (round-12 verdict #5), so the per-delta counts are
-      unioned and the affected buckets read-modified-written ONCE —
-      a K-delta batch pays one base read and one dynamic partition
-      overwrite instead of K.
-    - ``stats/``: n_docs/sum_len are additive across deltas — one
-      1-row rewrite of old + Σ deltas.
-
-    The three branches touch disjoint subtrees of ``path`` and all
-    hang off the checkpointed delta passes — concurrent jobs (guide
-    §2.6). The terms rewrite sets partitionOverwriteMode on ITS
-    writer (never on the shared session conf, which a concurrent job
-    would also see). Work is O(Σ deltas + affected-bucket terms),
-    independent of the base corpus size. Returns the union of
-    affected bucket ids (bounded by N_BUCKETS — the one intentionally
-    tiny collect here)."""
-    if not pres:
-        return []
-    dtfs = [p[0] for p in pres]
-
-    def _postings_appends():
-        # sequential WITHIN the branch: each append commits its own
-        # files into the shared postings/ tree (one job per delta, so
-        # a bucket absorbing K deltas holds K new files — exactly the
-        # fragmentation a sequence of single merges produces)
-        for dtf in dtfs:
-            _sized(
-                _clustered(dtf, "tb", "doc_id")
-                .sortWithinPartitions("term", "doc_id")
-                .write.mode("append")
-                .partitionBy("tb")
-            ).parquet(os.path.join(path, "postings"))
-
-    def _terms_merge() -> list[int]:
-        all_dtf = dtfs[0]
-        for dtf in dtfs[1:]:
-            all_dtf = all_dtf.unionByName(dtf)
-        ddf = all_dtf.groupBy("tb", "term").agg(
-            F.count("*").cast("bigint").alias("df")
-        )
-        # the affected-bucket set rode each prepare pass as an
-        # Observation (round 13) — filled during the delta checkpoints,
-        # so no collect job here; 2-tuple pres (older callers) fall
-        # back to the distinct-collect
-        affected: set[int] = set()
-        legacy = False
-        for p in pres:
-            if len(p) > 2:
-                affected.update(int(b) for b in p[2].get["buckets"])
-            else:
-                legacy = True
-        if legacy:
-            affected.update(
-                int(r["tb"])
-                for r in ddf.select("tb").distinct().collect()
-            )
-        affected = sorted(affected)
-        base_terms = (
-            spark.read.parquet(os.path.join(path, "terms"))
-            .filter(F.col("tb").isin(affected))  # partition pruning
-            .select("tb", "term", "df")
-        )
-        merged = (
-            _clustered(
-                base_terms.unionByName(ddf.select("tb", "term", "df"))
-                .groupBy("tb", "term")
-                .agg(F.sum("df").cast("bigint").alias("df"))
-                .select("term", "df", "tb"),
-                "tb", "term",
-            )
-            .sortWithinPartitions("term")
-            # cut lineage to the files the write below replaces
-            .localCheckpoint()
-        )
-        # replaces ONLY the tb= partitions present in `merged` — which
-        # are exactly `affected`, because the union's rows all carry a
-        # delta-term bucket id
-        _sized(
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tb")
-        ).parquet(os.path.join(path, "terms"))
-        return affected
-
-    def _stats_merge():
-        old = spark.read.parquet(os.path.join(path, "stats")).first()
-        n_docs, sum_len = int(old["n_docs"]), int(old["sum_len"])
-        for p in pres:  # filled during the delta checkpoint passes
-            n_docs += int(p[1].get["n_docs"])
-            sum_len += int(p[1].get["sum_len"])
-        _write_stats(spark, path, n_docs, sum_len)
-
-    _, affected, _ = run_jobs(_postings_appends, _terms_merge, _stats_merge)
-    return affected
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ: the memory-bounded serving layout 100 TB vector search
-# actually deploys — the coarse IVF partitioner above PLUS product-
-# quantized codes INSTEAD of raw vectors inside each cell. A 64-dim
-# float32 vector is 256 bytes; its PQ code is 4 codebook ids (≤ 2
-# bytes) — the candidate scan that dominates serve cost shrinks ~64×,
-# and the codebook sidecar (M×K = 64 rows) plus the per-query lookup
-# table are O(1). This variant quantizes the vectors directly (no
-# residual encoding — the no-residual IVF-PQ layout; a residual
-# variant retrains per-cell and is a rebuild-time choice), with the
-# EXACT-replay PQ fold shared with b20_pq_exact_replay
-# (functions/pq.py), so the served ADC top-k is hash-checkable against
-# a DuckDB replay of the same integer arithmetic.
-# ---------------------------------------------------------------------------
+# -- IVF-PQ: PQ codes by coarse cell ----------------------------------------
+# M codebook ids per vector instead of the raw vector (~64x fewer
+# candidate bytes), no residual encoding, the exact-replay PQ fold of
+# functions/pq.py, so the served ADC top-k is hash-checkable.
 def ivfpq_quantizers(emb: DataFrame, n_cells: int = 8):
-    """(cents, cb): the two frozen quantizers an IVF-PQ layout is
-    built around — the driver-side coarse centroid table (bounded
-    collect with parquet pushdown) and the trained PQ codebook
-    relation (one training aggregation over the corpus; the M×K ≤ 64
-    -row OUTPUT is localCheckpoint'ed — a provably small relation).
-    Factored out of ``write_ivfpq_index`` (round 13) so a caller with
-    a delta in hand can encode it against the SAME quantizers
-    CONCURRENTLY with the layout writes (guide §2.6) — the round-12
-    shape serialized delta encode behind the sidecar writes it never
-    needed to wait for.
-
-    Round 13 also drops the round-12 corpus-sized subvector
-    checkpoint: pq_train's seed collect is a vec_id < K filter that
-    pushes through the subvector explode to the parquet scan (a
-    bounded job), so the full subvector relation is only ever
-    consumed ONCE (the training aggregation) — nothing left to
-    re-use, nothing to materialize on executor-local disk."""
-    from ..functions.pq import pq_subvectors, pq_train
-    from .similarity import ivf_centroids
-
+    """(cents, cb): the coarse centroid table and the trained PQ
+    codebook relation (M×K rows, checkpointed: the sidecar write and
+    the encode both read it). A caller may encode a delta against them
+    concurrently with the layout writes."""
     cents = ivf_centroids(emb, n_cells)
-    v = pq_subvectors(par_floor(emb, "vec_id"))
-    cb = pq_train(v).localCheckpoint()  # reused: sidecar write + codes
+    cb = pq_train(pq_subvectors(par_floor(emb, "vec_id"))).localCheckpoint()
     return cents, cb
+
+
+def _encode(emb: DataFrame, cents, cb: DataFrame) -> DataFrame:
+    """(vec_id, c0..c{M-1}, cell): PQ codes and coarse cell in one
+    map-side projection of the wide embedding row."""
+    return emb.select(
+        "vec_id", *pq_code_cols(cb), ivf_best_cell(cents)["cell"].alias("cell")
+    )
 
 
 def write_ivfpq_index(
     emb: DataFrame, path: str, n_cells: int = 8, quantizers=None
 ) -> None:
-    """One layout job → three relations: ``codes/`` (vec_id + M
-    codebook ids, partitioned ``cell=`` — NO raw vectors), the
-    ``codebooks/`` sidecar (M×K exact (sum, count) centroids), and the
-    ``centroids/`` coarse-quantizer sidecar shared with the IVF-flat
-    layout.
-
-    Round 12 (guide §2.4): codes AND the coarse cell are computed in
-    ONE map-side projection of the wide embedding row (literal
-    codebooks + literal centroids — both bounded collects), so the
-    only exchange left on the codes path is the repartition("cell")
-    write clustering; the old assign-join-pivot chain (K× candidate
-    rows, two aggregations, one vec_id join) is gone. The train half
-    keeps its single keyed aggregation. ``quantizers`` takes an
-    ``ivfpq_quantizers`` result so a delta-merge caller can overlap
-    its delta encode with these writes (round 13, guide §2.6)."""
-    from ..functions.pq import pq_code_cols
-    from .similarity import ivf_best_cell
-
-    spark = emb.sparkSession
-    cents, cb = (
-        quantizers if quantizers is not None
-        else ivfpq_quantizers(emb, n_cells)
-    )
-    emb = par_floor(emb, "vec_id")  # per-row code folds below
-    # codes / codebook sidecar / centroid sidecar are independent
-    # writes into disjoint subtrees — concurrent jobs (guide §2.6);
-    # everything they read (cb, cents) is materialized above
+    """``codes/`` plus the ``codebooks/`` and ``centroids/`` sidecars,
+    as concurrent jobs. ``quantizers`` takes an ``ivfpq_quantizers``
+    result."""
+    cents, cb = quantizers or ivfpq_quantizers(emb, n_cells)
+    emb = par_floor(emb, "vec_id")
     run_jobs(
-        lambda: _sized(
-            _clustered(
-                emb.select(
-                    "vec_id",
-                    *pq_code_cols(cb),
-                    ivf_best_cell(cents)["cell"].alias("cell"),
-                ),
-                "cell", "vec_id",
-            )
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-        ).parquet(os.path.join(path, "codes")),
-        lambda: cb.write.mode("overwrite").parquet(
-            os.path.join(path, "codebooks")
-        ),
-        lambda: spark.createDataFrame(
-            cents, "cell int, cvec array<float>"
-        ).write.mode("overwrite").parquet(os.path.join(path, "centroids")),
+        lambda: _write(_encode(emb, cents, cb), path, CODES),
+        lambda: _put_sidecar(cb, path, "codebooks"),
+        lambda: _put_centroids(emb.sparkSession, path, cents),
     )
 
 
 def prepare_ivfpq_delta(delta_emb: DataFrame, cents, cb):
-    """The delta's ONE encode+assign pass against the FROZEN
-    quantizers, materialized (delta-sized — bounded by the ingest
-    batch, never the corpus), with the landed-cell set riding the
-    pass as an Observation (no separate distinct-collect job).
-    Separable from the merge because it reads ONLY the source
-    vectors and the in-memory quantizers — callers with the layout
-    writes in flight run this CONCURRENTLY with them (guide §2.6:
-    disjoint inputs) and hand the result to
-    ``merge_ivfpq_delta(pre=...)`` once the build lands. The
-    quantizers are the SAME relations the sidecars are written from,
-    so the encode is value-identical to one against the stored
-    sidecars (the shared oracle proves it on every sweep)."""
-    from pyspark.sql import Observation
-
-    from ..functions.pq import pq_code_cols
-    from .similarity import ivf_best_cell
-
-    obs = Observation()
-    landed = delta_emb.select(
-        "vec_id",
-        *pq_code_cols(cb),
-        ivf_best_cell(cents)["cell"].alias("cell"),
-    ).observe(obs, F.collect_set("cell").alias("cells"))
+    """(codes, landed_obs): the delta encoded against the frozen
+    quantizers, checkpointed, with its landed cells observed on the
+    pass. Reads only the delta, so it may run concurrently with the
+    build."""
+    landed, obs = _landed(_encode(delta_emb, cents, cb), CODES)
     return landed.localCheckpoint(), obs
 
 
@@ -697,53 +540,22 @@ def merge_ivfpq_delta(
     delta_emb: DataFrame | None = None,
     pre=None,
 ) -> list[int]:
-    """Merge a delta vector set into a written IVF-PQ index with BOTH
-    quantizers frozen: the coarse centroid sidecar AND the PQ codebook
-    sidecar (re-training either is a rebuild by definition — the
-    standard serving posture). Delta vectors are coarse-assigned with
-    the same map-side fold, PQ-encoded against the stored codebooks
-    via the shared functions/pq fold, and APPENDED into the landed
-    ``cell=`` code partitions only. Work is O(delta) — round 12:
-    codes + cell in ONE map-side projection of the wide delta row
-    (the write_ivfpq_index shape), no subvector explode, no pivot, no
-    vec_id join; round 13: the landed-cell set rides the encode pass
-    as an Observation instead of a second distinct-collect job.
-    ``pre`` takes a ``prepare_ivfpq_delta`` result so the encode can
-    have run concurrently with the index build it merges into; with
-    ``delta_emb`` the quantizers are read from the written sidecars
-    here. Returns the landed cell ids."""
+    """Append a delta into the cells it lands in with both quantizers
+    frozen (re-training either is a rebuild). Takes ``delta_emb``
+    (encoded here against the written sidecars) or a
+    ``prepare_ivfpq_delta`` result ``pre`` — exactly one. Returns the
+    landed cell ids."""
     if (delta_emb is None) == (pre is None):
         raise ValueError(
             "merge_ivfpq_delta: pass exactly one of delta_emb or pre"
         )
-    if pre is None:
-        cents = sorted(
-            (int(r["cell"]), list(r["cvec"]))
-            for r in spark.read.parquet(
-                os.path.join(path, "centroids")
-            ).collect()
-        )
-        cb = spark.read.parquet(os.path.join(path, "codebooks"))
-        pre = prepare_ivfpq_delta(delta_emb, cents, cb)
-    landed, obs = pre
-    _sized(
-        _clustered(landed, "cell", "vec_id")
-        .sortWithinPartitions("vec_id")
-        .write.mode("append")
-        .partitionBy("cell")
-    ).parquet(os.path.join(path, "codes"))
-    return sorted(int(c) for c in obs.get["cells"])
-
-
-def ivfpq_code_scan(
-    spark: SparkSession, path: str, probe_cells: list[int]
-) -> DataFrame:
-    """The pruned ``cell=`` code scan the IVF-PQ serve consumes —
-    exposed so the pruning test observes the exact relation."""
-    return (
-        spark.read.parquet(os.path.join(path, "codes"))
-        .filter(F.col("cell").isin(probe_cells))  # partition pruning
+    codes, obs = pre or prepare_ivfpq_delta(
+        delta_emb,
+        _frozen_centroids(spark, path),
+        _sidecar(spark, path, "codebooks"),
     )
+    _write(codes, path, CODES, "append")
+    return _landed_ids(obs)
 
 
 def knn_ivfpq_from_index(
@@ -754,54 +566,37 @@ def knn_ivfpq_from_index(
     k: int = 10,
     n_probe_cells: int = 2,
 ) -> DataFrame:
-    """Serve an ADC top-k from the written IVF-PQ layout: rank the
-    probe against the centroid sidecar (bounded collect), build the
-    O(M×K) asymmetric-distance lookup table from the codebook sidecar
-    (broadcast), scan ONLY the probe cells' ``codes/`` partitions —
-    bytes read are codes, never vectors — and TakeOrder by the
-    fixed-association ADC sum."""
-    from ..functions.pq import (
-        M,
-        pq_adc_topk,
-        pq_ratio_expr,
-        pq_subvectors,
-    )
-
+    """ADC top-k: the probe's O(M×K) lookup table against the codebook
+    sidecar (broadcast), over only the probe cells' ``codes/``
+    partitions — codes are read, never vectors."""
     probe_df = spark.createDataFrame(
         [(0, list(probe))], "vec_id bigint, embedding array<float>"
     )
     pv = pq_subvectors(probe_df).select("sub", F.col("x").alias("px"))
     lut = (
-        spark.read.parquet(os.path.join(path, "codebooks"))
+        _sidecar(spark, path, "codebooks")
         .join(F.broadcast(pv), "sub")
-        .select(
-            "sub",
-            "cluster",
-            F.col("px").alias("x"),  # reuse the exact-numerator fold
-            "sx",
-            "n",
-        )
+        # reuse the exact-numerator fold
+        .select("sub", "cluster", F.col("px").alias("x"), "sx", "n")
         .select("sub", "cluster", pq_ratio_expr().alias("r"))
     )
     probe_cells = ivf_probe_cells(
         spark, path, probe_df.select(F.col("embedding").alias("pe")),
         n_probe_cells,
     )
-    codes = ivfpq_code_scan(spark, path, probe_cells)
+    codes = scan(spark, path, CODES, probe_cells)
     if probe_vec_id is not None:
         codes = codes.filter(F.col("vec_id") != probe_vec_id)
     codes_long = codes.select(
         "vec_id",
         F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("sub"),
-                        F.col(f"c{j}").cast("bigint").alias("cluster"),
-                    )
-                    for j in range(M)
-                ]
-            )
+            F.array(*[
+                F.struct(
+                    F.lit(j).alias("sub"),
+                    F.col(f"c{j}").cast("bigint").alias("cluster"),
+                )
+                for j in range(M)
+            ])
         ).alias("e"),
     ).select("vec_id", "e.sub", "e.cluster")
     return pq_adc_topk(codes_long, lut, k)
@@ -817,15 +612,9 @@ def knn_ivfpq_rerank(
     shortlist: int = 50,
     n_probe_cells: int = 2,
 ) -> DataFrame:
-    """Two-stage serving — the production IVF-PQ recipe: the written
-    codes produce a cheap ADC SHORTLIST (``shortlist`` ids,
-    deterministic (adc, vec_id) order), then ONLY those ids fetch
-    their raw vectors from original storage (``emb_source`` — a
-    broadcast id-semijoin, never a corpus scan) for an exact cosine
-    rerank. Compression does the candidate narrowing; full precision
-    does the final ranking."""
-    from ..functions.vectors import cosine
-
+    """Two-stage serve: an ADC shortlist of ``shortlist`` ids off the
+    codes, then an exact cosine rerank of only those ids' raw vectors,
+    fetched from ``emb_source`` by a broadcast id-semijoin."""
     sl = knn_ivfpq_from_index(
         spark, path, probe, probe_vec_id, k=shortlist,
         n_probe_cells=n_probe_cells,
@@ -836,175 +625,8 @@ def knn_ivfpq_rerank(
         .crossJoin(F.broadcast(probe_df))
         .select(
             "vec_id",
-            F.round(
-                cosine(F.col("embedding"), F.col("pe")), 6
-            ).alias("cos_sim"),
+            F.round(cosine(F.col("embedding"), F.col("pe")), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(k)
     )
-
-
-def _partition_files(
-    spark: SparkSession, root: str, part_col: str
-) -> DataFrame:
-    """(part_col, n_files) over a partitioned tree — fragmentation
-    metadata from ``input_file_name()`` (the retrieval twin of
-    operators/retention's compaction planning: never a driver-side
-    directory walk — at 100 TB the listing itself is the cost)."""
-    return (
-        spark.read.parquet(root)
-        .select(part_col, F.input_file_name().alias("f"))
-        .groupBy(part_col)
-        .agg(F.count_distinct("f").cast("bigint").alias("n_files"))
-    )
-
-
-def _compact_partitions(
-    spark: SparkSession,
-    root: str,
-    part_col: str,
-    cols: list[str],
-    sort_cols: list[str],
-    max_files: int,
-) -> list[int]:
-    """The one compaction body both modalities share: pick the
-    partitions whose file count exceeds ``max_files`` (bounded
-    collect), rewrite ONLY those as one ``sort_cols``-sorted file each
-    via dynamic partition overwrite; everything else keeps its files
-    byte-identical. Returns the compacted partition ids."""
-    frag = sorted(
-        int(r[part_col])
-        for r in _partition_files(spark, root, part_col)
-        .filter(F.col("n_files") > max_files)
-        .collect()
-    )
-    if not frag:
-        return frag
-    merged = (
-        spark.read.parquet(root)
-        .filter(F.col(part_col).isin(frag))  # partition pruning
-        .select(*cols, part_col)
-        .repartition(part_col)
-        .sortWithinPartitions(*sort_cols)
-        # cut lineage to the files the write below replaces
-        .localCheckpoint()
-    )
-    # replaces ONLY the partitions present in `merged` — exactly
-    # `frag`; the overwrite mode rides the writer, not the shared
-    # session conf (thread-safe under concurrent jobs). The file-size
-    # backstop applies here too (a compacted hot partition must not
-    # become one giant file at scale; default = one file, the local
-    # contract the tests pin).
-    _sized(
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(part_col)
-    ).parquet(root)
-    return frag
-
-
-def postings_bucket_files(spark: SparkSession, path: str) -> DataFrame:
-    """(tb, n_files) over the postings tree — the fragmentation
-    metadata relation the compaction planner consumes."""
-    return _partition_files(spark, os.path.join(path, "postings"), "tb")
-
-
-def compact_postings_index(
-    spark: SparkSession, path: str, max_files: int = 1
-) -> list[int]:
-    """Compact fragmented postings buckets after delta merges.
-
-    ``merge_postings_delta`` APPENDS postings files, so a bucket that
-    has absorbed K deltas holds K+1 files — each term-sorted
-    internally, but the bucket's row-group min/max pruning now pays K+1
-    overlapping term ranges per query, and at 100 TB the file-count
-    itself becomes a listing/open cost. This planner reads the
-    fragmentation metadata (``postings_bucket_files``), picks ONLY the
-    buckets whose file count exceeds ``max_files``, and rewrites each
-    as one term-sorted file via dynamic partition overwrite — buckets
-    under the threshold keep their files byte-identical (proven in
-    tests/test_retrieval_index.py), and serving answers are unchanged
-    by construction (same row set; BM25's per-doc SUM is
-    order-independent). ``terms/`` needs no compaction: delta merges
-    replace affected term buckets whole, so they stay one file each.
-    Work is O(fragmented buckets' rows). Returns the compacted bucket
-    ids (bounded by N_BUCKETS — the one tiny collect here)."""
-    return _compact_partitions(
-        spark,
-        os.path.join(path, "postings"),
-        "tb",
-        ["doc_id", "dl", "term", "tf"],
-        ["term", "doc_id"],
-        max_files,
-    )
-
-
-def ivf_cell_files(spark: SparkSession, path: str) -> DataFrame:
-    """(cell, n_files) over the IVF cells tree — fragmentation
-    metadata for the vector modality's compaction planner."""
-    return _partition_files(spark, os.path.join(path, "cells"), "cell")
-
-
-def compact_ivf_cells(
-    spark: SparkSession, path: str, max_files: int = 1
-) -> list[int]:
-    """The IVF twin of ``compact_postings_index``: delta merges APPEND
-    into ``cell=`` partitions, so absorbed deltas fragment a cell into
-    many files. Rewrite only the cells over ``max_files`` as one
-    vec_id-sorted file each (dynamic partition overwrite); untouched
-    cells and the centroid sidecar keep their files byte-identical.
-    Serving is unchanged by construction (same row set; top-k ordering
-    is value-based). Returns the compacted cell ids."""
-    return _compact_partitions(
-        spark,
-        os.path.join(path, "cells"),
-        "cell",
-        ["vec_id", "embedding"],
-        ["vec_id"],
-        max_files,
-    )
-
-
-def merge_ivf_delta(
-    spark: SparkSession, path: str, delta_emb: DataFrame, cents=None
-) -> list[int]:
-    """Merge a delta vector set into a written IVF index: assign the
-    delta with the FROZEN centroid quantizer (the coarse quantizer
-    does not move on append — standard IVF serving posture; a re-train
-    is a rebuild by definition) via the same map-side ivf_best_cell
-    fold as the full build, then APPEND into the assigned ``cell=``
-    partitions. Cells the delta never lands in keep their files
-    untouched; the sidecar is unchanged. Work is O(delta). Returns the
-    affected cell ids (bounded by n_cells).
-
-    Round 13: the assignment fold is a pure projection, so it rides
-    the append write itself and the landed-cell set rides the same
-    pass as an Observation — ONE job where the round-12 shape paid a
-    delta checkpoint plus a distinct-collect. ``cents`` takes the
-    pre-collected centroid table the caller built the index from (the
-    exact rows the sidecar holds); without it the sidecar is read."""
-    from pyspark.sql import Observation
-
-    from .similarity import ivf_cell_assignments
-
-    if cents is None:
-        cents = sorted(
-            (int(r["cell"]), list(r["cvec"]))
-            for r in spark.read.parquet(
-                os.path.join(path, "centroids")
-            ).collect()
-        )
-    obs = Observation()
-    assigned = ivf_cell_assignments(delta_emb, cents).observe(
-        obs, F.collect_set("cell").alias("cells")
-    )
-    _sized(
-        _clustered(
-            assigned.select("vec_id", "embedding", "cell"), "cell", "vec_id"
-        )
-        .sortWithinPartitions("vec_id")
-        .write.mode("append")
-        .partitionBy("cell")
-    ).parquet(os.path.join(path, "cells"))
-    return sorted(int(c) for c in obs.get["cells"])

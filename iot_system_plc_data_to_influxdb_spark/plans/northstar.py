@@ -12,6 +12,8 @@ Scale notes are inline per operator: the LSH/banded variants are the
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -25,6 +27,27 @@ from ..functions.text import (
     tokens,
 )
 from ..functions.vectors import cosine
+from ..operators.retrieval import (
+    CELLS,
+    POSTINGS,
+    bm25_from_index,
+    compact,
+    index_dir,
+    ivfpq_quantizers,
+    knn_ivf_from_index,
+    knn_ivfpq_from_index,
+    knn_ivfpq_rerank,
+    merge_ivf_delta,
+    merge_ivfpq_delta,
+    merge_postings_delta,
+    merge_postings_deltas,
+    prepare_ivfpq_delta,
+    prepare_postings_delta,
+    write_ivf_index,
+    write_ivfpq_index,
+    write_postings_index,
+)
+from ..operators.similarity import ivf_centroids
 from ._exact import (
     round_ratio,
     round_ratio_signed,
@@ -739,217 +762,162 @@ def b21_bm25_retrieval(spark, sf_dir):
     )
 
 
+def _index_query(prefix, serve, *builds, probe_from=None):
+    """The frame every index query shares: build into a temporary index
+    directory, serve from it, and checkpoint the answer so it outlives
+    the directory. Each ``builds`` thunk takes the directory; they run
+    as concurrent jobs together with the fetch of the probe vector
+    (vec_id 0 of ``probe_from``, read from the source as a query vector
+    arriving from outside). ``serve(path, *results)`` gets the thunks'
+    results in order, the probe last."""
+    with index_dir(prefix) as path:
+        thunks = [functools.partial(b, path) for b in builds]
+        if probe_from is not None:
+            thunks.append(lambda: list(
+                probe_from.filter(F.col("vec_id") == 0)
+                .select("embedding").first()["embedding"]
+            ))
+        return serve(path, *run_jobs(*thunks)).localCheckpoint()
+
+
+def _documents(spark, sf_dir):
+    return t(spark, sf_dir, "documents").select("doc_id", "text")
+
+
+def _bm25(spark, path, topk=_BM25_TOPK):
+    return bm25_from_index(
+        spark, path, _BM25_TERMS, topk=topk, scale=_BM25_SCALE
+    )
+
+
+def _bm25_maintained(spark, sf_dir, prefix, deltas, max_files=None):
+    """Build the postings index from the documents outside the
+    ``pmod(doc_id, 5)`` classes ``deltas`` while each delta class's
+    tokenize pass runs concurrently, merge the deltas in one
+    maintenance pass (each still lands its own postings files), compact
+    buckets over ``max_files`` files when given, then serve."""
+    docs = _documents(spark, sf_dir)
+    held = ", ".join(map(str, deltas))
+
+    def serve(path, _, *pres):
+        merge_postings_deltas(spark, path, list(pres))
+        if max_files:
+            compact(spark, path, POSTINGS, max_files)
+        return _bm25(spark, path)
+
+    return _index_query(
+        prefix, serve,
+        lambda p: write_postings_index(
+            docs.filter(F.expr(f"pmod(doc_id, 5) NOT IN ({held})")), p
+        ),
+        *(
+            lambda _, m=m: prepare_postings_delta(
+                docs.filter(F.expr(f"pmod(doc_id, 5) = {m}"))
+            )
+            for m in deltas
+        ),
+    )
+
+
 @register("b21_bm25_indexed", oracle=_B21_BM25_ORACLE, tags=("B21", "B20"))
 def b21_bm25_indexed(spark, sf_dir):
-    """The INDEXED serving path for lexical retrieval, proven
-    answer-identical to the corpus scan: build the partitioned
-    inverted index (operators/retrieval.write_postings_index — the
-    one-corpus-pass layout job a 100 TB deployment runs once), then
-    answer the same 4-term query reading ONLY the query terms'
-    tb= partitions (partition pruning + pushed term filter) — SAME
-    oracle as b21_bm25_retrieval, so the hash check itself proves
-    index-vs-scan equality on every sweep. Pruning is proven in
-    tests/test_retrieval_index.py via input_file_name()."""
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import bm25_from_index, write_postings_index
-
-    tmp = tempfile.mkdtemp(prefix="bm25_index_")
-    try:
-        write_postings_index(
-            t(spark, sf_dir, "documents").select("doc_id", "text"), tmp
-        )
-        return bm25_from_index(
-            spark, tmp, _BM25_TERMS, topk=_BM25_TOPK, scale=_BM25_SCALE
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    """The indexed serving path for lexical retrieval: build the
+    term-bucketed postings index (operators/retrieval), then answer the
+    4-term query reading only the query terms' tb= partitions. It
+    shares b21_bm25_retrieval's oracle, so every sweep proves that the
+    index answers like the corpus scan."""
+    return _index_query(
+        "bm25_index_",
+        lambda p, _: _bm25(spark, p),
+        lambda p: write_postings_index(_documents(spark, sf_dir), p),
+    )
 
 
 @register("b21_bm25_index_delta", oracle=_B21_BM25_ORACLE, tags=("B21", "B20"))
 def b21_bm25_index_delta(spark, sf_dir):
-    """INCREMENTAL maintenance of the postings index (round-11 verdict
-    #3 — day-two of a 100 TB serving deployment): build the index from
-    4/5 of the corpus, merge the remaining fifth as a delta
-    (operators/retrieval.merge_postings_delta — postings appended,
-    only the delta terms' tb= buckets re-aggregated, stats 1-row
-    rewrite; work O(delta), never O(base)), then serve the same 4-term
-    query. SAME oracle as the full rebuild, so the hash check itself
-    proves delta-merge ≡ rebuild on every sweep; untouched buckets'
-    files are proven byte-identical in tests/test_retrieval_index.py."""
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import (
-        bm25_from_index,
-        merge_postings_delta,
-        write_postings_index,
-    )
-
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="bm25_index_delta_")
-    try:
-        from ..operators.retrieval import prepare_postings_delta
-
-        # the delta's tokenize pass reads only the corpus, never the
-        # index — run it concurrently with the base build (guide §2.6)
-        _, pre = run_jobs(
-            lambda: write_postings_index(
-                docs.filter(F.expr("pmod(doc_id, 5) != 3")), tmp
-            ),
-            lambda: prepare_postings_delta(
-                docs.filter(F.expr("pmod(doc_id, 5) = 3"))
-            ),
-        )
-        merge_postings_delta(spark, tmp, pre=pre)
-        return bm25_from_index(
-            spark, tmp, _BM25_TERMS, topk=_BM25_TOPK, scale=_BM25_SCALE
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    """Incremental maintenance: build from 4/5 of the corpus, merge the
+    last fifth as a delta (postings appended, only its buckets' terms
+    rewritten, stats 1-row rewrite; O(delta)), then serve. The rebuild
+    oracle proves delta merge ≡ rebuild."""
+    return _bm25_maintained(spark, sf_dir, "bm25_index_delta_", (3,))
 
 
 @register(
     "b21_index_compaction", oracle=_B21_BM25_ORACLE, tags=("B21", "B20")
 )
 def b21_index_compaction(spark, sf_dir):
-    """COMPACTION closes the index lifecycle (build → delta-merge →
-    compact): every delta merge APPENDS postings files, so a
-    long-running deployment's hot buckets accumulate small files with
-    overlapping term ranges — the classic LSM-ish read amplification.
-    Build the index from 3/5 of the corpus, absorb the remaining two
-    fifths as TWO separate delta merges (hot buckets now hold 3
-    files), compact only the buckets over the 2-file threshold back to
-    one term-sorted file each (operators/retrieval.
-    compact_postings_index — fragmentation metadata from
-    input_file_name(), dynamic partition overwrite of exactly the
-    fragmented buckets), then serve. SAME oracle as the full rebuild,
-    so the hash check proves build+2×delta+compact ≡ rebuild; buckets
-    under the threshold keep byte-identical files
-    (tests/test_retrieval_index.py)."""
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import (
-        bm25_from_index,
-        compact_postings_index,
-        merge_postings_deltas,
-        write_postings_index,
+    """Build → two deltas → compaction: build from 3/5 of the corpus,
+    merge the other two fifths as two deltas (hot buckets now hold 3
+    files), compact only the buckets over 2 files back to one
+    term-sorted file each, then serve. The rebuild oracle proves build
+    + 2 deltas + compaction ≡ rebuild."""
+    return _bm25_maintained(
+        spark, sf_dir, "bm25_index_compact_", (1, 3), max_files=2
     )
-
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="bm25_index_compact_")
-    try:
-        from ..operators.retrieval import prepare_postings_delta
-
-        # both deltas' tokenize passes read only the corpus — run them
-        # concurrently with the base build (guide §2.6); the MERGES
-        # batch into ONE maintenance pass (round-12 verdict #5 /
-        # guide §1.2: postings appends and the per-bucket df re-agg
-        # are associative over deltas, so the terms/stats
-        # read-modify-write happens once — each delta still lands its
-        # own postings files, preserving the fragmentation the
-        # compaction threshold below exercises)
-        _, pre1, pre2 = run_jobs(
-            lambda: write_postings_index(
-                docs.filter(F.expr("pmod(doc_id, 5) NOT IN (1, 3)")), tmp
-            ),
-            lambda: prepare_postings_delta(
-                docs.filter(F.expr("pmod(doc_id, 5) = 1"))
-            ),
-            lambda: prepare_postings_delta(
-                docs.filter(F.expr("pmod(doc_id, 5) = 3"))
-            ),
-        )
-        merge_postings_deltas(spark, tmp, [pre1, pre2])
-        compact_postings_index(spark, tmp, max_files=2)
-        return bm25_from_index(
-            spark, tmp, _BM25_TERMS, topk=_BM25_TOPK, scale=_BM25_SCALE
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
     "b21_bm25_index_stream", oracle=_B21_BM25_ORACLE, tags=("B21", "B26")
 )
 def b21_bm25_index_stream(spark, sf_dir):
-    """STREAMING maintenance of the postings index — the serving index
-    kept current from a live document feed, not a nightly batch:
-    build from 3/5 of the corpus, then replay the remaining two fifths
-    as a Structured Streaming file source in two micro-batches
-    (maxFilesPerTrigger=1, availableNow) whose foreachBatch applies
-    the SAME O(delta) merge as the batch path
-    (operators/retrieval.merge_postings_delta — one shared merge, so
-    stream and batch maintenance cannot drift), then serve. SAME
-    oracle as the full rebuild: the hash check proves
-    stream-maintained ≡ rebuild under real micro-batch boundaries on
-    every sweep. Mirrors the b19_handoff_stream_parity replay harness
-    (plans/streaming_parity.py)."""
+    """Streaming maintenance: build from 3/5 of the corpus, replay the
+    other two fifths as a parquet file stream of two micro-batches
+    (maxFilesPerTrigger=1, availableNow) whose foreachBatch applies the
+    batch path's merge_postings_delta, then serve. The rebuild oracle
+    proves stream-maintained ≡ rebuild across real micro-batch
+    boundaries."""
     import glob
     import os
     import shutil
-    import tempfile
 
-    from ..operators.retrieval import (
-        bm25_from_index,
-        merge_postings_delta,
-        write_postings_index,
-    )
+    docs = _documents(spark, sf_dir)
 
-    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="bm25_index_stream_")
-    try:
-        idx = os.path.join(tmp, "index")
-        write_postings_index(
-            docs.filter(F.expr("pmod(doc_id, 5) NOT IN (2, 4)")), idx
-        )
-        src_dir = os.path.join(tmp, "in")
-        os.makedirs(src_dir)
+    def stage(tmp):
+        # one file per micro-batch, with monotone mtimes: the file
+        # source lists by (modification time, path)
+        os.makedirs(os.path.join(tmp, "in"))
         for i, m in enumerate((2, 4)):
-            stage = os.path.join(tmp, f"stage{i}")
+            out = os.path.join(tmp, f"stage{i}")
             docs.filter(F.expr(f"pmod(doc_id, 5) = {m}")).coalesce(
                 1
-            ).write.parquet(stage)
-            parts = glob.glob(os.path.join(stage, "part-*.parquet"))
-            if parts:
-                dst = os.path.join(src_dir, f"{i:04d}.parquet")
-                shutil.copy(parts[0], dst)
-                # monotone mtimes: the file source lists by
-                # (modification time, path) — pin both orderings
+            ).write.parquet(out)
+            for part in glob.glob(os.path.join(out, "part-*.parquet"))[:1]:
+                dst = os.path.join(tmp, "in", f"{i:04d}.parquet")
+                shutil.copy(part, dst)
                 os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        stream = (
+
+    def serve(tmp, *_):
+        idx = os.path.join(tmp, "index")
+        q = (
             spark.readStream.schema("doc_id bigint, text string")
             .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
+            .parquet(os.path.join(tmp, "in"))
+            .writeStream.outputMode("append")
             .foreachBatch(
-                lambda df, bid: merge_postings_delta(
-                    df.sparkSession, idx, df
-                )
+                lambda df, _: merge_postings_delta(df.sparkSession, idx, df)
             )
-            .option(
-                "checkpointLocation", os.path.join(tmp, "ckpt")
-            )
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         if not q.awaitTermination(600):
-            # never serve a partially-merged index or rmtree the
-            # source/checkpoint under a still-running query
+            # never serve a partially merged index, nor remove the
+            # directory under a running query
             q.stop()
             raise RuntimeError(
                 "b21_bm25_index_stream: streaming merge did not "
                 "complete within 600s"
             )
-        return bm25_from_index(
-            spark, idx, _BM25_TERMS, topk=_BM25_TOPK, scale=_BM25_SCALE
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return _bm25(spark, idx)
+
+    return _index_query(
+        "bm25_index_stream_", serve,
+        lambda p: write_postings_index(
+            docs.filter(F.expr("pmod(doc_id, 5) NOT IN (2, 4)")),
+            os.path.join(p, "index"),
+        ),
+        stage,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1018,6 +986,29 @@ _B20_RRF_ORACLE = f"""
 """
 
 
+def _rrf_fuse(lex, vec):
+    """RRF of a lexical leg (doc_id, lr) and a vector leg (vec_id, vr):
+    Σ_legs SCALE div (K + rank), pure integers, over a full-outer join
+    of the two ranked legs; top _BM25_TOPK by (rrf_fp desc, id)."""
+
+    def leg(r):
+        return F.when(
+            F.col(r).isNotNull(), F.expr(f"{_BM25_SCALE} div ({_RRF_K} + {r})")
+        ).otherwise(F.lit(0))
+
+    return (
+        lex.join(vec, lex["doc_id"] == vec["vec_id"], "full")
+        .select(
+            F.coalesce(F.col("doc_id"), F.col("vec_id")).alias("id"),
+            F.coalesce(F.col("lr"), F.lit(0)).cast("bigint").alias("lex_rank"),
+            F.coalesce(F.col("vr"), F.lit(0)).cast("bigint").alias("vec_rank"),
+            (leg("lr") + leg("vr")).cast("bigint").alias("rrf_fp"),
+        )
+        .orderBy(F.col("rrf_fp").desc(), "id")
+        .limit(_BM25_TOPK)
+    )
+
+
 @register("b20_rrf_hybrid", oracle=_B20_RRF_ORACLE, tags=("B20", "B21"))
 def b20_rrf_hybrid(spark, sf_dir):
     lex_w = Window.orderBy(F.col("score_fp").desc(), "doc_id")
@@ -1026,7 +1017,7 @@ def b20_rrf_hybrid(spark, sf_dir):
         .orderBy(F.col("score_fp").desc(), "doc_id")
         .limit(_RRF_LEG_TOPK)  # TakeOrdered: the leg's only global op
         .select(
-            "doc_id", F.row_number().over(lex_w).alias("r")
+            "doc_id", F.row_number().over(lex_w).alias("lr")
         )  # rank window over <= 20 rows — bounded by construction
     )
     emb = t(spark, sf_dir, "embeddings")
@@ -1041,34 +1032,9 @@ def b20_rrf_hybrid(spark, sf_dir):
         .select("vec_id", cos.alias("cos_raw"))
         .orderBy(F.col("cos_raw").desc(), "vec_id")
         .limit(_RRF_LEG_TOPK)
-        .select("vec_id", F.row_number().over(vec_w).alias("r"))
+        .select("vec_id", F.row_number().over(vec_w).alias("vr"))
     )
-    fused = lex.withColumnRenamed("r", "lr").join(
-        vec.withColumnRenamed("r", "vr"),
-        lex["doc_id"] == vec["vec_id"],
-        "full",
-    )
-    rrf = F.when(
-        F.col("lr").isNotNull(),
-        F.expr(f"{_BM25_SCALE} div ({_RRF_K} + lr)"),
-    ).otherwise(F.lit(0)) + F.when(
-        F.col("vr").isNotNull(),
-        F.expr(f"{_BM25_SCALE} div ({_RRF_K} + vr)"),
-    ).otherwise(F.lit(0))
-    return (
-        fused.select(
-            F.coalesce(F.col("doc_id"), F.col("vec_id")).alias("id"),
-            F.coalesce(F.col("lr"), F.lit(0)).cast("bigint").alias(
-                "lex_rank"
-            ),
-            F.coalesce(F.col("vr"), F.lit(0)).cast("bigint").alias(
-                "vec_rank"
-            ),
-            rrf.cast("bigint").alias("rrf_fp"),
-        )
-        .orderBy(F.col("rrf_fp").desc(), "id")
-        .limit(_BM25_TOPK)
-    )
+    return _rrf_fuse(lex, vec)
 
 
 _STOP_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
@@ -1383,155 +1349,73 @@ def b20_ivf(spark, sf_dir):
     return knn_ivf(t(spark, sf_dir, "embeddings"), probe_vec_id=0, k=10)
 
 
+def _knn(spark, path, probe, k=10):
+    return knn_ivf_from_index(spark, path, probe, probe_vec_id=0, k=k)
+
+
+def _ivf_maintained(spark, sf_dir, prefix, deltas, max_files=None):
+    """Build the IVF layout from the vectors outside the
+    ``pmod(vec_id, 7)`` classes ``deltas`` (vec_id < 8, the quantizer's
+    training vectors, always stay in the base: re-training is a
+    rebuild), append each delta class with the same frozen quantizer,
+    compact cells over ``max_files`` files when given, then serve."""
+    emb = t(spark, sf_dir, "embeddings")
+    held = ", ".join(map(str, deltas))
+    base = emb.filter(F.expr(f"vec_id < 8 OR pmod(vec_id, 7) NOT IN ({held})"))
+    cents = ivf_centroids(base)  # shared by the build and the merges
+
+    def serve(path, _, probe):
+        for m in deltas:
+            merge_ivf_delta(
+                spark, path,
+                emb.filter(F.expr(f"vec_id >= 8 AND pmod(vec_id, 7) = {m}")),
+                cents=cents,
+            )
+        if max_files:
+            compact(spark, path, CELLS, max_files)
+        return _knn(spark, path, probe)
+
+    return _index_query(
+        prefix, serve,
+        lambda p: write_ivf_index(base, p, cents=cents),
+        probe_from=emb,
+    )
+
+
 @register("b20_knn_ivf_indexed", oracle=_B20_IVF_ORACLE, tags=("B20",))
 def b20_knn_ivf_indexed(spark, sf_dir):
-    """The WRITTEN-index serving path for vector retrieval, proven
-    answer-identical to b20_knn_ivf by sharing its oracle: build the
-    cell-partitioned IVF layout (operators/retrieval.write_ivf_index —
-    the one-pass materialization knn_ivf's docstring promises at
-    production scale), then serve the probe reading ONLY its 2 probe
-    cells' cell= partitions. Pruning proven in
-    tests/test_retrieval_index.py via input_file_name()."""
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import knn_ivf_from_index, write_ivf_index
-
+    """The written-index serving path for vector retrieval: build the
+    cell-partitioned IVF layout (operators/retrieval), then serve the
+    probe reading only its 2 probe cells' partitions. It shares
+    b20_knn_ivf's oracle, so every sweep proves index ≡ scan."""
     emb = t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
-        # the probe fetch (1-row bounded action: the query vector
-        # arrives from outside) reads only the source — overlap it
-        # with the layout job instead of serializing it in front
-        # (round 13, guide §2.6)
-        out = {}
-        run_jobs(
-            lambda: write_ivf_index(emb, tmp),
-            lambda: out.setdefault(
-                "p",
-                emb.filter(F.col("vec_id") == 0)
-                .select("embedding").first()["embedding"],
-            ),
-        )
-        return knn_ivf_from_index(
-            spark, tmp, list(out["p"]), probe_vec_id=0, k=10
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _index_query(
+        "ivf_index_",
+        lambda p, _, probe: _knn(spark, p, probe),
+        lambda p: write_ivf_index(emb, p),
+        probe_from=emb,
+    )
 
 
 @register("b20_ivf_index_delta", oracle=_B20_IVF_ORACLE, tags=("B20",))
 def b20_ivf_index_delta(spark, sf_dir):
-    """INCREMENTAL maintenance of the written IVF index (round-11
-    verdict #3): build the cell layout from ~6/7 of the corpus (the
-    base keeps vec_id < 8, the quantizer's training vectors — a
-    re-train is a rebuild by definition), merge the rest as a delta
-    (operators/retrieval.merge_ivf_delta — assigned with the FROZEN
-    centroid sidecar via the same map-side fold, appended into the
-    landed cell= partitions only; work O(delta)), then serve the same
-    probe. SAME oracle as b20_knn_ivf / b20_knn_ivf_indexed, so the
-    hash check proves delta-merge ≡ rebuild ≡ scan; untouched cells'
-    files are proven byte-identical in tests/test_retrieval_index.py."""
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import (
-        knn_ivf_from_index,
-        merge_ivf_delta,
-        write_ivf_index,
-    )
-    from ..operators.similarity import ivf_centroids
-
-    emb = t(spark, sf_dir, "embeddings")
-    base = emb.filter(F.expr("vec_id < 8 OR pmod(vec_id, 7) != 3"))
-    tmp = tempfile.mkdtemp(prefix="ivf_index_delta_")
-    try:
-        # the frozen quantizer is collected ONCE and shared: the build
-        # writes it as the sidecar, the delta assigns against the same
-        # rows (round 13 — no sidecar re-read job); the probe fetch
-        # overlaps the layout job (guide §2.6)
-        cents = ivf_centroids(base)
-        out = {}
-        run_jobs(
-            lambda: write_ivf_index(base, tmp, cents=cents),
-            lambda: out.setdefault(
-                "p",
-                emb.filter(F.col("vec_id") == 0)
-                .select("embedding").first()["embedding"],
-            ),
-        )
-        merge_ivf_delta(
-            spark, tmp,
-            emb.filter(F.expr("vec_id >= 8 AND pmod(vec_id, 7) = 3")),
-            cents=cents,
-        )
-        return knn_ivf_from_index(
-            spark, tmp, list(out["p"]), probe_vec_id=0, k=10
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    """Incremental maintenance of the IVF layout: build from ~6/7 of
+    the corpus, append the rest into the cells it lands in (O(delta)),
+    then serve. b20_knn_ivf's oracle proves delta merge ≡ rebuild ≡
+    scan."""
+    return _ivf_maintained(spark, sf_dir, "ivf_index_delta_", (3,))
 
 
 @register("b20_ivf_compaction", oracle=_B20_IVF_ORACLE, tags=("B20",))
 def b20_ivf_compaction(spark, sf_dir):
-    """COMPACTION for the vector modality's written index — the IVF
-    twin of b21_index_compaction: build the cell layout from ~5/7 of
-    the corpus (quantizer training vectors vec_id < 8 kept in the
-    base), absorb the rest as TWO delta merges (landed cells now hold
-    up to 3 files), compact only the cells over the 2-file threshold
-    back to one vec_id-sorted file each (operators/retrieval.
-    compact_ivf_cells — fragmentation metadata from input_file_name(),
-    dynamic partition overwrite of exactly the fragmented cells), then
-    serve. SAME oracle as b20_knn_ivf, so the hash check proves
-    build+2×delta+compact ≡ rebuild ≡ scan; cells under the threshold
-    and the centroid sidecar keep byte-identical files
-    (tests/test_retrieval_index.py)."""
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import (
-        compact_ivf_cells,
-        knn_ivf_from_index,
-        merge_ivf_delta,
-        write_ivf_index,
+    """Compaction of the IVF layout: build from ~5/7 of the corpus,
+    append the rest as two deltas (landed cells hold up to 3 files),
+    compact only the cells over 2 files back to one vec_id-sorted file
+    each, then serve. b20_knn_ivf's oracle proves build + 2 deltas +
+    compaction ≡ rebuild ≡ scan."""
+    return _ivf_maintained(
+        spark, sf_dir, "ivf_index_compact_", (1, 3), max_files=2
     )
-    from ..operators.similarity import ivf_centroids
-
-    emb = t(spark, sf_dir, "embeddings")
-    base = emb.filter(F.expr("vec_id < 8 OR pmod(vec_id, 7) NOT IN (1, 3)"))
-    tmp = tempfile.mkdtemp(prefix="ivf_index_compact_")
-    try:
-        # one shared frozen-quantizer collect + probe fetch overlapped
-        # with the layout job (round 13 — the b20_ivf_index_delta
-        # treatment); the two delta APPENDS stay one job each into the
-        # shared cells/ tree, preserving the fragmentation the
-        # compaction threshold exercises
-        cents = ivf_centroids(base)
-        out = {}
-        run_jobs(
-            lambda: write_ivf_index(base, tmp, cents=cents),
-            lambda: out.setdefault(
-                "p",
-                emb.filter(F.col("vec_id") == 0)
-                .select("embedding").first()["embedding"],
-            ),
-        )
-        merge_ivf_delta(
-            spark, tmp,
-            emb.filter(F.expr("vec_id >= 8 AND pmod(vec_id, 7) = 1")),
-            cents=cents,
-        )
-        merge_ivf_delta(
-            spark, tmp,
-            emb.filter(F.expr("vec_id >= 8 AND pmod(vec_id, 7) = 3")),
-            cents=cents,
-        )
-        compact_ivf_cells(spark, tmp, max_files=2)
-        return knn_ivf_from_index(
-            spark, tmp, list(out["p"]), probe_vec_id=0, k=10
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1696,135 +1580,67 @@ _B20_IVFPQ_RERANK_ORACLE = f"""
 
 @register("b20_knn_ivfpq_indexed", oracle=_B20_IVFPQ_ORACLE, tags=("B20",))
 def b20_knn_ivfpq_indexed(spark, sf_dir):
-    """Build the written IVF-PQ layout (operators/retrieval.
-    write_ivfpq_index — codes, codebook sidecar, centroid sidecar),
-    then serve the probe's ADC top-10 reading ONLY its 2 probe cells'
-    code partitions. The PQ fold is the SAME functions/pq.py
-    implementation b20_pq_exact_replay hash-proves, and this oracle
-    replays coarse pruning + ADC end-to-end — the served approximate
-    answer is exactly checkable."""
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import (
-        knn_ivfpq_from_index,
-        write_ivfpq_index,
-    )
-
+    """Build the written IVF-PQ layout (codes plus codebook and
+    centroid sidecars), then serve the probe's ADC top-10 reading only
+    its 2 probe cells' code partitions. The oracle replays coarse
+    pruning, codebook training, codes and ADC end to end."""
     emb = t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="ivfpq_index_")
-    try:
-        # probe fetch (1-row bounded action: the query arrives from
-        # outside) overlapped with the layout job (round 13, §2.6)
-        out = {}
-        run_jobs(
-            lambda: write_ivfpq_index(emb, tmp),
-            lambda: out.setdefault(
-                "p",
-                emb.filter(F.col("vec_id") == 0)
-                .select("embedding").first()["embedding"],
-            ),
-        )
-        return knn_ivfpq_from_index(
-            spark, tmp, list(out["p"]), probe_vec_id=0, k=10
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _index_query(
+        "ivfpq_index_",
+        lambda p, _, probe: knn_ivfpq_from_index(
+            spark, p, probe, probe_vec_id=0, k=10
+        ),
+        lambda p: write_ivfpq_index(emb, p),
+        probe_from=emb,
+    )
 
 
 @register(
     "b20_ivfpq_rerank", oracle=_B20_IVFPQ_RERANK_ORACLE, tags=("B20",)
 )
 def b20_ivfpq_rerank(spark, sf_dir):
-    """TWO-STAGE serving off the written IVF-PQ layout — the recipe
-    production vector search actually runs: the compressed codes
-    produce a cheap ADC shortlist (top-50), then only those 50 ids
-    fetch raw vectors from original storage (broadcast id-semijoin
-    against the embeddings table — never a corpus scan) for an exact
-    cosine rerank. The oracle replays shortlist AND rerank, so the
-    hash proves the whole two-stage answer."""
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import knn_ivfpq_rerank, write_ivfpq_index
-
+    """Two-stage serving off the written IVF-PQ layout: an ADC top-50
+    shortlist off the codes, then an exact cosine rerank of only those
+    ids' raw vectors (broadcast id-semijoin, never a corpus scan). The
+    oracle replays shortlist and rerank."""
     emb = t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="ivfpq_rerank_")
-    try:
-        # probe fetch overlapped with the layout job (round 13, §2.6)
-        out = {}
-        run_jobs(
-            lambda: write_ivfpq_index(emb, tmp),
-            lambda: out.setdefault(
-                "p",
-                emb.filter(F.col("vec_id") == 0)
-                .select("embedding").first()["embedding"],
-            ),
-        )
-        return knn_ivfpq_rerank(
-            spark, tmp, emb, list(out["p"]), probe_vec_id=0,
-            k=10, shortlist=_IVFPQ_SHORTLIST,
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _index_query(
+        "ivfpq_rerank_",
+        lambda p, _, probe: knn_ivfpq_rerank(
+            spark, p, emb, probe, probe_vec_id=0, k=10,
+            shortlist=_IVFPQ_SHORTLIST,
+        ),
+        lambda p: write_ivfpq_index(emb, p),
+        probe_from=emb,
+    )
 
 
 @register(
     "b20_ivfpq_index_delta", oracle=_B20_IVFPQ_DELTA_ORACLE, tags=("B20",)
 )
 def b20_ivfpq_index_delta(spark, sf_dir):
-    """INCREMENTAL maintenance of the IVF-PQ layout with BOTH
-    quantizers frozen: build from ~6/7 of the corpus (coarse centroids
-    vec_id < 8 and PQ seeds vec_id < 16 stay in the base), merge the
-    rest as a delta (operators/retrieval.merge_ivfpq_delta — delta
-    vectors coarse-assigned map-side and PQ-encoded against the STORED
-    codebooks, appended into landed cells only; work O(delta)), then
-    serve. The oracle replays exactly these semantics — codebooks
-    trained on the base, EVERYONE encoded against them — so the hash
-    check proves frozen-codebook delta-merge ≡ the same-posture
-    rebuild."""
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import (
-        ivfpq_quantizers,
-        knn_ivfpq_from_index,
-        merge_ivfpq_delta,
-        prepare_ivfpq_delta,
-        write_ivfpq_index,
-    )
-
+    """Incremental maintenance of the IVF-PQ layout with both
+    quantizers frozen: train them on ~6/7 of the corpus (coarse
+    centroids vec_id < 8 and PQ seeds vec_id < 16 stay in the base),
+    encode the rest against them concurrently with the layout writes,
+    append it into its landed cells, then serve. The oracle replays
+    base-trained codebooks with every vector encoded against them."""
     emb = t(spark, sf_dir, "embeddings")
     base = emb.filter(F.expr("vec_id < 16 OR pmod(vec_id, 7) != 3"))
-    delta = emb.filter(F.expr("vec_id >= 16 AND pmod(vec_id, 7) = 3"))
-    tmp = tempfile.mkdtemp(prefix="ivfpq_index_delta_")
-    try:
-        # round 13 (the r12 verdict's #7, guide §2.6): both frozen
-        # quantizers derive from the BASE alone, so once trained the
-        # delta ENCODE reads only the source — run it (and the probe
-        # fetch) CONCURRENTLY with the three layout writes instead of
-        # serializing it behind sidecars it never needed to re-read;
-        # only the APPEND waits for the build. Same encode-against-
-        # base-codebooks semantics the shared oracle replays.
-        quant = ivfpq_quantizers(base)
-        out = {}
-        run_jobs(
-            lambda: write_ivfpq_index(base, tmp, quantizers=quant),
-            lambda: out.setdefault(
-                "pre", prepare_ivfpq_delta(delta, *quant)
-            ),
-            lambda: out.setdefault(
-                "p",
-                emb.filter(F.col("vec_id") == 0)
-                .select("embedding").first()["embedding"],
-            ),
-        )
-        merge_ivfpq_delta(spark, tmp, pre=out["pre"])
-        return knn_ivfpq_from_index(
-            spark, tmp, list(out["p"]), probe_vec_id=0, k=10
-        ).localCheckpoint()  # must outlive the temp-dir cleanup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    quant = ivfpq_quantizers(base)
+
+    def serve(path, _, pre, probe):
+        merge_ivfpq_delta(spark, path, pre=pre)
+        return knn_ivfpq_from_index(spark, path, probe, probe_vec_id=0, k=10)
+
+    return _index_query(
+        "ivfpq_index_delta_", serve,
+        lambda p: write_ivfpq_index(base, p, quantizers=quant),
+        lambda _: prepare_ivfpq_delta(
+            emb.filter(F.expr("vec_id >= 16 AND pmod(vec_id, 7) = 3")), *quant
+        ),
+        probe_from=emb,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1876,87 +1692,31 @@ _B20_RRF_IDX_ORACLE = f"""
 
 @register("b20_rrf_indexed", oracle=_B20_RRF_IDX_ORACLE, tags=("B20", "B21"))
 def b20_rrf_indexed(spark, sf_dir):
-    import shutil
-    import tempfile
-
-    from ..operators.retrieval import (
-        bm25_from_index,
-        knn_ivf_from_index,
-        write_ivf_index,
-        write_postings_index,
-    )
+    import os
 
     emb = t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="rrf_indexed_")
-    try:
-        import os
 
-        lex_path = os.path.join(tmp, "lex")
-        ivf_path = os.path.join(tmp, "ivf")
-        # the two modalities' layout jobs share nothing (different
-        # sources, different directories) — build them as concurrent
-        # jobs (guide §2.6 via run_jobs); each build overlaps its own
-        # sub-writes the same way internally. The probe fetch (1-row
-        # bounded action: the query arrives from outside) rides the
-        # same pool instead of serializing in front (round 13).
-        out = {}
-        run_jobs(
-            lambda: write_postings_index(
-                t(spark, sf_dir, "documents").select("doc_id", "text"),
-                lex_path,
-            ),
-            lambda: write_ivf_index(emb, ivf_path),
-            lambda: out.setdefault(
-                "p",
-                emb.filter(F.col("vec_id") == 0)
-                .select("embedding").first()["embedding"],
-            ),
+    def serve(path, _lex, _ivf, probe):
+        # rank windows over <= 20 rows each — bounded by construction
+        lex = _bm25(spark, os.path.join(path, "lex"), topk=_RRF_LEG_TOPK)
+        vec = _knn(spark, os.path.join(path, "ivf"), probe, k=_RRF_LEG_TOPK)
+        return _rrf_fuse(
+            lex.select("doc_id", F.row_number().over(
+                Window.orderBy(F.col("score_fp").desc(), "doc_id")
+            ).alias("lr")),
+            vec.select("vec_id", F.row_number().over(
+                Window.orderBy(F.col("cos_sim").desc(), "vec_id")
+            ).alias("vr")),
         )
-        probe = out["p"]
-        lex_w = Window.orderBy(F.col("score_fp").desc(), "doc_id")
-        lex = (
-            bm25_from_index(
-                spark, lex_path, _BM25_TERMS,
-                topk=_RRF_LEG_TOPK, scale=_BM25_SCALE,
-            )
-            # rank window over <= 20 rows — bounded by construction
-            .select("doc_id", F.row_number().over(lex_w).alias("lr"))
-        )
-        vec_w = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-        vec = (
-            knn_ivf_from_index(
-                spark, ivf_path, list(probe),
-                probe_vec_id=0, k=_RRF_LEG_TOPK,
-            )
-            .select("vec_id", F.row_number().over(vec_w).alias("vr"))
-        )
-        fused = lex.join(
-            vec, lex["doc_id"] == vec["vec_id"], "full"
-        )
-        rrf = F.when(
-            F.col("lr").isNotNull(),
-            F.expr(f"{_BM25_SCALE} div ({_RRF_K} + lr)"),
-        ).otherwise(F.lit(0)) + F.when(
-            F.col("vr").isNotNull(),
-            F.expr(f"{_BM25_SCALE} div ({_RRF_K} + vr)"),
-        ).otherwise(F.lit(0))
-        return (
-            fused.select(
-                F.coalesce(F.col("doc_id"), F.col("vec_id")).alias("id"),
-                F.coalesce(F.col("lr"), F.lit(0)).cast("bigint").alias(
-                    "lex_rank"
-                ),
-                F.coalesce(F.col("vr"), F.lit(0)).cast("bigint").alias(
-                    "vec_rank"
-                ),
-                rrf.cast("bigint").alias("rrf_fp"),
-            )
-            .orderBy(F.col("rrf_fp").desc(), "id")
-            .limit(_BM25_TOPK)
-            .localCheckpoint()  # must outlive the temp-dir cleanup
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return _index_query(
+        "rrf_indexed_", serve,
+        lambda p: write_postings_index(
+            _documents(spark, sf_dir), os.path.join(p, "lex")
+        ),
+        lambda p: write_ivf_index(emb, os.path.join(p, "ivf")),
+        probe_from=emb,
+    )
 
 
 # --------------------------------------------------------------------------

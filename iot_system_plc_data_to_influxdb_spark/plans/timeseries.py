@@ -2658,8 +2658,8 @@ def b3_influxql_compound(spark, sf_dir):
 # The query MATERIALIZES the compiled rollup into the INTO target
 # (parquet at a deterministic temp location) and returns the rows read
 # back from the target — so the hash check covers the written bytes,
-# not just the plan. compile_into splits the statement exactly as
-# streaming/rollup.py's CQ scheduler does.
+# not just the plan. compile_into splits the statement with the same
+# split_into the gateway's SELECT ... INTO path uses.
 # --------------------------------------------------------------------------
 @register(
     "b3_influxql_into",

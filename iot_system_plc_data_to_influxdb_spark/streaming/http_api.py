@@ -11,7 +11,8 @@ switches storage engines without touching a dashboard or a writer:
   one InfluxQL statement dispatcher — ``IoTEngine.influxql`` calls the
   same method and shares the same continuous-query registry.
   ``epoch=ms|s|u|ns`` is honored; default timestamps are RFC3339,
-  like InfluxDB.
+  like InfluxDB. SELECT ... INTO and CQ results land in
+  ``<write_dir>__<target>`` and read back as measurement ``<target>``.
 - ``/write``: line protocol → parse_line_protocol (the native-
   expression parser) → appended through the points sink's writer
   (streaming/sinks.write_points_batch), so the table keeps one layout;
@@ -151,7 +152,7 @@ class InfluxAPI:
         self._get_table_raw = get_table  # (measurement_name) -> DataFrame
         self.write_dir = write_dir
         # name → CQSpec, registered via CREATE CONTINUOUS QUERY on the
-        # wire; the engine executes specs with streaming/rollup.py
+        # wire; run by run_continuous_queries (and IoTEngine.run_cq)
         self.continuous_queries: dict = {}
         # measurement → (sketch_df_getter, window_every_s): quantile-
         # sketch CQ materializations (streaming/rollup.
@@ -161,12 +162,26 @@ class InfluxAPI:
         # — the B5×B26 read path (see _route_sketch_percentile).
         self.qsketch_tables = qsketch_tables or {}
 
+    def target_dir(self, measurement) -> str:
+        """Where SELECT ... INTO and CQ results for ``measurement``
+        live: ``<write_dir>__<measurement>``."""
+        return f"{self.write_dir}__{measurement}"
+
     def get_table(self, measurement):
-        """Resolve a measurement, normalizing the time column: CQ / INTO
+        """Resolve a measurement: an INTO / CQ target this gateway wrote
+        (``target_dir``) is read back from its directory, anything else
+        goes to the caller's resolver. The time column is normalized:
         targets materialize with a ``time`` column (the compiler's
-        output name) while the compiler's input contract is ``ts`` —
-        a rollup measurement must be queryable like any other."""
-        df = self._get_table_raw(measurement)
+        output name) while the compiler's input contract is ``ts`` — a
+        rollup measurement must be queryable like any other."""
+        if (
+            self.write_dir
+            and measurement
+            and holds_data(self.target_dir(measurement))
+        ):
+            df = self.spark.read.parquet(self.target_dir(measurement))
+        else:
+            df = self._get_table_raw(measurement)
         if "ts" not in df.columns and "time" in df.columns:
             df = df.withColumnRenamed("time", "ts")
         return df
@@ -325,7 +340,7 @@ class InfluxAPI:
             )
         target, res = self._select(stmt, resolve, rollup, rollup_every_s)
         if target is not None and write_dir:
-            res.df.write.mode("append").parquet(f"{write_dir}__{target}")
+            res.df.write.mode("append").parquet(self.target_dir(target))
             return StatementResult(res.df, ack=True)
         return res
 
@@ -461,7 +476,7 @@ class InfluxAPI:
                     (F.col("time") >= F.from_unixtime(F.lit(lo)).cast("timestamp"))
                     & (F.col("time") < F.from_unixtime(F.lit(hi)).cast("timestamp"))
                 )
-            target_path = f"{self.write_dir}__{spec.target}"
+            target_path = self.target_dir(spec.target)
             keys = ["time"] + [
                 tag for tag in q.group_tags if tag in df.columns
             ]

@@ -253,6 +253,54 @@ def test_write_lands_in_the_sink_table(spark, tmp_path):
     assert [r["batch_id"] for r in wire.collect()] == [-1]
 
 
+def test_into_and_cq_targets_read_back(spark, tmp_path):
+    """An INTO target written over serve_influx_api's /query, and a CQ
+    target written by the gateway's CQ tick, land in
+    <table>__<target>; a later /query of the target measurement reads
+    those rows, and the points table still answers for its own name."""
+    from iot_system_plc_data_to_influxdb_spark.api import IoTEngine
+
+    path = str(tmp_path / "points")
+    write_points_batch(
+        _points(spark, [
+            ("2024-01-01T00:00:00", "10.0.0.1", "temp", 1.0),
+            ("2024-01-01T00:30:00", "10.0.0.1", "temp", 3.0),
+            ("2024-01-01T01:00:00", "10.0.0.1", "temp", 5.0),
+        ]),
+        0, path,
+    )
+    server, port = IoTEngine(spark).serve_influx_api(path)
+
+    def query(stmt):
+        url = f"http://127.0.0.1:{port}/query?q={urllib.parse.quote(stmt)}"
+        with urllib.request.urlopen(url, timeout=60) as r:
+            return json.loads(r.read())["results"][0]
+
+    try:
+        query(
+            "SELECT mean(value) AS m INTO roll_1h FROM points GROUP BY time(1h)"
+        )
+        assert os.path.isdir(path + "__roll_1h")
+        got = query("SELECT m FROM roll_1h")
+        assert [v[1:] for v in got["series"][0]["values"]] == [[2.0], [5.0]]
+        got = query("SELECT count(m) FROM roll_1h")
+        assert got["series"][0]["values"][0][-1] == 2
+        got = query("SELECT count(value) FROM points")
+        assert got["series"][0]["values"][0][-1] == 3
+    finally:
+        server.shutdown()
+
+    api = InfluxAPI(spark, lambda _m: spark.read.parquet(path), write_dir=path)
+    api.query(
+        "CREATE CONTINUOUS QUERY cq_hi ON iot BEGIN SELECT max(value) AS hi "
+        "INTO hi_1h FROM points GROUP BY time(1h) END",
+        None,
+    )
+    assert api.run_continuous_queries() == {"cq_hi": 2}
+    got = api.query("SELECT hi FROM hi_1h", None)["results"][0]
+    assert [v[1:] for v in got["series"][0]["values"]] == [[3.0], [5.0]]
+
+
 def test_delete_rewrites_only_the_named_partition(spark, tmp_path):
     """DELETE through the gateway rewrites the one plc_ip= partition it
     names: the other partitions' files stay byte-identical, and a later

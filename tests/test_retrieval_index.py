@@ -47,15 +47,18 @@ def test_indexed_bm25_prunes_to_query_term_buckets(spark, tmp_path):
     # (b) partition pruning: the executed postings scan opens ONLY the
     # tb= directories the query terms hash into (4 terms -> <= 4 of
     # the N_BUCKETS buckets), proven from the files actually read —
-    # on the SAME scan helper bm25_from_index consumes
-    # (bm25_query_buckets + bm25_postings_scan), not a lookalike
+    # on the SAME scan bm25_from_index consumes (bm25_query_buckets +
+    # the shared pruned scan + its term filter), not a lookalike
     from iot_system_plc_data_to_influxdb_spark.operators.retrieval import (
-        bm25_postings_scan,
+        POSTINGS,
         bm25_query_buckets,
+        scan,
     )
 
     query_buckets = set(bm25_query_buckets(spark, TERMS))
-    post = bm25_postings_scan(spark, path, TERMS, sorted(query_buckets))
+    post = scan(spark, path, POSTINGS, sorted(query_buckets)).filter(
+        F.col("term").isin(*TERMS)
+    )
     opened = {
         int(r["f"].split("tb=")[1].split("/")[0])
         for r in post.select(F.input_file_name().alias("f"))
@@ -163,18 +166,19 @@ def test_indexed_ivf_prunes_to_probe_cells(spark, tmp_path):
     # top-k hits land in one cell); scan = the exact helper the serve
     # consumes
     from iot_system_plc_data_to_influxdb_spark.operators.retrieval import (
-        ivf_candidate_scan,
+        CELLS,
         ivf_probe_cells,
+        scan,
     )
 
     probe_df = spark.createDataFrame([(list(probe),)], "pe array<float>")
     expected_cells = ivf_probe_cells(spark, path, probe_df, n_probe_cells=2)
     assert len(expected_cells) == 2
     assert {r["cell"] for r in served.collect()} <= set(expected_cells)
-    scan = ivf_candidate_scan(spark, path, expected_cells)
+    cand = scan(spark, path, CELLS, expected_cells)
     opened = {
         int(r["f"].split("cell=")[1].split("/")[0])
-        for r in scan.select(F.input_file_name().alias("f"))
+        for r in cand.select(F.input_file_name().alias("f"))
         .distinct()
         .collect()
     }
@@ -200,9 +204,10 @@ def test_ivfpq_index_serves_codes_not_vectors(spark, tmp_path):
         pq_train,
     )
     from iot_system_plc_data_to_influxdb_spark.operators.retrieval import (
+        CODES,
         ivf_probe_cells,
-        ivfpq_code_scan,
         knn_ivfpq_from_index,
+        scan,
         write_ivfpq_index,
     )
 
@@ -229,7 +234,7 @@ def test_ivfpq_index_serves_codes_not_vectors(spark, tmp_path):
     expected_cells = ivf_probe_cells(spark, path, probe_df, n_probe_cells=2)
     opened = {
         int(r["f"].split("cell=")[1].split("/")[0])
-        for r in ivfpq_code_scan(spark, path, expected_cells)
+        for r in scan(spark, path, CODES, expected_cells)
         .select(F.input_file_name().alias("f"))
         .distinct()
         .collect()
@@ -466,9 +471,10 @@ def test_postings_compaction_rewrites_only_fragmented_buckets(
     each as ONE term-sorted file, (c) leave every other bucket's files
     byte-identical, and (d) not change the postings row set."""
     from iot_system_plc_data_to_influxdb_spark.operators.retrieval import (
-        compact_postings_index,
+        POSTINGS,
+        compact,
         merge_postings_delta,
-        postings_bucket_files,
+        partition_files,
     )
 
     docs = t(spark, SF_DIR, "documents").select("doc_id", "text")
@@ -485,7 +491,7 @@ def test_postings_compaction_rewrites_only_fragmented_buckets(
 
     frag_before = {
         int(r["tb"]): int(r["n_files"])
-        for r in postings_bucket_files(spark, idx).collect()
+        for r in partition_files(spark, idx, POSTINGS).collect()
     }
     want_compact = sorted(tb for tb, n in frag_before.items() if n > 2)
     assert want_compact  # the tiny delta fragmented its term buckets
@@ -497,7 +503,7 @@ def test_postings_compaction_rewrites_only_fragmented_buckets(
     }
     files_before = _files(os.path.join(idx, "postings"))
 
-    compacted = compact_postings_index(spark, idx, max_files=2)
+    compacted = compact(spark, idx, POSTINGS, max_files=2)
     assert compacted == want_compact
 
     files_after = _files(os.path.join(idx, "postings"))
@@ -524,7 +530,7 @@ def test_postings_compaction_rewrites_only_fragmented_buckets(
     }
     assert rows_after == rows_before
     # idempotent: a second pass finds nothing over the threshold
-    assert compact_postings_index(spark, idx, max_files=2) == []
+    assert compact(spark, idx, POSTINGS, max_files=2) == []
 
 
 def test_ivf_compaction_rewrites_only_fragmented_cells(spark, tmp_path):
@@ -533,9 +539,10 @@ def test_ivf_compaction_rewrites_only_fragmented_cells(spark, tmp_path):
     other cells and the centroid sidecar stay byte-identical, and the
     cell row set is unchanged."""
     from iot_system_plc_data_to_influxdb_spark.operators.retrieval import (
-        compact_ivf_cells,
-        ivf_cell_files,
+        CELLS,
+        compact,
         merge_ivf_delta,
+        partition_files,
         write_ivf_index,
     )
 
@@ -554,7 +561,7 @@ def test_ivf_compaction_rewrites_only_fragmented_cells(spark, tmp_path):
 
     frag_before = {
         int(r["cell"]): int(r["n_files"])
-        for r in ivf_cell_files(spark, idx).collect()
+        for r in partition_files(spark, idx, CELLS).collect()
     }
     want_compact = sorted(c for c, n in frag_before.items() if n > 2)
     assert want_compact and len(want_compact) < len(frag_before)
@@ -570,7 +577,7 @@ def test_ivf_compaction_rewrites_only_fragmented_cells(spark, tmp_path):
         if not f.startswith(("_", "."))
     }
 
-    compacted = compact_ivf_cells(spark, idx, max_files=2)
+    compacted = compact(spark, idx, CELLS, max_files=2)
     assert compacted == want_compact
 
     files_after = _files(os.path.join(idx, "cells"))
@@ -599,7 +606,7 @@ def test_ivf_compaction_rewrites_only_fragmented_cells(spark, tmp_path):
         if not f.startswith(("_", "."))
     }
     assert cent_stat_after == cent_stat  # sidecar untouched
-    assert compact_ivf_cells(spark, idx, max_files=2) == []
+    assert compact(spark, idx, CELLS, max_files=2) == []
 
 
 def test_salted_write_layout(spark, tmp_path, monkeypatch):
@@ -610,9 +617,10 @@ def test_salted_write_layout(spark, tmp_path, monkeypatch):
     sets and the served answers stay IDENTICAL to the default layout
     — the knobs change file layout inside partitions, nothing else."""
     from iot_system_plc_data_to_influxdb_spark.operators.retrieval import (
-        bm25_postings_scan,
+        POSTINGS,
         bm25_query_buckets,
         knn_ivf_from_index,
+        scan,
         write_ivf_index,
     )
 
@@ -675,7 +683,8 @@ def test_salted_write_layout(spark, tmp_path, monkeypatch):
     buckets = bm25_query_buckets(spark, TERMS)
     opened = {
         int(r["f"].split("tb=")[1].split("/")[0])
-        for r in bm25_postings_scan(spark, salt_lex, TERMS, buckets)
+        for r in scan(spark, salt_lex, POSTINGS, buckets)
+        .filter(F.col("term").isin(*TERMS))
         .select(F.input_file_name().alias("f")).distinct().collect()
     }
     assert opened and opened <= set(buckets)

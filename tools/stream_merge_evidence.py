@@ -36,8 +36,10 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from iot_system_plc_data_to_influxdb_spark.catalog import t  # noqa: E402
 from iot_system_plc_data_to_influxdb_spark.operators.retrieval import (  # noqa: E402
+    TERMS,
     bm25_from_index,
     merge_postings_delta,
+    scan,
     write_postings_index,
 )
 from iot_system_plc_data_to_influxdb_spark.plans import northstar  # noqa: E402
@@ -107,11 +109,7 @@ def main() -> int:
             merge_s = time.perf_counter() - t1
             # what the merge's terms branch actually re-read: ONLY the
             # affected buckets' terms rows (partition-pruned)
-            reread = (
-                sp.read.parquet(os.path.join(idx, "terms"))
-                .filter(F.col("tb").isin(affected))
-                .count()
-            )
+            reread = scan(sp, idx, TERMS, affected).count()
             batch_records.append(
                 f"micro-batch {bid}: delta docs = {n_docs}; merge wall "
                 f"= {merge_s:.2f} s; affected buckets = {len(affected)}"
