@@ -2559,11 +2559,13 @@ def _show_base(
 # with the result (exactly how b25 age-off works); on Delta the same
 # predicate would drive a real DELETE.
 # --------------------------------------------------------------------------
+#: a measurement name: double-quoted (any characters but ``"``) or bare
+_MEASUREMENT = r'(?:"[^"]*"|[\w.]+)'
 _DELETE_RE = re.compile(
-    r"^\s*(?:DELETE\s+FROM\s+(?P<from>[\w.\"]+)(?:\s+WHERE\s+(?P<where>.+?))?"
-    r"|DROP\s+SERIES\s+FROM\s+(?P<sfrom>[\w.\"]+)"
+    rf"^\s*(?:DELETE\s+FROM\s+(?P<from>{_MEASUREMENT})(?:\s+WHERE\s+(?P<where>.+?))?"
+    rf"|DROP\s+SERIES\s+FROM\s+(?P<sfrom>{_MEASUREMENT})"
     r"(?:\s+WHERE\s+(?P<swhere>.+?))?"
-    r"|DROP\s+MEASUREMENT\s+(?P<drop>[\w.\"]+))\s*$",
+    rf"|DROP\s+MEASUREMENT\s+(?P<drop>{_MEASUREMENT}))\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 

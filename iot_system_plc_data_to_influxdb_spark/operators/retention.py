@@ -33,6 +33,11 @@ def holds_data(path: str) -> bool:
     )
 
 
+def _parquet_files(names) -> list[str]:
+    """The parquet files among ``names`` that a read of the table lists."""
+    return [f for f in names if f.endswith(".parquet") and not f.startswith(_HIDDEN)]
+
+
 #: test-scale stand-in for SCALE.md's 1024 — the layout is identical,
 #: only the modulus differs
 N_PLC_BUCKETS = 64
@@ -143,7 +148,7 @@ def partition_file_counts(path: str) -> dict[str, int]:
         dirs[:] = sorted(
             d for d in dirs if "=" in d and not d.startswith(_HIDDEN)
         )
-        n = sum(f.endswith(".parquet") for f in files)
+        n = len(_parquet_files(files))
         if n and root != path:
             out[os.path.relpath(root, path)] = n
     return out
@@ -229,14 +234,14 @@ def compact_partition(
     cost drifts to file-open overhead; this is the nightly repair
     (Delta/Iceberg OPTIMIZE) as one ``rewrite_partition``."""
     full = os.path.join(path, partition_rel)
-    files = [f for f in os.listdir(full) if f.endswith(".parquet")]
+    files = _parquet_files(os.listdir(full))
     before = len(files)
     total_bytes = sum(os.path.getsize(os.path.join(full, f)) for f in files)
     n_out = max(1, -(-total_bytes // target_bytes))  # ceil
     if n_out >= before:
         return before, before  # already compact
     rewrite_partition(spark, path, partition_rel, n_files=int(n_out))
-    return before, sum(1 for f in os.listdir(full) if f.endswith(".parquet"))
+    return before, len(_parquet_files(os.listdir(full)))
 
 
 def compact_all(

@@ -30,6 +30,15 @@ def get_spark(app_name: str = "iot-plc-spark-engine") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        # Stream offset and commit logs rename through FileSystem: the
+        # default FileContext manager's link-resolving rename forks a
+        # `readlink` per log file where Hadoop has no native library.
+        # Safe here because this factory only builds local-mode sessions.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

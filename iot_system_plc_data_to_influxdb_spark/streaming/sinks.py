@@ -8,6 +8,22 @@ whole-micro-batch writes instead of per-point requests (the anti-
 pattern SURVEY.md §4 flags). An InfluxDB-line-protocol writer would
 slot into the same hook where the HTTP client is available.
 
+How the points table commits a file: ``write_points_batch`` writes each
+partition's file under a hidden staging name in its ``plc_ip=``
+directory and renames it to its visible ``part-<uuid>.parquet`` name;
+that rename is the whole commit. A reader lists either the complete
+file or nothing of it, and a stop mid-write leaves hidden staging files
+only, which Spark's listing skips (names starting ``.``) and which a
+``*/*.parquet`` glob does not match (they end ``.tmp``).
+
+Why not Spark's file writer for this table: on a host where Hadoop has
+no native library, its local filesystem forks a ``chmod`` for every
+file and directory it creates (each data file, its ``.crc``, every
+``_temporary`` level, each partition directory, ``_SUCCESS``), about 30
+process spawns for an 8-file trigger and most of its wall time; and two
+writers share one ``<table>/_temporary``, whose cleanup by one breaks
+the other's commit.
+
 Pacing (A4/A13): the reference runs one thread per acquisition-interval
 group with sleep pacing (Linux/InfluxConnector2.py:85-94,177-209).
 Acquisition here does not pace by the config's interval: every query
@@ -17,21 +33,73 @@ the reference's unpaced ``'min'`` loop) whatever each tag's interval.
 
 from __future__ import annotations
 
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: the characters Spark writes as ``%XX`` in a partition directory name
+#: (ExternalCatalogUtils.escapePathName)
+_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^")
+)
+
+
+def _partition_dir(plc_ip: str | None) -> str:
+    """The directory name Spark's writer gives ``plc_ip=<value>`` (a
+    null or empty value goes to Hive's default partition)."""
+    if not plc_ip:
+        return "plc_ip=__HIVE_DEFAULT_PARTITION__"
+    return "plc_ip=" + "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in plc_ip)
 
 
 def write_points_batch(batch_df: DataFrame, batch_id: int, table_path: str) -> None:
     """foreachBatch hook: the points table's one writer (the /write
     gateway appends through it too). Appends the micro-batch,
     partitioned by plc_ip (db-per-PLC), each row tagged with batch_id.
-    Not idempotent: a replayed batch appends its rows again."""
-    (
-        batch_df.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("append")
-        .partitionBy("plc_ip")
-        .parquet(table_path)
-    )
+    Not idempotent: a replayed batch appends its rows again.
+
+    The batch is collected once as Arrow (one Spark job, no files), then
+    per plc_ip pyarrow writes one parquet file to a hidden staging name
+    in the partition's directory (Spark's escaped ``plc_ip=`` name) and
+    ``os.replace`` commits it as ``part-<uuid>.parquet``: no
+    ``_temporary``, ``_SUCCESS`` or ``.crc``, and an empty batch writes
+    nothing. A stop mid-write leaves hidden staging files only.
+    Concurrent calls share nothing but ``makedirs``. The files hold
+    what Spark's writer stored: the batch's columns but plc_ip, then
+    ``batch_id int``, all nullable, and ``ts`` as INT96, so a partition
+    compacted by Spark's writer and one written here read back with one
+    ts type in DuckDB too.
+
+    Driving the write from the driver adds no memory or filesystem
+    assumption: the driver already holds the whole micro-batch (the
+    simple stream reader prefetches every row in the driver's Python
+    process, and /write bodies arrive there), and the table is already
+    local-only (retention swaps its partitions with ``os.rename``)."""
+    rows = batch_df.withColumn("batch_id", F.lit(batch_id)).toArrow()
+    rows = rows.cast(pa.schema([f.with_nullable(True) for f in rows.schema]))
+    keys = rows.column("plc_ip")
+    data = rows.drop_columns(["plc_ip"])
+    parts: dict[str, list] = {}
+    for ip in keys.unique().to_pylist():  # null and "" share a directory
+        parts.setdefault(_partition_dir(ip), []).append(ip)
+    for name, ips in parts.items():
+        part = os.path.join(table_path, name)
+        os.makedirs(part, exist_ok=True)
+        final = f"part-{uuid.uuid4()}.snappy.parquet"
+        staging = os.path.join(part, f".{final}.tmp")
+        mask = pc.is_in(keys, value_set=pa.array(ips, keys.type), skip_nulls=False)
+        pq.write_table(
+            data.filter(mask),
+            staging,
+            use_deprecated_int96_timestamps=True,
+            store_schema=False,
+        )
+        os.replace(staging, os.path.join(part, final))
 
 
 def _start_append(

@@ -357,6 +357,94 @@ def test_delete_rewrites_only_the_named_partition(spark, tmp_path):
     assert _files(other) == untouched
 
 
+#: plc_ip value → the directory Spark's own partitioned writer gave it
+SPARK_PARTITION_DIRS = {
+    "10.0.0.1": "plc_ip=10.0.0.1",
+    "a:b": "plc_ip=a%3Ab",
+    "k=v": "plc_ip=k%3Dv",
+    "50%": "plc_ip=50%25",
+    "x/y": "plc_ip=x%2Fy",
+    "#1": "plc_ip=%231",
+    "": "plc_ip=__HIVE_DEFAULT_PARTITION__",
+    None: "plc_ip=__HIVE_DEFAULT_PARTITION__",
+}
+
+
+def test_sink_layout_matches_the_spark_writer(spark, tmp_path):
+    """The points sink names partition directories as Spark's writer
+    does and leaves no _temporary, _SUCCESS, .crc or staging file. Once
+    ``compact_partition`` (Spark's writer) has rewritten one partition,
+    so the table mixes both writers, Spark and DuckDB's ``*/*.parquet``
+    twin read it back alike (DuckDB returns directory values as they
+    are, so they are unescaped here as Spark does). A gateway DELETE of
+    one such measurement rewrites its partition only."""
+    import duckdb
+
+    from iot_system_plc_data_to_influxdb_spark.operators.retention import (
+        compact_partition,
+    )
+
+    path = str(tmp_path / "points")
+    for bid in range(2):
+        write_points_batch(
+            _points(
+                spark,
+                [
+                    (f"2024-01-01T0{bid}:00:00", ip, "t", float(10 * bid + i))
+                    for i, ip in enumerate(SPARK_PARTITION_DIRS)
+                ],
+            ),
+            bid,
+            path,
+        )
+    assert sorted(os.listdir(path)) == sorted(set(SPARK_PARTITION_DIRS.values()))
+    for d in os.listdir(path):
+        names = os.listdir(os.path.join(path, d))
+        assert len(names) == 2  # one file per batch
+        assert all(n.startswith("part-") and n.endswith(".parquet") for n in names)
+
+    assert compact_partition(spark, path, "plc_ip=a%3Ab") == (2, 1)
+
+    def unescape(v):
+        return None if v == "__HIVE_DEFAULT_PARTITION__" else urllib.parse.unquote(v)
+
+    def key(r):
+        return (r[0] or "", r[1:])
+
+    via_spark = sorted(
+        (
+            tuple(r)
+            for r in spark.read.parquet(path)
+            .select("plc_ip", "alias", F.unix_millis("ts"), "value", "batch_id")
+            .collect()
+        ),
+        key=key,
+    )
+    via_duckdb = sorted(
+        (
+            (unescape(r[0]),) + r[1:]
+            for r in duckdb.sql(
+                "SELECT plc_ip, alias, epoch_ms(ts), value, batch_id FROM "
+                f"read_parquet('{path}/*/*.parquet', hive_partitioning = true)"
+            ).fetchall()
+        ),
+        key=key,
+    )
+    assert via_spark == via_duckdb
+    assert len(via_spark) == 16
+    assert {r[0] for r in via_spark} == set(SPARK_PARTITION_DIRS) - {""}
+
+    others = {
+        d: _files(os.path.join(path, d)) for d in os.listdir(path) if d != "plc_ip=k%3Dv"
+    }
+    api = InfluxAPI(spark, lambda _m: spark.read.parquet(path), write_dir=path)
+    res = api.query("DELETE FROM \"k=v\" WHERE time < '2024-01-01T01:00:00'", None)
+    assert res["results"][0] == {"statement_id": 0}
+    assert {d: _files(os.path.join(path, d)) for d in others} == others
+    kept = spark.read.parquet(path).filter(F.col("plc_ip") == "k=v").collect()
+    assert [(r["value"], r["batch_id"]) for r in kept] == [(12.0, 1)]
+
+
 def test_epoch_us_exact(gateway):
     """epoch=u timestamps are exact integer microseconds (float64
     epoch arithmetic can be off by 1µs)."""

@@ -208,6 +208,95 @@ def test_compaction_covers_the_sink_layout(spark, tmp_path):
     assert sorted(spark.read.parquet(base).collect()) == rows
 
 
+def test_hidden_parquet_files_are_not_counted(spark, tmp_path):
+    """A hidden ``.x.parquet`` (say a staging file an interrupted write
+    left) is not part of the table, since Spark's listing skips it:
+    neither the file count nor compaction counts it."""
+    import shutil
+
+    from iot_system_plc_data_to_influxdb_spark.operators.retention import (
+        compact_all,
+        compact_partition,
+        partition_file_counts,
+    )
+    from iot_system_plc_data_to_influxdb_spark.streaming.sinks import (
+        write_points_batch,
+    )
+
+    base = str(tmp_path / "pts")
+    pts = spark.createDataFrame(
+        [(f"10.0.0.{i % 2}", "t", float(i), f"2024-01-01T00:00:{i:02d}") for i in range(6)],
+        "plc_ip string, alias string, value double, ts_s string",
+    ).select(F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value")
+    write_points_batch(pts, 0, base)
+    part = os.path.join(base, "plc_ip=10.0.0.1")
+    live = next(f for f in os.listdir(part) if f.startswith("part-"))
+    shutil.copy(os.path.join(part, live), os.path.join(part, ".x.parquet"))
+
+    assert partition_file_counts(base) == {"plc_ip=10.0.0.0": 1, "plc_ip=10.0.0.1": 1}
+    assert compact_all(spark, base) == {}
+    assert compact_partition(spark, base, "plc_ip=10.0.0.1") == (1, 1)
+    assert spark.read.parquet(base).count() == 6
+
+
+def test_sink_concurrent_writers_land_every_row_once(spark, tmp_path):
+    """Two threads each append 30 batches to one table, as a /write
+    racing acquisition does: no call raises and every row lands
+    exactly once (Spark's writer shared ``<table>/_temporary`` between
+    them, and one writer's cleanup could fail the other's commit)."""
+    import sys
+    import threading
+
+    from iot_system_plc_data_to_influxdb_spark.streaming.sinks import (
+        write_points_batch,
+    )
+
+    base = str(tmp_path / "pts")
+    rounds = 30
+    batches = {
+        (w, k): spark.createDataFrame(
+            [
+                (f"10.0.0.{i}", "t", float(w * 1000 + k * 10 + i), "2024-01-01")
+                for i in range(2)
+            ],
+            "plc_ip string, alias string, value double, ts_s string",
+        ).select(F.col("ts_s").cast("timestamp").alias("ts"), "plc_ip", "alias", "value")
+        for w in range(2)
+        for k in range(rounds)
+    }
+    errors = []
+
+    def writer(w):
+        for k in range(rounds):
+            try:
+                write_points_batch(batches[w, k], w * 100 + k, base)
+            except Exception as e:  # noqa: BLE001 - every failure is reported
+                errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in range(2)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    got = sorted(
+        (r["value"], r["batch_id"], r["plc_ip"])
+        for r in spark.read.parquet(base).collect()
+    )
+    assert got == sorted(
+        (float(w * 1000 + k * 10 + i), w * 100 + k, f"10.0.0.{i}")
+        for w in range(2)
+        for k in range(rounds)
+        for i in range(2)
+    )
+
+
 def test_compaction_crash_recovery(spark, tmp_path):
     """Every crash window of the partition-rewrite swap is recoverable:
     orphan tmp, missing live dir, completed-swap leftovers."""

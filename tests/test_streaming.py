@@ -77,6 +77,33 @@ def test_plc_source_ts_is_the_poll_instant(spark):
     assert got == {(0, 1704067200), (1, 1704067201)}
 
 
+def test_points_sink_stores_the_poll_instant(spark, tmp_path):
+    """The points sink converts ts through Arrow itself: the stored ts
+    is the poll's UTC instant, read through Spark and straight off the
+    parquet files (the host-zone check runs this under TZ=Asia/Tokyo)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from iot_system_plc_data_to_influxdb_spark.streaming.sinks import (
+        write_points_batch,
+    )
+
+    plc_src.register(spark)
+    path = str(tmp_path / "points")
+    raw = spark.read.format("plc_sim").option("polls", "2").load()
+    write_points_batch(decode_readings(raw), 0, path)
+    want = {1704067200, 1704067201}
+    stored = spark.read.parquet(path).select(F.col("ts").cast("long"))
+    assert {r[0] for r in stored.collect()} == want
+    in_files = {
+        ns // 10**9
+        for f in glob.glob(os.path.join(path, "*", "*.parquet"))
+        for ns in pq.ParquetFile(f).read().column("ts").cast("int64").to_pylist()
+    }
+    assert in_files == want
+
+
 def test_plc_source_stream_microbatches(spark):
     plc_src.register(spark)
     raw = spark.readStream.format("plc_sim").option("pollsPerBatch", "2").load()

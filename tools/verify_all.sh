@@ -6,8 +6,9 @@ cd "$(dirname "$0")/.."
 echo "=== 1/9 unit + streaming tests (pytest) ==="
 python -m pytest tests/ -q
 
-echo "=== 2/9 PLC source under a non-UTC host zone (Python workers inherit TZ) ==="
-TZ=Asia/Tokyo python -m pytest tests/test_snap7.py tests/test_streaming.py -q -k "plc or snap7 or poller or read_plan"
+echo "=== 2/9 PLC source and points sink under a non-UTC host zone (Python workers inherit TZ) ==="
+TZ=Asia/Tokyo python -m pytest tests/test_snap7.py tests/test_streaming.py tests/test_points_layout.py -q \
+  -k "plc or snap7 or poller or read_plan or sink"
 
 echo "=== 3/9 benchmark self-tests (perfbench) ==="
 python -m pytest perfbench/tests -q
